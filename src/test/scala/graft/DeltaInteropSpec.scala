@@ -304,6 +304,61 @@ class DeltaInteropSpec extends AnyFunSuite {
     val st2 = DeltaInterop.state(spark, dir)
     assert(DeltaInterop.filesInRange(st2, "id", 100, 120).length == hit.length)
     assert(DeltaInterop.readDeltaRange(spark, dir, "id", 100, 120).count() == 21)
+
+    // decimal, DATE and TIMESTAMP columns: bounds are written in the
+    // Delta stats encoding (PROTOCOL.md "Per-file Statistics"), never
+    // as raw parquet physical values — a decimal's unscaled integer or
+    // a date's epoch day would prune files that hold matching rows
+    val amounts = Seq("0.05", "1.25", "3.10", "4.99", "5.00", "5.50",
+      "5.99", "6.00", "6.01", "7.75", "9.40", "12.00").map(BigDecimal(_))
+    val typed = amounts.zipWithIndex.map { case (a, i) =>
+      (i.toLong, a, java.time.LocalDate.of(2024, 1, 1).plusDays(i * 10L).toString,
+        1704067200000000L + i * 3600000000L + 123456L)
+    }.toDF("id", "amt", "d", "micros")
+      .withColumn("amt", col("amt").cast("decimal(10,2)"))
+      .withColumn("d", to_date(col("d")))
+      .withColumn("ts", timestamp_micros(col("micros"))).drop("micros")
+      .repartitionByRange(3, col("amt"))
+    val tdir = Files.createTempDirectory("graft-delta-skip-typed").toString
+    DeltaInterop.writeDelta(typed, tdir, Nil)
+    val tst = DeltaInterop.state(spark, tdir)
+    assert(tst.files.length == 3)
+    val iso = java.time.format.DateTimeFormatter
+      .ofPattern("yyyy-MM-dd'T'HH:mm:ss.SSSXXX").withZone(java.time.ZoneOffset.UTC)
+    val json = new com.fasterxml.jackson.databind.ObjectMapper()
+    def micros(t: java.sql.Timestamp): Long = {
+      val i = t.toInstant
+      i.getEpochSecond * 1000000L + i.getNano / 1000L
+    }
+    tst.files.foreach { a =>
+      val rows = spark.read.parquet(s"$tdir/${a.path}").collect()
+      val amts = rows.map(r => BigDecimal(r.getDecimal(1)))
+      val days = rows.map(_.getDate(2).toLocalDate)
+      val ts = rows.map(r => micros(r.getTimestamp(3)))
+      val n = json.readTree(a.stats)
+      val (mn, mx) = (n.path("minValues"), n.path("maxValues"))
+      assert(mn.path("amt").isNumber && mx.path("amt").isNumber, a.stats)
+      assert(BigDecimal(mn.path("amt").decimalValue) == amts.min, a.stats)
+      assert(BigDecimal(mx.path("amt").decimalValue) == amts.max, a.stats)
+      // both bounds keep the column's scale in the JSON text ("5.50")
+      assert("\"amt\":-?\\d+\\.\\d{2}[,}]".r.findAllIn(a.stats).size == 2, a.stats)
+      assert(mn.path("d").asText == days.minBy(_.toEpochDay).toString, a.stats)
+      assert(mx.path("d").asText == days.maxBy(_.toEpochDay).toString, a.stats)
+      // millisecond precision: the min floors, the max ceils, so the
+      // recorded range still covers every row's microseconds
+      assert(mn.path("ts").asText ==
+        iso.format(java.time.Instant.ofEpochMilli(Math.floorDiv(ts.min, 1000L))), a.stats)
+      assert(mx.path("ts").asText ==
+        iso.format(java.time.Instant.ofEpochMilli(-Math.floorDiv(-ts.max, 1000L))), a.stats)
+    }
+    val want = typed.collect().filter { r =>
+      val x = BigDecimal(r.getDecimal(1)); x >= 5 && x <= 6
+    }.map(_.getLong(0)).sorted.toSeq
+    assert(want.length == 4)
+    assert(DeltaInterop.prunedFiles(tst, ranges = Map("amt" -> ((5.0, 6.0)))).length <
+      tst.files.length, "decimal bounds must still prune")
+    assert(DeltaInterop.readDeltaWhere(spark, tdir, ranges = Map("amt" -> ((5.0, 6.0))))
+      .collect().map(_.getLong(0)).sorted.toSeq == want)
   }
 
   test("prunedFiles: log-side partition pruning composes with range skipping") {
