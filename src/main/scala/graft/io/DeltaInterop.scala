@@ -1,6 +1,7 @@
 package graft.io
 
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
+import graft.pipeline.Par
 import org.apache.hadoop.fs.{FileSystem, FileUtil, Path}
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
@@ -1926,13 +1927,12 @@ object DeltaInterop {
     val schema = spark.read.option("basePath", dir).parquet(dir).schema
     require(inferredPartCols.forall(schema.fieldNames.contains),
       s"partition column(s) ${inferredPartCols.mkString(",")} not in inferred schema")
-    val adds = parMap(all) { case (rel, size) =>
+    val adds = Par.map(all) { case (rel, size) =>
       val pv = segParts(rel).toMap
       require(inferredPartCols.forall(pv.contains),
         s"file $rel lacks partition value(s) for ${inferredPartCols.mkString(",")}")
-      val (rows, stats) = footerStats(spark, new Path(dir, rel))
-      AddFile(rel, inferredPartCols.map(c => c -> pv(c)).toMap, size, rows,
-        Map.empty, stats)
+      footerAdd(spark, new Path(dir, rel), rel,
+        inferredPartCols.map(c => c -> pv(c)).toMap, size)
     }
     commit(spark, dir, 0L,
       Seq(protocolJson(), metaDataJson(schema, inferredPartCols)) ++
@@ -1968,7 +1968,7 @@ object DeltaInterop {
       metadata = org.apache.spark.sql.types.Metadata.empty)))
     val f = fs(spark, dir)
     val rootAbs = f.makeQualified(new Path(dir)).toString
-    val adds = parMap(paths) { p0 =>
+    val adds = Par.map(paths) { p0 =>
       val abs = f.makeQualified(new Path(p0)).toString
       val rel = if (abs.startsWith(rootAbs + "/"))
         abs.stripPrefix(rootAbs + "/") else abs
@@ -1986,8 +1986,7 @@ object DeltaInterop {
         s"cannot convert $dir: column rename(s) in the Iceberg history " +
         s"(${renamed.mkString(", ")}) — name-addressed Delta reads would " +
         "silently null the column; rewrite the table first")
-      val (rows, stats) = footerStats(spark, fp)
-      AddFile(rel, Map.empty, f.getFileStatus(fp).getLen, rows, Map.empty, stats)
+      footerAdd(spark, fp, rel, Map.empty, f.getFileStatus(fp).getLen)
     }
     commit(spark, dir, 0L,
       Seq(protocolJson(), metaDataJson(schema, Nil)) ++ adds.map(addJson(_)),
@@ -2208,10 +2207,8 @@ object DeltaInterop {
       }
       strip(staging)
     }
-    val staged = parMap(moveStaged(f, staging, new Path(dir), partCols)) {
-      case (rel, pv, size) =>
-        val (rows, stats) = footerStats(spark, new Path(dir, rel))
-        AddFile(rel, pv, size, rows, Map.empty, stats)
+    val staged = Par.map(moveStaged(f, staging, new Path(dir), partCols)) {
+      case (rel, pv, size) => footerAdd(spark, new Path(dir, rel), rel, pv, size)
     }
     // never commit a ZERO-record add (an empty scan/shuffle partition's
     // file): it bloats the log, and on row-tracked tables it would
@@ -2220,32 +2217,6 @@ object DeltaInterop {
     val (empty, kept) = staged.partition(_.numRecords == 0)
     empty.foreach(a => f.delete(new Path(dir, a.path), false))
     kept
-  }
-
-  /** Driver-side parallel map for per-file METADATA work (parquet
-    * footer reads after a staged write) — the files are independent and
-    * each read is a few ms of IO, so a sequential loop is pure fixed
-    * cost per commit (a 40-file partitioned write paid 40 round trips).
-    * Bounded pool; exceptions propagate (and on failure the pool is
-    * `shutdownNow`n so queued work stops instead of running on in the
-    * background after the caller has already seen the error). */
-  private def parMap[A, B](xs: Seq[A], par: Int = 16)(fn: A => B): Seq[B] = {
-    if (xs.lengthCompare(2) < 0) return xs.map(fn)
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(math.min(par, xs.length))
-    val futures = xs.map(x => pool.submit(new java.util.concurrent.Callable[B] {
-      def call(): B = fn(x)
-    }))
-    var failed = true
-    try {
-      val out = futures.map(fu =>
-        try fu.get()
-        catch { case e: java.util.concurrent.ExecutionException => throw e.getCause })
-      failed = false
-      out
-    } finally {
-      if (failed) { futures.foreach(_.cancel(false)); pool.shutdownNow() }
-      else pool.shutdown()
-    }
   }
 
   /** Rename `df`'s columns to the table's PHYSICAL names (and cast
@@ -2533,9 +2504,8 @@ object DeltaInterop {
             f.mkdirs(dst.getParent)
             FileUtil.copy(srcFs, st.getPath, f, dst, false, spark.sparkContext.hadoopConfiguration)
             copied += 1
-            val (rows, stats) = footerStats(spark, dst)
-            actions += addJson(AddFile(rel, Map(partCol -> key), st.getLen,
-              rows, Map("graftSrc" -> srcDir), stats))
+            actions += addJson(footerAdd(spark, dst, rel, Map(partCol -> key),
+              st.getLen, Map("graftSrc" -> srcDir)))
           }
       }
     }
@@ -2740,9 +2710,8 @@ object DeltaInterop {
       }
     f.delete(staging, true)
     val actions = scala.collection.mutable.ArrayBuffer.empty[String]
-    val newAdds0 = parMap(moved.toSeq) { case (rel, pv, size) =>
-      val (rows, stats) = footerStats(spark, new Path(dir, rel))
-      AddFile(rel, pv, size, rows, Map.empty, stats)
+    val newAdds0 = Par.map(moved.toSeq) { case (rel, pv, size) =>
+      footerAdd(spark, new Path(dir, rel), rel, pv, size)
     }
     // rt: compacted adds take FRESH base ids like any new file — the
     // PRESERVED ids ride the materialized columns, which readers
@@ -2824,7 +2793,7 @@ object DeltaInterop {
     * sorted by the interleaved-bit Morton key of `zCols`, committed as
     * a dataChange=false swap. Each output file then covers a contiguous
     * z-range — a small axis-aligned box in value space — so the
-    * per-file min/max stats ([[footerStats]]) become tight on EVERY
+    * per-file min/max stats ([[footerAdd]]) become tight on EVERY
     * z-ordered dimension at once, and [[prunedFiles]] range predicates
     * on any of them skip whole files. This is the multi-column
     * data-skipping layout: a 100 TB table filtered on two dims reads
@@ -3343,62 +3312,58 @@ object DeltaInterop {
     out.toSeq
   }
 
-  /** numRecords from the parquet footer — a metadata-only read. */
-  private def footerRecords(spark: SparkSession, p: Path): Long = {
-    val in = HadoopInputFile.fromPath(p, spark.sparkContext.hadoopConfiguration)
-    val r = ParquetFileReader.open(in)
-    try r.getRecordCount finally r.close()
+  /** An add action for one data file, with numRecords and min/max
+    * from its parquet footer ([[FooterStats]]) — the log-level
+    * data-skipping index ([[prunedFiles]]). Bounds follow the Delta
+    * stats encoding (PROTOCOL.md "Per-file Statistics"): numbers as
+    * JSON numbers (decimals exact), dates as `yyyy-MM-dd`, timestamps
+    * as ISO-8601 at millisecond precision with the min floored and the
+    * max ceiled so the range still covers every microsecond. Strings
+    * get no bound (a truncated bound could prune a matching file), nor
+    * does any column whose footer bounds are not exact. */
+  private def footerAdd(spark: SparkSession, file: Path, rel: String,
+                        partitionValues: Map[String, String], size: Long,
+                        tags: Map[String, String] = Map.empty): AddFile = {
+    val fs = FooterStats.read(spark.sparkContext.hadoopConfiguration, file)
+    val n = M.createObjectNode()
+    n.put("numRecords", fs.records)
+    val mins = n.putObject("minValues")
+    val maxs = n.putObject("maxValues")
+    for {
+      FooterStats.Column(name, _, FooterStats.Exact(lo, hi)) <- fs.columns
+      l <- statsValue(lo, ceil = false)
+      h <- statsValue(hi, ceil = true)
+    } { mins.set[JsonNode](name, l); maxs.set[JsonNode](name, h) }
+    AddFile(rel, partitionValues, size, fs.records, tags, M.writeValueAsString(n))
   }
 
-  /** Delta stats blob from the parquet footer: numRecords plus min/max
-    * for top-level NUMERIC columns — the log-level data-skipping index
-    * ([[filesInRange]]). Strings are deliberately skipped: writers may
-    * truncate binary min/max, and a truncated bound could prune a file
-    * that matches. Metadata-only read. */
-  private def footerStats(spark: SparkSession, p: Path): (Long, String) = {
-    import org.apache.parquet.column.statistics._
-    import scala.jdk.CollectionConverters._
-    val in = HadoopInputFile.fromPath(p, spark.sparkContext.hadoopConfiguration)
-    val r = ParquetFileReader.open(in)
-    try {
-      val rows = r.getRecordCount
-      val minL = scala.collection.mutable.LinkedHashMap.empty[String, Either[Long, Double]]
-      val maxL = scala.collection.mutable.LinkedHashMap.empty[String, Either[Long, Double]]
-      def fold(name: String, mn: Either[Long, Double], mx: Either[Long, Double]): Unit = {
-        def lt(a: Either[Long, Double], b: Either[Long, Double]): Boolean = (a, b) match {
-          case (Left(x), Left(y))   => x < y
-          case (Right(x), Right(y)) => x < y
-          case _                    => false // type mismatch across blocks: impossible per schema
-        }
-        minL(name) = minL.get(name).map(c => if (lt(mn, c)) mn else c).getOrElse(mn)
-        maxL(name) = maxL.get(name).map(c => if (lt(c, mx)) mx else c).getOrElse(mx)
-      }
-      r.getFooter.getBlocks.asScala.foreach { b =>
-        b.getColumns.asScala.foreach { c =>
-          val parts = c.getPath.toArray
-          if (parts.length == 1) {
-            c.getStatistics match {
-              case s: IntStatistics if s.hasNonNullValue =>
-                fold(parts(0), Left(s.getMin.toLong), Left(s.getMax.toLong))
-              case s: LongStatistics if s.hasNonNullValue =>
-                fold(parts(0), Left(s.getMin), Left(s.getMax))
-              case s: FloatStatistics if s.hasNonNullValue =>
-                fold(parts(0), Right(s.getMin.toDouble), Right(s.getMax.toDouble))
-              case s: DoubleStatistics if s.hasNonNullValue =>
-                fold(parts(0), Right(s.getMin), Right(s.getMax))
-              case _ => () // strings/booleans/nested: no skipping stats
-            }
-          }
-        }
-      }
-      val n = M.createObjectNode()
-      n.put("numRecords", rows)
-      val mins = n.putObject("minValues")
-      val maxs = n.putObject("maxValues")
-      minL.foreach { case (k, v) => v.fold(mins.put(k, _), mins.put(k, _)) }
-      maxL.foreach { case (k, v) => v.fold(maxs.put(k, _), maxs.put(k, _)) }
-      (rows, M.writeValueAsString(n))
-    } finally r.close()
+  private val StatsTimestamp = java.time.format.DateTimeFormatter
+    .ofPattern("yyyy-MM-dd'T'HH:mm:ss.SSSXXX").withZone(java.time.ZoneOffset.UTC)
+  private val StatsTimestampNtz = java.time.format.DateTimeFormatter
+    .ofPattern("yyyy-MM-dd'T'HH:mm:ss.SSS").withZone(java.time.ZoneOffset.UTC)
+
+  /** One [[FooterStats]] bound in the Delta stats encoding; None for
+    * strings and anything else Delta stats do not carry here. */
+  private def statsValue(v: Any, ceil: Boolean): Option[JsonNode] = {
+    val nf = M.getNodeFactory
+    def millis(i: java.time.Instant): java.time.Instant = java.time.Instant.ofEpochMilli(
+      i.getEpochSecond * 1000L + i.getNano / 1000000 +
+        (if (ceil && i.getNano % 1000000 != 0) 1 else 0))
+    v match {
+      case x: Byte => Some(nf.numberNode(x.toLong))
+      case x: Short => Some(nf.numberNode(x.toLong))
+      case x: Int => Some(nf.numberNode(x.toLong))
+      case x: Long => Some(nf.numberNode(x))
+      case x: Float => Some(nf.numberNode(x.toDouble))
+      case x: Double => Some(nf.numberNode(x))
+      case x: java.math.BigDecimal =>
+        Some(com.fasterxml.jackson.databind.node.DecimalNode.valueOf(x))
+      case x: java.time.LocalDate => Some(nf.textNode(x.toString))
+      case x: java.time.Instant => Some(nf.textNode(StatsTimestamp.format(millis(x))))
+      case x: java.time.LocalDateTime => Some(nf.textNode(
+        StatsTimestampNtz.format(millis(x.toInstant(java.time.ZoneOffset.UTC)))))
+      case _ => None
+    }
   }
 
   /** Live files possibly intersecting `[lo, hi]` on `colName`, judged
@@ -4230,7 +4195,7 @@ object DeltaInterop {
     var perFile: Array[(String, String, Long, Long)] = Array.empty
     var cdcs: Seq[AddFile] = Nil
     if (withCdf)
-      graft.pipeline.Par.foreach(Seq(true, false), 2) {
+      Par.foreach(Seq(true, false), 2) {
         case true =>
           perFile = dvDescriptorsFromHits(spark, dir, candidates, hits).collect()
         case false =>
@@ -4313,7 +4278,7 @@ object DeltaInterop {
     // fresh-row-id case; the DV'd originals keep their ids via copy.
     var perFile: Array[(String, String, Long, Long)] = Array.empty
     var staged: Seq[AddFile] = Nil
-    graft.pipeline.Par.foreach(Seq(true, false), 2) {
+    Par.foreach(Seq(true, false), 2) {
       case true =>
         perFile = dvDescriptorsFromHits(spark, dir, candidates, hits).collect()
       case false =>

@@ -177,6 +177,8 @@ private[graft] object IcebergFormat {
       case (DoubleType, x: Double) => Some(le(8).putDouble(x).array())
       case (DateType, x: java.sql.Date) =>
         Some(le(4).putInt(x.toLocalDate.toEpochDay.toInt).array())
+      case (DateType, x: java.time.LocalDate) =>
+        Some(le(4).putInt(x.toEpochDay.toInt).array())
       case (TimestampType, x: java.sql.Timestamp) =>
         val i = x.toInstant
         Some(le(8).putLong(i.getEpochSecond * 1000000L + i.getNano / 1000L).array())

@@ -296,25 +296,6 @@ object IcebergWrite {
           IcebergFormat.LastUpdatedSeqFieldId.toInt)
       .filter { case (c, _) => df.columns.contains(c) }.toMap
 
-  /** Per-file row counts straight from the parquet FOOTERS — zero
-    * Spark jobs. A staged file was just written by this driver, so a
-    * footer read is local metadata I/O; every count-only read-back in
-    * the commit funnel goes through here (the min/max-bound sites
-    * still run the one grouped [[allFileStats]] job — footer string
-    * stats may be truncated, bounds must be exact). Files with zero
-    * rows are OMITTED, mirroring the grouped-aggregation shape. */
-  private def footerRowCounts(spark: SparkSession,
-                              paths: Seq[String]): Map[String, Long] = {
-    import org.apache.parquet.hadoop.ParquetFileReader
-    import org.apache.parquet.hadoop.util.HadoopInputFile
-    val conf = spark.sparkContext.hadoopConfiguration
-    paths.flatMap { p =>
-      val r = ParquetFileReader.open(HadoopInputFile.fromPath(new Path(p), conf))
-      val n = try r.getRecordCount finally r.close()
-      if (n > 0) Some(canonPath(p) -> n) else None
-    }.toMap
-  }
-
   /** Per-file (record count, bound bytes) — FOOTER-FIRST: the staged
     * parquet was just written by this driver, so its footers hold the
     * exact column-chunk statistics the grouped aggregation would
@@ -324,7 +305,7 @@ object IcebergWrite {
     * update / merge / compact in the engine (guide §1.2: remove
     * passes). Falls back to the one grouped aggregation job whenever
     * any footer stat is not PROVABLY identical to what the job would
-    * compute ([[footerFileStats]] documents the exactness rules). */
+    * compute ([[FooterStats]] documents the exactness rules). */
   private def allFileStats(spark: SparkSession, paths: Seq[String],
       idsByName: Map[String, Int]): Map[String, (Long, Map[Int, (Array[Byte], Array[Byte])])] =
     (if (disableFooterStats) None else footerFileStats(spark, paths, idsByName)) match {
@@ -334,182 +315,50 @@ object IcebergWrite {
         allFileStatsJob(spark, paths, idsByName)
     }
 
-  /** [[allFileStats]] from the parquet footers alone, or None when any
-    * column chunk lacks stats this path can prove exact:
-    *   - INT32 / INT64 / FLOAT / DOUBLE / DATE / TIMESTAMP(micros)
-    *     chunk stats are the exact min/max parquet-mr computed while
-    *     this driver wrote the rows (same values the Spark min/max
-    *     aggregation would return — for floats both sides order by
-    *     `Double.compare`); INT96 timestamps have no usable stats and
-    *     fall back.
-    *   - BINARY(STRING) bounds are exact for ANY content: Spark's
-    *     min/max orders by UTF8String.compareTo, which under the
-    *     default UTF8_BINARY collation is unsigned byte order over the
-    *     UTF-8 encoding — exactly parquet's BinaryStatistics
-    *     comparator, so both sides pick the same winner byte for byte
-    *     (spec-pinned with a fixture where UTF-16 and UTF-8 orders
-    *     disagree). The [[IcebergFormat.serializeBound]] 32-byte
-    *     cutoff applies after, exactly as on the job path (truncated
-    *     footer stats are > 32 bytes, so a kept bound is always the
-    *     exact full value).
-    *   - all-null chunks contribute no bound (the job's min = null);
-    *     zero-row files are omitted (the grouped-agg shape).
-    * Any other shape — missing stats, non-ASCII strings, NaN bounds,
-    * unexpected physical/logical type — returns None and the job runs. */
+  /** [[allFileStats]] from [[FooterStats]] alone, or None when some
+    * column the job would bound ([[jobBounds]], or a type the footer
+    * reader does not know) lacks provably exact footer bounds. Exact
+    * bounds go through the job's own [[IcebergFormat.serializeBound]]
+    * (strings over 32 bytes drop on both paths); all-null columns and
+    * types the job never bounds get no bound; zero-row files are
+    * omitted (the grouped-agg shape). */
   private def footerFileStats(spark: SparkSession, paths: Seq[String],
       idsByName: Map[String, Int])
       : Option[Map[String, (Long, Map[Int, (Array[Byte], Array[Byte])])]] = {
-    import org.apache.parquet.hadoop.ParquetFileReader
-    import org.apache.parquet.hadoop.util.HadoopInputFile
-    import org.apache.parquet.schema.LogicalTypeAnnotation
-    import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
-    import java.nio.{ByteBuffer, ByteOrder}
-    import scala.jdk.CollectionConverters._
     val conf = spark.sparkContext.hadoopConfiguration
-    def le(n: Int): ByteBuffer = ByteBuffer.allocate(n).order(ByteOrder.LITTLE_ENDIAN)
     // footer reads are independent I/O — overlap them on a bounded
     // pool (a 120-tuple partitioned commit stages 120 files)
     val perFile = graft.pipeline.Par.map(paths) { p =>
-      footerStatsOfFile(p, conf, idsByName, le)
+      val fs = FooterStats.read(conf, new Path(p))
+      val cols = fs.columns.filter(c => idsByName.contains(c.name))
+      if (fs.records == 0) Some(None)
+      else if (cols.exists(c => c.dataType.forall(jobBounds) &&
+                                c.bounds == FooterStats.Inexact)) None
+      else Some(Some(canonPath(p) -> ((fs.records, cols.flatMap { c =>
+        (c.dataType, c.bounds) match {
+          case (Some(dt), FooterStats.Exact(lo, hi)) if jobBounds(dt) =>
+            for {
+              l <- IcebergFormat.serializeBound(dt, lo)
+              h <- IcebergFormat.serializeBound(dt, hi)
+            } yield idsByName(c.name) -> ((l, h))
+          case _ => None
+        }
+      }.toMap))))
     }
     if (perFile.contains(None)) None
     else Some(perFile.flatten.flatten.toMap)
   }
 
-  /** One file's footer stats: Some(None) = zero-row file (omitted),
-    * Some(Some(path -> stats)) = usable, None = fall back. */
-  private def footerStatsOfFile(p: String,
-      conf: org.apache.hadoop.conf.Configuration,
-      idsByName: Map[String, Int],
-      le: Int => java.nio.ByteBuffer)
-      : Option[Option[(String, (Long, Map[Int, (Array[Byte], Array[Byte])]))]] = {
-    import org.apache.parquet.hadoop.ParquetFileReader
-    import org.apache.parquet.hadoop.util.HadoopInputFile
-    import org.apache.parquet.schema.LogicalTypeAnnotation
-    import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
-    import scala.jdk.CollectionConverters._
-    val reader = ParquetFileReader.open(HadoopInputFile.fromPath(new Path(p), conf))
-    try {
-        val footer = reader.getFooter
-        val md = footer.getFileMetaData
-        val blocks = footer.getBlocks.asScala.toSeq
-        val nRows = blocks.map(_.getRowCount).sum
-        if (nRows == 0) Some(None)
-        else {
-          val schema = md.getSchema
-          // Classify every top-level primitive column in the current
-          // schema against [[allFileStatsJob]]'s DataType whitelist —
-          // the footer path must be BYTE-IDENTICAL to the job:
-          //   BOUND — annotation maps to a whitelisted Spark type whose
-          //     footer stats are provably the job's answer (plain/
-          //     signed-32 int and date INT32; plain/signed-64 int and
-          //     MICROS-timestamp INT64; FLOAT/DOUBLE; string BINARY);
-          //   SKIP — the job itself never bounds the Spark type this
-          //     annotation decodes to (DecimalType on INT32/INT64,
-          //     int8/int16 → Byte/Short, uint64 → Decimal(20,0),
-          //     TIME, plain BINARY, nested/other physical types) — the
-          //     footer path must also emit no bound, NOT fall back;
-          //   FALLBACK — the job WOULD bound the decoded Spark type but
-          //     footer bytes are not provably its answer (INT96 and
-          //     non-MICROS INT64 timestamps → TimestampType; unsigned
-          //     ≤32-bit ints → Integer/LongType read widened). Any
-          //     annotation not classified lands here: falling back is
-          //     always correct, just slower.
-          sealed trait Cls
-          object Bound extends Cls; object Skip extends Cls; object Fallback extends Cls
-          def classify(f: org.apache.parquet.schema.PrimitiveType): Cls = {
-            import LogicalTypeAnnotation._
-            (f.getPrimitiveTypeName, f.getLogicalTypeAnnotation) match {
-              case (INT32, null) => Bound
-              case (INT32, i: IntLogicalTypeAnnotation) =>
-                if (!i.isSigned) Fallback            // uint8/16/32 read widened
-                else if (i.getBitWidth == 32) Bound
-                else Skip                            // int8/16 → Byte/Short
-              case (INT32, _: DateLogicalTypeAnnotation) => Bound
-              case (INT32, _: DecimalLogicalTypeAnnotation) => Skip
-              case (INT64, null) => Bound
-              case (INT64, i: IntLogicalTypeAnnotation) =>
-                if (i.isSigned) Bound else Skip      // uint64 → Decimal(20,0)
-              case (INT64, ts: TimestampLogicalTypeAnnotation) =>
-                if (ts.getUnit == TimeUnit.MICROS) Bound else Fallback
-              case (INT64, _: DecimalLogicalTypeAnnotation) => Skip
-              case (FLOAT, _) | (DOUBLE, _) => Bound
-              case (BINARY, _: StringLogicalTypeAnnotation) => Bound
-              case (BINARY, null) => Skip            // BinaryType: job skips
-              case (BINARY, _) => Fallback           // ENUM/JSON → StringType
-              case (INT96, _) => Fallback            // no usable stats
-              case ((INT32 | INT64), _) => Fallback  // TIME, unknown: be safe
-              case _ => Skip                         // FIXED_LEN_BYTE_ARRAY etc.
-            }
-          }
-          val classified = schema.getFields.asScala.filter(_.isPrimitive)
-            .map(_.asPrimitiveType())
-            .filter(f => idsByName.contains(f.getName))
-            .map(f => f -> classify(f)).toSeq
-          if (classified.exists(_._2 == Fallback)) return None
-          val statCols = classified.collect { case (f, Bound) => f }
-          val bounds = scala.collection.mutable.Map.empty[Int, (Array[Byte], Array[Byte])]
-          for (c <- statCols) {
-            val colPath = org.apache.parquet.hadoop.metadata.ColumnPath.get(c.getName)
-            val chunks = blocks.flatMap(_.getColumns.asScala.find(_.getPath == colPath))
-            if (chunks.size != blocks.size) return None
-            var merged: org.apache.parquet.column.statistics.Statistics[_] = null
-            for (ch <- chunks) {
-              val st = ch.getStatistics
-              if (st == null || (st.isEmpty && ch.getValueCount > 0)) return None
-              if (st.hasNonNullValue) {
-                if (merged == null)
-                  merged = org.apache.parquet.column.statistics.Statistics
-                    .getBuilderForReading(c).build()
-                    .asInstanceOf[org.apache.parquet.column.statistics.Statistics[_]]
-                merged.mergeStatistics(st)
-              } else if (!st.isNumNullsSet || st.getNumNulls != ch.getValueCount) {
-                // neither a recorded all-null chunk nor usable bounds
-                return None
-              }
-            }
-            if (merged != null && merged.hasNonNullValue) {
-              val lohi: Option[(Array[Byte], Array[Byte])] =
-                (c.getPrimitiveTypeName, merged) match {
-                  case (INT32, s: org.apache.parquet.column.statistics.IntStatistics) =>
-                    Some((le(4).putInt(s.getMin).array(), le(4).putInt(s.getMax).array()))
-                  case (INT64, s: org.apache.parquet.column.statistics.LongStatistics) =>
-                    Some((le(8).putLong(s.getMin).array(), le(8).putLong(s.getMax).array()))
-                  case (FLOAT, s: org.apache.parquet.column.statistics.FloatStatistics) =>
-                    if (s.getMin.isNaN || s.getMax.isNaN) return None
-                    else Some((le(4).putFloat(s.getMin).array(), le(4).putFloat(s.getMax).array()))
-                  case (DOUBLE, s: org.apache.parquet.column.statistics.DoubleStatistics) =>
-                    if (s.getMin.isNaN || s.getMax.isNaN) return None
-                    else Some((le(8).putDouble(s.getMin).array(), le(8).putDouble(s.getMax).array()))
-                  case (BINARY, s: org.apache.parquet.column.statistics.BinaryStatistics) =>
-                    val (lo, hi) = (s.getMin.getBytes, s.getMax.getBytes)
-                    // the job path's serializeBound drops > 32-byte
-                    // string bounds (whatever their content — a
-                    // truncated footer stat is always > 32 bytes, so
-                    // it can only land here, never in a kept bound);
-                    // mirror it so manifests are byte-identical.
-                    // ANY UTF-8 content is exact, not just ASCII: the
-                    // job's min/max orders by UTF8String.compareTo —
-                    // under the default UTF8_BINARY collation that is
-                    // unsigned byte order over the UTF-8 encoding,
-                    // which is EXACTLY parquet's BinaryStatistics
-                    // comparator, so both sides pick the same winner
-                    // byte for byte (IcebergFooterStatsSpec pins this
-                    // with a fixture where UTF-16 and UTF-8 orders
-                    // disagree — a supplementary-plane code point vs
-                    // U+FF61 — so a collation regression would fail
-                    // the byte-identity assertion, not silently skew
-                    // manifests).
-                    if (lo.length > 32 || hi.length > 32) None
-                    else Some((lo, hi))
-                  case _ => return None
-                }
-              lohi.foreach(b => bounds(idsByName(c.getName)) = b)
-            }
-          }
-          Some(Some(canonPath(p) -> ((nRows, bounds.toMap))))
-        }
-    } finally reader.close()
+  /** Per-file row counts from the footers alone — no bound columns, so
+    * never a fallback; zero-row files are omitted. */
+  private def rowCounts(spark: SparkSession, paths: Seq[String]): Map[String, Long] =
+    footerFileStats(spark, paths, Map.empty).get.map { case (p, (n, _)) => p -> n }
+
+  /** The Spark types [[allFileStatsJob]] bounds. */
+  private def jobBounds(dt: DataType): Boolean = dt match {
+    case IntegerType | LongType | FloatType | DoubleType | DateType
+         | StringType | TimestampType | TimestampNTZType => true
+    case _ => false
   }
 
   /** Per-file (record count, bound bytes) in ONE grouped aggregation
@@ -519,11 +368,8 @@ object IcebergWrite {
       idsByName: Map[String, Int]): Map[String, (Long, Map[Int, (Array[Byte], Array[Byte])])] = {
     import org.apache.spark.sql.functions.{col, count, lit, max, min}
     val df = spark.read.parquet(paths: _*)
-    val statCols = df.schema.fields.filter(f => f.dataType match {
-      case IntegerType | LongType | FloatType | DoubleType | DateType
-           | StringType | TimestampType | TimestampNTZType => true
-      case _ => false
-    }).map(_.name).filter(idsByName.contains).toSeq
+    val statCols = df.schema.fields.filter(f => jobBounds(f.dataType))
+      .map(_.name).filter(idsByName.contains).toSeq
     val aggs = count(lit(1)).as("_n") +:
       statCols.flatMap(c => Seq(min(col(c)), max(col(c))))
     df.groupBy(col("_metadata.file_path").as("_p"))
@@ -926,8 +772,7 @@ object IcebergWrite {
       }.toSeq
     f.delete(staging, true)
     // per-file row counts from the footers (no job); zero-record files drop
-    val counts: Map[String, Long] =
-      footerRowCounts(spark, staged.map(_._1.toString))
+    val counts = rowCounts(spark, staged.map(_._1.toString))
     val (delFiles, empties) =
       staged.partition(p => counts.contains(canonPath(p._1.toString)))
     empties.foreach { case (p, _) => f.delete(p, false) }
@@ -1348,8 +1193,7 @@ object IcebergWrite {
       stagedDel = if (asDv) Nil else stage(positions, "delete-")
       stagedApp = stageAppSide()
     }
-    val delCounts: Map[String, Long] =
-      footerRowCounts(spark, stagedDel.map(_._1.toString))
+    val delCounts = rowCounts(spark, stagedDel.map(_._1.toString))
     val (delFiles, delEmpties) =
       stagedDel.partition(p => delCounts.contains(canonPath(p._1.toString)))
     delEmpties.foreach { case (p, _) => f.delete(p, false) }
@@ -3012,8 +2856,7 @@ object IcebergWrite {
       require(f.rename(part, dst), s"rename $part failed")
       f.delete(staging, true)
       newFiles += dst
-      val n = footerRowCounts(spark, Seq(dst.toString))
-        .getOrElse(canonPath(dst.toString), 0L)
+      val n = FooterStats.read(spark.sparkContext.hadoopConfiguration, dst).records
       val top = poss.maxBy(_.seq)
       entries += IcebergFormat.entry(1, dst.toString, n,
         f.getFileStatus(dst).getLen, top.snap, top.seq, status = 0)

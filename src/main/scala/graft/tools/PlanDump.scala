@@ -7,6 +7,9 @@ import graft.{GraftSession, SparkEntry}
   * sides broadcast, codegen spans cover the hot paths, and the
   * single-shuffle SCD2 really plans one exchange. Regenerate with:
   *   sbt "runMain graft.tools.PlanDump"
+  * Or dump named queries one file each, `<outdir>/<query>_<suffix>.txt`
+  * (before/after plan evidence for a change):
+  *   sbt "runMain graft.tools.PlanDump <outdir> <suffix> <q1,q2,...>"
   */
 object PlanDump {
   val picks: Seq[(String, String)] = Seq(
@@ -40,30 +43,46 @@ object PlanDump {
   )
 
   def main(args: Array[String]): Unit = {
+    if (args.length != 0 && args.length != 3) {
+      System.err.println("usage: PlanDump | PlanDump <outdir> <suffix> <q1,q2,...>")
+      sys.exit(2)
+    }
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
     val spark = GraftSession.builder("graft-plandump").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    val sb = new StringBuilder
-    sb.append("# PLANS — physical-plan evidence (generated by graft.tools.PlanDump)\n\n")
-    sb.append(s"Dataset: `$sfDir`. Regenerate: `sbt \"runMain graft.tools.PlanDump\"`.\n")
-    picks.foreach { case (name, why) =>
-      val noBroadcast = name == "q82_bucketed_star"
-      val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-      if (noBroadcast) spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      try {
-        val df = SparkEntry.queries(name)(spark, sfDir)
-        val plan = df.queryExecution.explainString(
-          org.apache.spark.sql.execution.FormattedMode)
-        val note = if (noBroadcast) " (dumped with auto-broadcast off — see picks comment)" else ""
-        // plans can embed control-char literals (the extractor's \u0000
-        // block sentinel) — escape them so the dump stays a text file
-        val clean = plan.flatMap(c =>
-          if (c < ' ' && c != '\n' && c != '\t') f"\\u${c.toInt}%04x" else c.toString)
-        sb.append(s"\n## $name\n\n_${why}${note}_\n\n```\n$clean```\n")
-      } finally if (noBroadcast) spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+    def plan(name: String): String = {
+      val p = SparkEntry.queries(name)(spark, sfDir).queryExecution.explainString(
+        org.apache.spark.sql.execution.FormattedMode)
+      // plans can embed control-char literals (the extractor's \u0000
+      // block sentinel) — escape them so the dump stays a text file
+      p.flatMap(c =>
+        if (c < ' ' && c != '\n' && c != '\t') f"\\u${c.toInt}%04x" else c.toString)
     }
-    java.nio.file.Files.writeString(java.nio.file.Paths.get("PLANS.md"), sb.toString)
-    System.err.println(s"[plandump] wrote PLANS.md (${picks.size} plans)")
+    args match {
+      case Array(outDir, suffix, names) =>
+        java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
+        names.split(',').foreach { name =>
+          val out = java.nio.file.Paths.get(outDir, s"${name}_$suffix.txt")
+          java.nio.file.Files.writeString(out,
+            s"// $name — explain(formatted) at $sfDir ($suffix)\n" + plan(name) + "\n")
+          System.err.println(s"[plandump] $name -> $out")
+        }
+      case _ =>
+        val sb = new StringBuilder
+        sb.append("# PLANS — physical-plan evidence (generated by graft.tools.PlanDump)\n\n")
+        sb.append(s"Dataset: `$sfDir`. Regenerate: `sbt \"runMain graft.tools.PlanDump\"`.\n")
+        picks.foreach { case (name, why) =>
+          val noBroadcast = name == "q82_bucketed_star"
+          val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+          if (noBroadcast) spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+          try {
+            val note = if (noBroadcast) " (dumped with auto-broadcast off — see picks comment)" else ""
+            sb.append(s"\n## $name\n\n_${why}${note}_\n\n```\n${plan(name)}```\n")
+          } finally if (noBroadcast) spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+        }
+        java.nio.file.Files.writeString(java.nio.file.Paths.get("PLANS.md"), sb.toString)
+        System.err.println(s"[plandump] wrote PLANS.md (${picks.size} plans)")
+    }
     spark.stop()
   }
 }

@@ -104,6 +104,61 @@ class IcebergUniformSpec extends AnyFunSuite {
     val scanned = pruned.select(col("_metadata.file_path")).distinct().count()
     assert(scanned <= 5 && scanned < total,
       s"expected a handful of pruned files, got $scanned of $total")
+
+    // decimal, date and timestamp columns: their Delta stats (exact
+    // decimals, ISO strings) are not bounds the mirror translates, so
+    // the Iceberg manifest carries none for them — only the long
+    // column's bounds, byte for byte each file's own min/max
+    val tdir = dir0()
+    DeltaInterop.writeDelta((1L to 60L).map(i => (i, BigDecimal(i) / 4, i * 86400000000L + 123L))
+      .toDF("id", "amt", "micros")
+      .withColumn("amt", col("amt").cast("decimal(10,2)"))
+      .withColumn("d", to_date(timestamp_micros(col("micros"))))
+      .withColumn("ts", timestamp_micros(col("micros"))).drop("micros")
+      .repartitionByRange(3, col("id")), tdir, Nil)
+    DeltaInterop.enableUniform(spark, tdir)
+    val idField = DeltaInterop.state(spark, tdir).schema("id").metadata
+    val (idId, idPhys) = (idField.getLong("delta.columnMapping.id").toInt,
+      idField.getString("delta.columnMapping.physicalName"))
+    def le8(x: Long) = java.nio.ByteBuffer.allocate(8)
+      .order(java.nio.ByteOrder.LITTLE_ENDIAN).putLong(x).array().toSeq
+    val mirrored = manifestBounds(tdir)
+    assert(mirrored.size == DeltaInterop.state(spark, tdir).files.length)
+    mirrored.foreach { case (file, (lower, upper)) =>
+      val r = spark.read.parquet(file).agg(min(idPhys), max(idPhys)).head
+      assert(lower == Map(idId -> le8(r.getLong(0))) &&
+        upper == Map(idId -> le8(r.getLong(1))), file)
+    }
+  }
+
+  /** Each live data file of the current Iceberg snapshot with its
+    * (lower, upper) bounds by field id, read from the manifests. */
+  private def manifestBounds(dir: String): Map[String, (Map[Int, Seq[Byte]], Map[Int, Seq[Byte]])] = {
+    import org.apache.avro.generic.{GenericDatumReader, GenericRecord}
+    import scala.jdk.CollectionConverters._
+    def local(uri: String) = if (uri.startsWith("file:")) new java.net.URI(uri).getPath else uri
+    def records(uri: String): List[GenericRecord] = {
+      val r = org.apache.avro.file.DataFileReader.openReader(
+        new java.io.File(local(uri)), new GenericDatumReader[GenericRecord]())
+      try r.iterator().asScala.toList finally r.close()
+    }
+    def bounds(df: GenericRecord, f: String): Map[Int, Seq[Byte]] =
+      Option(df.get(f)).toSeq.flatMap(_.asInstanceOf[java.util.List[GenericRecord]].asScala)
+        .map { kv =>
+          val bb = kv.get("value").asInstanceOf[java.nio.ByteBuffer].duplicate()
+          val b = new Array[Byte](bb.remaining()); bb.get(b)
+          kv.get("key").asInstanceOf[Number].intValue -> b.toSeq
+        }.toMap
+    val meta = IcebergInterop.readJson(spark, IcebergInterop.currentMetadataPath(spark, dir))
+    val snap = meta.path("snapshots").elements().asScala
+      .find(_.path("snapshot-id").asLong == meta.path("current-snapshot-id").asLong).get
+    records(snap.path("manifest-list").asText)
+      .flatMap(m => records(m.get("manifest_path").toString))
+      .filter(_.get("status").asInstanceOf[Number].intValue != 2)
+      .map(_.get("data_file").asInstanceOf[GenericRecord])
+      .map(df => local(df.get("file_path").toString) ->
+        ((bounds(df, "lower_bounds"), bounds(df, "upper_bounds"))))
+      .toMap
   }
 
   test("PARTITIONED uniform: partition values materialize into files; both planes agree") {
