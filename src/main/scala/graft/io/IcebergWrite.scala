@@ -328,31 +328,29 @@ object IcebergWrite {
     val conf = spark.sparkContext.hadoopConfiguration
     // footer reads are independent I/O — overlap them on a bounded
     // pool (a 120-tuple partitioned commit stages 120 files)
-    val perFile = graft.pipeline.Par.map(paths) { p =>
-      val fs = FooterStats.read(conf, new Path(p))
-      val cols = fs.columns.filter(c => idsByName.contains(c.name))
-      if (fs.records == 0) Some(None)
-      else if (cols.exists(c => c.dataType.forall(jobBounds) &&
-                                c.bounds == FooterStats.Inexact)) None
-      else Some(Some(canonPath(p) -> ((fs.records, cols.flatMap { c =>
-        (c.dataType, c.bounds) match {
-          case (Some(dt), FooterStats.Exact(lo, hi)) if jobBounds(dt) =>
-            for {
-              l <- IcebergFormat.serializeBound(dt, lo)
-              h <- IcebergFormat.serializeBound(dt, hi)
-            } yield idsByName(c.name) -> ((l, h))
-          case _ => None
-        }
-      }.toMap))))
-    }
-    if (perFile.contains(None)) None
-    else Some(perFile.flatten.flatten.toMap)
+    val files = graft.pipeline.Par.map(paths) { p =>
+      canonPath(p) -> FooterStats.read(conf, new Path(p))
+    }.filter(_._2.records > 0)
+    val cols = files.flatMap(_._2.columns).filter(c => idsByName.contains(c.name))
+    if (cols.exists(c => c.dataType.forall(jobBounds) && c.bounds == FooterStats.Inexact)) None
+    else Some(files.map { case (p, fs) =>
+      val bounds = for {
+        FooterStats.Column(name, Some(dt), FooterStats.Exact(lo, hi)) <- fs.columns
+        id <- idsByName.get(name) if jobBounds(dt)
+        l <- IcebergFormat.serializeBound(dt, lo)
+        h <- IcebergFormat.serializeBound(dt, hi)
+      } yield id -> ((l, h))
+      p -> ((fs.records, bounds.toMap))
+    }.toMap)
   }
 
-  /** Per-file row counts from the footers alone — no bound columns, so
-    * never a fallback; zero-row files are omitted. */
-  private def rowCounts(spark: SparkSession, paths: Seq[String]): Map[String, Long] =
-    footerFileStats(spark, paths, Map.empty).get.map { case (p, (n, _)) => p -> n }
+  /** Per-file row counts from the footers alone; zero-row files are
+    * omitted. */
+  private def rowCounts(spark: SparkSession, paths: Seq[String]): Map[String, Long] = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    graft.pipeline.Par.map(paths)(p => canonPath(p) -> FooterStats.read(conf, new Path(p)).records)
+      .filter(_._2 > 0).toMap
+  }
 
   /** The Spark types [[allFileStatsJob]] bounds. */
   private def jobBounds(dt: DataType): Boolean = dt match {
