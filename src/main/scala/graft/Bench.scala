@@ -126,7 +126,7 @@ object Bench {
     val warmDir = sys.env.getOrElse("SPARK_GRAFT_WARM_DIR", "/root/testdata/sf0.001")
     headline.foreach { name =>
       try { SparkEntry.queries(name)(spark, warmDir).count() }
-      catch { case _: Throwable => () }
+      catch { case e: Throwable => System.err.println(s"[bench] warm-up $name failed: $e") }
     }
 
     // The bucketed layout is a write-once cost amortized over every later
@@ -152,28 +152,21 @@ object Bench {
     val results = headline.map { name =>
       val fn = SparkEntry.queries(name)
       val qBefore = graft.tools.HostTelemetry.cpuTicks()
-      val t0 = System.nanoTime()
-      try { fn(spark, sfDir).count() }
-      catch { case _: Throwable => -1L }
-      val sec = (System.nanoTime() - t0) / 1e9
+      val row = timed(name)(fn(spark, sfDir).count())
       perQuery(name) = graft.tools.HostTelemetry.perQueryJson(
-        sec, qBefore, graft.tools.HostTelemetry.cpuTicks(),
+        row.toOption, qBefore, graft.tools.HostTelemetry.cpuTicks(),
         graft.tools.HostTelemetry.rssMb())
-      name -> sec
+      name -> row
     }
     // the reference's own 4-stage workload, end-to-end (fixture ×N
     // generated untimed; see graft.tools.SyntheaBench)
-    val syntheaSec =
-      try graft.tools.SyntheaBench.run(spark)
-      catch { case _: Throwable => -1.0 }
+    val synthea = "synthea_e2e" -> timing("synthea_e2e")(graft.tools.SyntheaBench.run(spark))
     val host = graft.tools.HostTelemetry.deltaJson(
       ticksBefore, graft.tools.HostTelemetry.cpuTicks())
-    val qs = (results :+ ("synthea_e2e" -> syntheaSec))
-      .map { case (k, v) => "\"" + k + f"""":$v%.3f""" }
-      .mkString("{", ",", "}")
-    val total = results.map(_._2).sum + math.max(0.0, syntheaSec)
+    val rows = results :+ synthea
+    val total = rows.flatMap(_._2.toOption).sum
     val line =
-      f"""{"metric":"total","value":$total%.3f,"unit":"sec","queries":$qs,$host%s,"sf":"$sfDir"}"""
+      f"""{"metric":"total","value":$total%.3f,"unit":"sec","queries":${queriesJson(rows)}%s,$host%s,"sf":"$sfDir"}"""
     println(line)
     // The driver's BENCH_rN.json captures only the TAIL of stdout
     // (2,000 chars — r12 silently lost q01–q28 and the total from the
@@ -197,5 +190,38 @@ object Bench {
         (body + "\n").getBytes("UTF-8"))
     } catch { case _: Throwable => () }
     spark.stop()
+    exitIfFailed(rows)
+  }
+
+  /** One row's status: its seconds, or the reason it failed. A failed row
+    * records no time; its reason goes to stderr. */
+  type Timing = Either[String, Double]
+
+  /** Time `body` as one row. */
+  def timed(name: String)(body: => Any): Timing =
+    timing(name) { val t0 = System.nanoTime(); body; (System.nanoTime() - t0) / 1e9 }
+
+  /** The row `seconds` gives, or the reason it threw. */
+  def timing(name: String)(seconds: => Double): Timing =
+    try Right(seconds)
+    catch {
+      case e: Throwable =>
+        System.err.println(s"[bench] $name FAILED: $e")
+        Left(e.toString)
+    }
+
+  /** `{"name":seconds,...}`; a failed row reads `null`. */
+  def queriesJson(rows: Seq[(String, Timing)]): String =
+    rows.map { case (k, v) =>
+      "\"" + k + "\":" + v.fold(_ => "null", sec => f"$sec%.3f")
+    }.mkString("{", ",", "}")
+
+  /** Exit non-zero once the artifacts are written if any row failed. */
+  def exitIfFailed(rows: Seq[(String, Timing)]): Unit = {
+    val failed = rows.collect { case (k, Left(_)) => k }
+    if (failed.nonEmpty) {
+      System.err.println(s"[bench] ${failed.size} row(s) failed: ${failed.mkString(", ")}")
+      sys.exit(1)
+    }
   }
 }

@@ -54,24 +54,19 @@ object BenchScale {
     val warmDir = sys.env.getOrElse("SPARK_GRAFT_WARM_DIR", "/root/testdata/sf0.001")
     rows.foreach { name =>
       try { SparkEntry.queries(name)(spark, warmDir).count() }
-      catch { case _: Throwable => () }
+      catch { case e: Throwable => System.err.println(s"[bench] warm-up $name failed: $e") }
     }
 
     val ticksBefore = graft.tools.HostTelemetry.cpuTicks()
     val results = rows.map { name =>
       val fn = SparkEntry.queries(name)
-      val t0 = System.nanoTime()
-      try { fn(spark, out).count() }
-      catch { case _: Throwable => -1L }
-      name -> (System.nanoTime() - t0) / 1e9
+      name -> Bench.timed(name)(fn(spark, out).count())
     }
     val host = graft.tools.HostTelemetry.deltaJson(
       ticksBefore, graft.tools.HostTelemetry.cpuTicks())
-    val qs = results.map { case (k, v) => "\"" + k + f"""":$v%.3f""" }
-      .mkString("{", ",", "}")
-    val total = results.map(_._2).sum
+    val total = results.flatMap(_._2.toOption).sum
     val line =
-      f"""{"metric":"total_x$copies%d","value":$total%.3f,"unit":"sec","queries":$qs,$host%s,"cpus":$cpus%s,"sf":"$sfDir"}"""
+      f"""{"metric":"total_x$copies%d","value":$total%.3f,"unit":"sec","queries":${Bench.queriesJson(results)}%s,$host%s,"cpus":$cpus%s,"sf":"$sfDir"}"""
     println(line)
     try {
       val dst = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "BENCH_SCALE.json")
@@ -79,5 +74,6 @@ object BenchScale {
         (line + "\n").getBytes("UTF-8"))
     } catch { case _: Throwable => () }
     spark.stop()
+    Bench.exitIfFailed(results)
   }
 }

@@ -41,6 +41,11 @@ object GraftSession {
       // instead of scanning (the lifecycle queries derive their
       // predicate bands from corpus min/max before every DML step)
       .config("spark.sql.parquet.aggregatePushdown", "true")
+      // Spark keeps 100 generated classes per JVM by default. A first
+      // Synthea day (18 tables through repair, clean and mart; 120
+      // patients) compiles 260 classes and the SCD2 day's mart 210 more,
+      // so at 100 every later day recompiled what an earlier one built
+      .config("spark.sql.codegen.cache.maxEntries", "1000")
       .config("spark.ui.enabled", "false")
 
   def get(appName: String = "graft"): SparkSession = {

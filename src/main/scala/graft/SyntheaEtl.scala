@@ -79,7 +79,10 @@ object SyntheaEtl {
         }
       }),
       Stage("mart", s => {
-        def staging(t: String): DataFrame = Readers.parquet(s, s"$root/staging/$date/$t")
+        // one read per staging table: `patients` feeds two dims and the fact
+        val stagingReads = scala.collection.mutable.Map.empty[String, DataFrame]
+        def staging(t: String): DataFrame =
+          stagingReads.getOrElseUpdate(t, Readers.parquet(s, s"$root/staging/$date/$t"))
         val loadedDims = scala.collection.mutable.ListBuffer.empty[DataFrame]
         def existing(dim: String): Option[DataFrame] = {
           // Hadoop FS check (not java.io.File) so the probe also works on

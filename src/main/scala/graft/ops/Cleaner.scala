@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Observation}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -62,22 +62,17 @@ object Cleaner {
   }
 
   /** P5 + F3 — multi-value split. For each string column that contains the
-    * word "or" in at least one value (a limit-1 existence probe in the
-    * reference — here batched into ONE aggregate pass over all candidate
-    * columns, an allowed optimization since output is identical; the
-    * reference runs a full scan per column, SURVEY.md §3.2), add
-    * `<col>_part1` / `<col>_part2` (trimmed split items 0 and 1); drop the
-    * original unless it is in the declared schema, in which case the original
-    * column is replaced by part1 (reference: Raw_To_Staging.py:117-125). */
+    * word "or" in at least one value (a limit-1 existence probe per column
+    * in the reference, which runs a full scan per column, SURVEY.md §3.2 —
+    * here [[multiValueColumns]] probes them all in one scan, an allowed
+    * optimization since output is identical), add `<col>_part1` /
+    * `<col>_part2` (trimmed split items 0 and 1); drop the original unless
+    * it is in the declared schema, in which case the original column is
+    * replaced by part1 (reference: Raw_To_Staging.py:117-125). */
   def splitMultiValue(df: DataFrame, declared: Set[String]): DataFrame = {
     val candidates = stringCols(df)
     if (candidates.isEmpty) return df
-    // One job probes every column at once: max(rlike) per column.
-    val probes = candidates.map(c => max(col(c).rlike(OrPattern)).as(c))
-    val row = df.agg(probes.head, probes.tail: _*).head()
-    val hits = candidates.zipWithIndex.collect {
-      case (c, i) if !row.isNullAt(i) && row.getBoolean(i) => c
-    }.toSet
+    val hits = multiValueColumns(df, candidates)
     if (hits.isEmpty) return df
     // One projection for every hit column (not a withColumn per column —
     // that stacks O(hits) Projects for the analyzer to re-resolve and
@@ -92,6 +87,18 @@ object Cleaner {
     val partCols = candidates.filter(hits).flatMap(c =>
       Seq(part(c, 0).as(s"${c}_part1"), part(c, 1).as(s"${c}_part2")))
     df.select(kept ++ partCols: _*)
+  }
+
+  /** The `candidates` with at least one value matching [[OrPattern]]. One
+    * job, no shuffle: a `noop` write scans `df` once while an observation
+    * takes `max(rlike)` per column. Every call gets its own observation
+    * name, since tables are cleaned concurrently. */
+  def multiValueColumns(df: DataFrame, candidates: Seq[String]): Set[String] = {
+    val probe = Observation()
+    val maxes = candidates.zipWithIndex.map { case (c, i) => max(col(c).rlike(OrPattern)).as(s"c$i") }
+    df.observe(probe, maxes.head, maxes.tail: _*).write.format("noop").mode("overwrite").save()
+    val seen = probe.get
+    candidates.zipWithIndex.collect { case (c, i) if seen(s"c$i") == true => c }.toSet
   }
 
   /** P6 / T2 — replace nulls in string columns with the literal "None"

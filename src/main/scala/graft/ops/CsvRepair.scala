@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.io.Readers
 import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
 
@@ -73,9 +74,8 @@ object CsvRepair {
     * Source_Raw_Dynamic.py:94-96, :105-107). Unnamed/empty header columns
     * are dropped (reference: Source_Raw_Dynamic.py:72-73). */
   def repair(spark: SparkSession, lines: Dataset[String]): Option[DataFrame] = {
-    // one driver action fetches the header line (head(1) launches a job —
-    // don't run it twice)
-    val firstLine: Option[String] = lines.head(1).headOption
+    // the header line, read once on the driver (no job for a file scan)
+    val firstLine: Option[String] = Readers.firstLine(lines)
     val headerFields: Array[String] =
       firstLine.flatMap(parseLine).getOrElse(Array.empty)
     if (headerFields.isEmpty) return None

@@ -38,14 +38,16 @@ object HostTelemetry {
     } catch { case _: Throwable => -1L }
 
   /** Per-query JSON object for one bracketed sample pair + rss:
-    * `{"sec":S,"steal":…,"iowait":…,"busy":…,"total":…,"rss_mb":…}`. */
-  def perQueryJson(sec: Double, before: Map[String, Long],
+    * `{"sec":S,"steal":…,"iowait":…,"busy":…,"total":…,"rss_mb":…}`;
+    * `"sec":null` for a failed query. */
+  def perQueryJson(sec: Option[Double], before: Map[String, Long],
                    after: Map[String, Long], rss: Long): String = {
     def d(k: String) = math.max(0L, after.getOrElse(k, 0L) - before.getOrElse(k, 0L))
     val total = Seq("user", "nice", "system", "idle",
       "iowait", "irq", "softirq", "steal").map(d).sum
     val busy = total - d("idle") - d("iowait")
-    f"""{"sec":$sec%.3f,"steal":${d("steal")},"iowait":${d("iowait")},"busy":$busy,"total":$total,"rss_mb":$rss}"""
+    val secJson = sec.fold("null")(v => f"$v%.3f")
+    f"""{"sec":$secJson%s,"steal":${d("steal")},"iowait":${d("iowait")},"busy":$busy,"total":$total,"rss_mb":$rss}"""
   }
 
   /** JSON fields for the delta between two [[cpuTicks]] samples:

@@ -1,10 +1,14 @@
 package org.apache.spark.sql
 
-import org.apache.spark.sql.catalyst.expressions.Expression
-import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.FileStatus
+import org.apache.spark.sql.catalyst.expressions.{Attribute, Expression}
+import org.apache.spark.sql.catalyst.plans.logical.{LocalRelation, Project}
 import org.apache.spark.sql.catalyst.types.DataTypeUtils
-import org.apache.spark.sql.execution.datasources.LogicalRelation
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation, PartitioningAwareFileIndex}
+import org.apache.spark.sql.execution.datasources.text.TextFileFormat
 import org.apache.spark.sql.types.StructType
+import org.apache.spark.util.HadoopFSUtils
 
 /** Bridge into Spark's `private[sql]` Column↔Expression converters for
   * graft's custom Catalyst expressions. Lives in the org.apache.spark.sql
@@ -57,4 +61,36 @@ object GraftBridge {
   def emptyStreamingBatch(spark: SparkSession, schema: StructType): Dataset[Row] =
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession],
       LocalRelation(DataTypeUtils.toAttributes(schema), Nil, isStreaming = true))
+
+  /** The Hadoop configuration a file scan of this session reads with. */
+  def hadoopConf(spark: SparkSession): Configuration =
+    spark.asInstanceOf[classic.SparkSession].sessionState.newHadoopConf()
+
+  /** Spark's own rule for names a file listing skips (`_SUCCESS`,
+    * `.crc` siblings, `._COPYING_`), keeping parquet summary files. */
+  def isHiddenPath(name: String): Boolean = HadoopFSUtils.shouldFilterOutPathName(name)
+
+  /** The one file `lines` scans when its plan is a bare text scan of a
+    * single file (`spark.read.textFile(file)`, default line splitting);
+    * None for any other plan. */
+  def textFileOf(lines: Dataset[String]): Option[FileStatus] = {
+    val plan = lines.asInstanceOf[classic.Dataset[String]].logicalPlan match {
+      case Project(Seq(_: Attribute), child) => child
+      case other => other
+    }
+    plan match {
+      case lr: LogicalRelation => lr.relation match {
+        case HadoopFsRelation(index: PartitioningAwareFileIndex, partitionSchema, _, None,
+                              _: TextFileFormat, options)
+            if partitionSchema.isEmpty &&
+              !options.keys.exists(k => Set("linesep", "wholetext")(k.toLowerCase)) =>
+          index.allFiles() match {
+            case Seq(f) => Some(f)
+            case _ => None
+          }
+        case _ => None
+      }
+      case _ => None
+    }
+  }
 }

@@ -36,6 +36,33 @@ class CleanerSpec extends AnyFunSuite {
     assert(Cleaner.splitMultiValue(df2, Set.empty).columns.contains("c_part1"))
   }
 
+  test("P5 probe: one scan finds the same multi-value columns as an aggregate") {
+    import org.apache.spark.sql.functions._
+    def aggregated(df: org.apache.spark.sql.DataFrame, cols: Seq[String]): Set[String] = {
+      val row = df.agg(max(col(cols.head).rlike(Cleaner.OrPattern)),
+        cols.tail.map(c => max(col(c).rlike(Cleaner.OrPattern))): _*).head()
+      cols.zipWithIndex.collect { case (c, i) if !row.isNullAt(i) && row.getBoolean(i) => c }.toSet
+    }
+    // the only match sits in the last of four partitions
+    val lastPartition = spark.range(0, 400, 1, 4).select(
+      when(col("id") === 399, "Penicillin or Amoxicillin").otherwise(concat(lit("v"), col("id"))).as("a"),
+      concat(lit("w"), col("id")).as("b"))
+    // no value at all
+    val allNull = spark.range(0, 10, 1, 2).select(lit(null).cast("string").as("n"), lit("x or y").as("s"))
+    // matches only once phone dashes are stripped; and the reverse, a match
+    // that the trim step removes
+    val cleaned = Cleaner.stripPhoneDashes(Cleaner.trimStrings(Seq(
+      ("555 -or- 0100", " or tail", "keep"),
+      ("5550101", "head", "keep")).toDF("phone", "note", "k")))
+    Seq(lastPartition -> Set("a"), allNull -> Set("s"), cleaned -> Set("phone")).foreach {
+      case (df, expected) =>
+        val (hits, jobs) = Jobs.count(spark)(Cleaner.multiValueColumns(df, df.columns.toSeq))
+        assert(hits == expected)
+        assert(hits == aggregated(df, df.columns.toSeq))
+        assert(jobs == 1)
+    }
+  }
+
   test("P6/T2: fillna None touches string cols only") {
     val df = Seq((Some("x"), Some(1)), (None, None))
       .toDF("s", "n")

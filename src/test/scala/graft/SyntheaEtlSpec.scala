@@ -109,6 +109,31 @@ class SyntheaEtlSpec extends AnyFunSuite {
     assert(ran == Seq("ingest")) // repair's precondition fails with 8 of 18 tables
   }
 
+  test("18 tables: repair runs 1 job a table, clean 3; day 2 compiles nothing in either") {
+    import org.apache.spark.metrics.source.CodegenMetrics
+    val root = Files.createTempDirectory("graft-synthea-jobs").toString
+    val landing = s"$root/datasource"
+    val tables = SyntheaEtl.ExpectedTables.size
+    def day(date: String): Map[String, (Int, Long)] = {
+      graft.tools.SyntheaBench.writeFixture(landing, 40)
+      SyntheaEtl.stages(landing, root, date, FixedClock(s"$date 00:00:00"), requireAll = true)
+        .map { st =>
+          assert(st.precondition(spark), s"${st.name} precondition")
+          val compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+          val (_, jobs) = Jobs.count(spark)(st.run(spark))
+          st.name -> (jobs, CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compiles)
+        }.toMap
+    }
+    val day1 = day("2024-01-01")
+    assert(day1("repair")._1 <= tables, s"repair: ${day1("repair")._1} jobs")
+    assert(day1("clean")._1 <= 3 * tables, s"clean: ${day1("clean")._1} jobs")
+    val day2 = day("2024-01-02")
+    assert(day2("repair")._1 <= tables && day2("clean")._1 <= 3 * tables)
+    // the same plan shapes as day 1: every class comes from the codegen cache
+    assert(day2("repair")._2 == 0, s"day 2 repair compiled ${day2("repair")._2} classes")
+    assert(day2("clean")._2 == 0, s"day 2 clean compiled ${day2("clean")._2} classes")
+  }
+
   test("SyntheaBench fixture x N drives all 18 tables through all four stages") {
     val sec = graft.tools.SyntheaBench.run(spark, nPatients = 60)
     assert(sec > 0.0)
