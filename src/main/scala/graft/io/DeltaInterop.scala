@@ -1,6 +1,7 @@
 package graft.io
 
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
+import graft.io.lake.Staging
 import graft.pipeline.Par
 import org.apache.hadoop.fs.{FileSystem, FileUtil, Path}
 import org.apache.parquet.hadoop.ParquetFileReader
@@ -1242,7 +1243,6 @@ object DeltaInterop {
           stats, if (a.tags.nonEmpty) a.tags else null, dv, a.clusteringProvider,
           a.baseRowId, a.defaultRowCommitVersion))
       }
-    val staging = new Path(dir, s".cp-staging-${java.util.UUID.randomUUID().toString.take(8)}")
     import spark.implicits._
     // a v2Checkpoint table REQUIRES the v2 form (UUID-named file with a
     // checkpointMetadata action) — writing the classic name there would
@@ -1262,17 +1262,10 @@ object DeltaInterop {
       if (!isV2) base
       else spark.createDataset(Seq(CpMetaRow(CpCheckpointMeta(st.version))))
         .toDF().unionByName(base, allowMissingColumns = true)
-    frame.coalesce(1).write.parquet(staging.toString)
-    val part = f.listStatus(staging)
-      .map(_.getPath).filter(_.getName.endsWith(".parquet"))
-    require(part.length == 1, s"expected one checkpoint part file, got ${part.length}")
-    val target =
+    Staging.stageOne(frame, new Path(dir),
       if (!isV2) checkpointFile(dir, st.version)
       else new Path(logDir(dir),
-        f"${st.version}%020d.checkpoint.${java.util.UUID.randomUUID()}.parquet")
-    f.delete(target, false)
-    require(f.rename(part.head, target), s"rename failed: ${part.head} -> $target")
-    f.delete(staging, true)
+        f"${st.version}%020d.checkpoint.${java.util.UUID.randomUUID()}.parquet"))
     val nRows = rows.length + st.domains.size + (if (isV2) 1 else 0)
     val out = f.create(lastCheckpointFile(dir), true) // overwrite: latest pointer wins
     try out.write(s"""{"version":${st.version},"size":$nRows}""".getBytes("UTF-8"))
@@ -1338,54 +1331,29 @@ object DeltaInterop {
     val nAdds = addsDf.count() // one distributed action; drives `size`
     val isV2 = st.protocol.readerFeatures.contains("v2Checkpoint") ||
       st.protocol.writerFeatures.contains("v2Checkpoint")
-    val staging = new Path(dir, s".cp-large-${java.util.UUID.randomUUID().toString.take(8)}")
     val nActions =
       if (isV2) {
         // sidecar form: adds land distributed under _sidecars/, the
         // main file stays metadata-sized
         val sideDir = new Path(logDir(dir), "_sidecars")
         f.mkdirs(sideDir)
-        addRows.write.parquet(staging.toString)
-        val sidecars = f.listStatus(staging)
-          .map(_.getPath).filter(_.getName.endsWith(".parquet")).sortBy(_.getName)
-          .map { p =>
-            val name = s"${java.util.UUID.randomUUID()}.parquet"
-            val dst = new Path(sideDir, name)
-            require(f.rename(p, dst), s"rename $p -> $dst failed")
-            CpSidecarRow(CpSidecar(name, f.getFileStatus(dst).getLen, 0L))
-          }.toSeq
-        f.delete(staging, true)
-        val mainStaging = new Path(dir, s".cp-main-${java.util.UUID.randomUUID().toString.take(8)}")
-        spark.createDataset(Seq(CpMetaRow(CpCheckpointMeta(v)))).toDF()
+        val sidecars = Staging.stage(addRows, new Path(dir))(_ =>
+            new Path(sideDir, s"${java.util.UUID.randomUUID()}.parquet"))
+          .map(s => CpSidecarRow(CpSidecar(s.path.getName, s.len, 0L)))
+        Staging.stageOne(spark.createDataset(Seq(CpMetaRow(CpCheckpointMeta(v)))).toDF()
           .unionByName(metaDf, allowMissingColumns = true)
           .unionByName(spark.createDataset(sidecars).toDF(),
-            allowMissingColumns = true)
-          .coalesce(1).write.parquet(mainStaging.toString)
-        val part = f.listStatus(mainStaging)
-          .map(_.getPath).filter(_.getName.endsWith(".parquet"))
-        require(part.length == 1, s"expected one main file, got ${part.length}")
-        val target = new Path(logDir(dir),
-          f"$v%020d.checkpoint.${java.util.UUID.randomUUID()}.parquet")
-        f.delete(target, false)
-        require(f.rename(part.head, target), s"rename to $target failed")
-        f.delete(mainStaging, true)
+            allowMissingColumns = true),
+          new Path(dir), new Path(logDir(dir),
+            f"$v%020d.checkpoint.${java.util.UUID.randomUUID()}.parquet"))
         metaRows.length + st.domains.size + sidecars.length + 1 + nAdds
       } else {
         // multi-part classic: metadata rows ride one part alongside
         // the adds' parts (the spec puts no action-placement rule on
         // parts; parts of one checkpoint share a schema by the union)
-        metaDf.unionByName(addRows, allowMissingColumns = true)
-          .write.parquet(staging.toString)
-        val parts = f.listStatus(staging)
-          .map(_.getPath).filter(_.getName.endsWith(".parquet")).sortBy(_.getName)
-        val m = parts.length
-        parts.zipWithIndex.foreach { case (p, i) =>
-          val target = new Path(logDir(dir),
-            f"$v%020d.checkpoint.${i + 1}%010d.$m%010d.parquet")
-          f.delete(target, false)
-          require(f.rename(p, target), s"rename to $target failed")
-        }
-        f.delete(staging, true)
+        Staging.stage(metaDf.unionByName(addRows, allowMissingColumns = true),
+            new Path(dir))(p => new Path(logDir(dir),
+          f"$v%020d.checkpoint.${p.index + 1}%010d.${p.count}%010d.parquet"))
         metaRows.length + st.domains.size + nAdds
       }
     val out = f.create(lastCheckpointFile(dir), true)
@@ -1983,7 +1951,7 @@ object DeltaInterop {
         }.toSeq
       } finally r.close()
       require(renamed.isEmpty,
-        s"cannot convert $dir: column rename(s) in the Iceberg history " +
+        s"cannot convert $dir: renamed columns in the Iceberg history " +
         s"(${renamed.mkString(", ")}) — name-addressed Delta reads would " +
         "silently null the column; rewrite the table first")
       footerAdd(spark, fp, rel, Map.empty, f.getFileStatus(fp).getLen)
@@ -2170,53 +2138,50 @@ object DeltaInterop {
       checkpointInterval)
   }
 
-  /** Distributed write into a staging dir, then RENAME the files into
-    * place under fresh unique names (no copy). The files are invisible
-    * to readers until a commit references them; if the commit never
-    * happens they are unreferenced and [[vacuum]] reclaims them. */
+  /** Stage `df` ([[Staging.stage]]) under Spark's part-file names in
+    * the table's Hive partition dirs and return one footer-stats add per
+    * file. The files are invisible to readers until a commit references
+    * them; if the commit never happens [[vacuum]] reclaims them. */
   private def stageData(df: DataFrame, dir: String, partCols: Seq[String],
                         materializePartitions: Boolean = false): Seq[AddFile] = {
     val spark = df.sparkSession
-    val f = fs(spark, dir)
-    val staging = new Path(dir, s".staging-${java.util.UUID.randomUUID().toString.take(8)}")
-    if (partCols.isEmpty) df.write.parquet(staging.toString)
-    else if (!materializePartitions)
-      df.write.partitionBy(partCols: _*).parquet(staging.toString)
-    else {
-      // icebergCompatV2's partitioned-write obligation: partition
-      // VALUES must also land as real columns in the data files
-      // (Iceberg readers resolve them like any column; Delta's own
-      // reads take the directory value — same value either way). One
-      // partitioned write splits files per partition tuple via
-      // duplicate throwaway columns, then the value dirs rename to the
-      // Hive names the table layout expects.
-      val dup = partCols.map(c => c -> s"__gp_$c")
-      val df2 = dup.foldLeft(df) { case (d, (c, t)) => d.withColumn(t, col(c)) }
-      df2.write.partitionBy(dup.map(_._2): _*).parquet(staging.toString)
-      def strip(p: Path): Unit = f.listStatus(p).foreach { s0 =>
-        if (s0.isDirectory) {
-          val name = s0.getPath.getName
-          val dst =
-            if (name.startsWith("__gp_")) {
-              val d = new Path(p, name.stripPrefix("__gp_"))
-              require(f.rename(s0.getPath, d), s"rename ${s0.getPath} failed")
-              d
-            } else s0.getPath
-          strip(dst)
-        }
-      }
-      strip(staging)
-    }
-    val staged = Par.map(moveStaged(f, staging, new Path(dir), partCols)) {
+    // icebergCompatV2's partitioned-write obligation: partition VALUES
+    // must also land as real columns in the data files (Iceberg readers
+    // resolve them like any column; Delta's own reads take the
+    // directory value — same value either way). Throwaway duplicate
+    // columns split the files; the walk names the dirs by the real ones.
+    val split = if (materializePartitions) partCols.map(c => s"__gp_$c") else partCols
+    val frame = partCols.zip(split).foldLeft(df) { case (d, (c, t)) =>
+      if (c == t) d else d.withColumn(t, col(c)) }
+    val staged = Par.map(stageFiles(frame, dir, "", partCols, split)) {
       case (rel, pv, size) => footerAdd(spark, new Path(dir, rel), rel, pv, size)
     }
     // never commit a ZERO-record add (an empty scan/shuffle partition's
     // file): it bloats the log, and on row-tracked tables it would
     // consume a row id for nothing. Stats are footer-read just above,
     // so 0 here is definitive, not unknown (-1 keeps its add).
-    val (empty, kept) = staged.partition(_.numRecords == 0)
-    empty.foreach(a => f.delete(new Path(dir, a.path), false))
-    kept
+    Staging.dropEmpty(fs(spark, dir), staged)(a => new Path(dir, a.path), _.numRecords)
+  }
+
+  /** [[Staging.stage]] `df`, split by its `split` columns, into
+    * `<dir>/<sub><partition dirs of partCols>/<prefix><part name>`.
+    * Returns (table-relative path, partitionValues, size) per file;
+    * the log keeps the null partition's value as Hive's sentinel. */
+  private def stageFiles(df: DataFrame, dir: String, sub: String,
+                         partCols: Seq[String], split: Seq[String],
+                         prefix: String = ""): Seq[(String, Map[String, String], Long)] = {
+    val root = new Path(dir)
+    def pv(values: Seq[Option[String]]) = partCols.zip(values.map(_.getOrElse(
+      org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils.DEFAULT_PARTITION_NAME)))
+    def rel(values: Seq[Option[String]], name: String) =
+      sub + (hiveDirs(pv(values)) :+ name).mkString("/")
+    Staging.stage(df, root, split)(p => new Path(root, rel(p.values, prefix + p.name)))
+      .map(s => (rel(s.values, s.path.getName), pv(s.values).toMap, s.len))
+  }
+
+  /** The Hive path segments of (column, unescaped value) pairs. */
+  private def hiveDirs(kv: Seq[(String, String)]): Seq[String] = kv.map { case (c, v) =>
+    org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils.getPartitionPathString(c, v)
   }
 
   /** Rename `df`'s columns to the table's PHYSICAL names (and cast
@@ -2361,8 +2326,6 @@ object DeltaInterop {
     * [[AddFile]]-shaped descriptors for [[cdcJson]]. */
   private def stageChangeData(df: DataFrame, dir: String,
                               st: DeltaState): Seq[AddFile] = {
-    val spark = df.sparkSession
-    val f = fs(spark, dir)
     val (frame, partCols) =
       if (columnMappingMode(st) == "none") (df, st.partitionColumns)
       else {
@@ -2375,11 +2338,8 @@ object DeltaInterop {
         (df.select(cols.toSeq: _*),
           st.partitionColumns.map(c => physicalFieldName(st.schema(c))))
       }
-    val staging = new Path(dir, s".staging-cdc-${java.util.UUID.randomUUID().toString.take(8)}")
-    if (partCols.isEmpty) frame.write.parquet(staging.toString)
-    else frame.write.partitionBy(partCols: _*).parquet(staging.toString)
-    moveStaged(f, staging, new Path(dir, "_change_data"), partCols).map {
-      case (rel, pv, size) => AddFile(s"_change_data/$rel", pv, size, -1L, Map.empty)
+    stageFiles(frame, dir, "_change_data/", partCols, partCols).map {
+      case (rel, pv, size) => AddFile(rel, pv, size, -1L, Map.empty)
     }
   }
 
@@ -2615,19 +2575,8 @@ object DeltaInterop {
       s"compaction of a column-mapped row-tracked table at $dir is not supported")
     val (ridCol, rverCol, rtMetaActions0) = rtMaterializedCols(st0)
     val rtMetaActions = if (rt) rtMetaActions0 else Nil
-    val f = fs(spark, dir)
     def hivePath(a: AddFile): String =
-      st.partitionColumns.map(c =>
-        org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
-          .getPartitionPathString(c, a.partitionValues(c))).mkString("/")
-    // a mapped group's pv is keyed by PHYSICAL name; the path segment
-    // uses the physical key too (the layout post-rename appends write)
-    def groupRel(pv: Map[String, String]): String =
-      st.partitionColumns.map { c =>
-        val k = if (mapped) physicalFieldName(st.schema(c)) else c
-        org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
-          .getPartitionPathString(k, pv.getOrElse(k, pv(c)))
-      }.mkString("/")
+      hiveDirs(st.partitionColumns.map(c => c -> a.partitionValues(c))).mkString("/")
     val groups = st.files.groupBy(_.partitionValues)
       .map { case (_, fl) => fl.filter(_.size < smallFileBytes) }
       .filter(_.size >= 2).toSeq
@@ -2642,7 +2591,6 @@ object DeltaInterop {
         .filterNot(fd => st.partitionColumns.contains(fd.name))
         .map(fd => org.apache.spark.sql.types.StructField(
           physicalFieldName(fd), physicalType(fd.dataType), fd.nullable)))
-    val staging = new Path(dir, s".compact-${java.util.UUID.randomUUID().toString.take(8)}")
     val allHive = !mapped && (st.partitionColumns.isEmpty ||
       smalls.forall(a => a.path.startsWith(hivePath(a) + "/")))
     // rt reads pull the materialized columns when already present
@@ -2665,50 +2613,45 @@ object DeltaInterop {
       else base
     }
     val moved: Seq[(String, Map[String, String], Long)] =
-      if (st.partitionColumns.isEmpty) {
-        rtAugment(spark.read.schema(readSchema)
+      if (st.partitionColumns.isEmpty)
+        stageFiles(rtAugment(spark.read.schema(readSchema)
           .parquet(smalls.map(a => new Path(dir, a.path).toString): _*), smalls)
-          .coalesce(1).write.parquet(staging.toString)
-        moveStaged(f, staging, new Path(dir), Nil)
-      } else if (allHive) {
+          .coalesce(1), dir, "", Nil, Nil)
+      else if (allHive) {
         // one job for the whole table: partition values ride the paths,
         // the repartition sends each partition's rows to a single task
         val df = rtAugment(spark.read.option("basePath", dir).schema(readSchema)
           .parquet(smalls.map(a => new Path(dir, a.path).toString): _*), smalls)
-        df.repartition(st.partitionColumns.map(col): _*)
-          .write.partitionBy(st.partitionColumns: _*).parquet(staging.toString)
-        moveStaged(f, staging, new Path(dir), st.partitionColumns)
+        stageFiles(df.repartition(st.partitionColumns.map(col): _*), dir, "",
+          st.partitionColumns, st.partitionColumns)
       } else {
         // scattered (foreign) or mapped layout: per-group rewrite,
         // values from the log
-        groups.zipWithIndex.flatMap { case (fl, gi) =>
+        groups.flatMap { fl =>
           val pv = fl.head.partitionValues
-          val sub = new Path(staging, s"g$gi")
+          // a mapped group's pv is keyed by PHYSICAL name; the path
+          // segment uses the physical key too (the layout post-rename
+          // appends write)
+          val keyed = st.partitionColumns.map { c =>
+            val k = if (mapped) physicalFieldName(st.schema(c)) else c
+            k -> pv.getOrElse(k, pv(c))
+          }
           // uniform partitioned tables keep partition values
           // MATERIALIZED through the rewrite (the pinned read schema
           // excludes them — re-inject from the group's log values)
           def uniPv(df0: DataFrame): DataFrame =
             if (!IcebergUniform.enabled(st)) df0
-            else st.partitionColumns.foldLeft(df0) { (d, c) =>
-              val k = if (mapped) physicalFieldName(st.schema(c)) else c
-              d.withColumn(k, lit(pv.getOrElse(k, pv(c)))
-                .cast(physicalType(st.schema(c).dataType)))
+            else st.partitionColumns.zip(keyed).foldLeft(df0) { case (d, (c, (k, v))) =>
+              d.withColumn(k, lit(v).cast(physicalType(st.schema(c).dataType)))
             }
-          rtAugment(uniPv(spark.read.schema(readSchema)
+          val rel = hiveDirs(keyed).mkString("/")
+          stageFiles(rtAugment(uniPv(spark.read.schema(readSchema)
             .parquet(fl.map(a => new Path(dir, a.path).toString): _*)), fl)
-            .coalesce(1).write.parquet(sub.toString)
-          val rel = groupRel(pv)
-          f.listStatus(sub).filter(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
-            .sortBy(_.getPath.getName).map { s0 =>
-              val name = s"$rel/compact-${java.util.UUID.randomUUID().toString.take(8)}-${s0.getPath.getName}"
-              val dst = new Path(dir, name)
-              f.mkdirs(dst.getParent)
-              require(f.rename(s0.getPath, dst), s"rename failed: ${s0.getPath} -> $dst")
-              (name, pv, s0.getLen)
-            }
+            .coalesce(1), dir, s"$rel/", Nil, Nil,
+            prefix = s"compact-${java.util.UUID.randomUUID().toString.take(8)}-")
+            .map { case (name, _, len) => (name, pv, len) }
         }
       }
-    f.delete(staging, true)
     val actions = scala.collection.mutable.ArrayBuffer.empty[String]
     val newAdds0 = Par.map(moved.toSeq) { case (rel, pv, size) =>
       footerAdd(spark, new Path(dir, rel), rel, pv, size)
@@ -3036,6 +2979,7 @@ object DeltaInterop {
     // dirs): CDC files whose commit JSON aged out reclaim like data files
     val cd = new Path(dir, "_change_data")
     if (f.exists(cd)) walk(cd, List("_change_data"))
+    Staging.sweep(f, new Path(dir), retainMillis) // not data: not counted
     // uniform tables: expire the Iceberg mirror's snapshots to the
     // same horizon — a vacuumed file must not stay reachable through
     // a live Iceberg snapshot. Side effect only: the returned reclaim
@@ -3220,6 +3164,7 @@ object DeltaInterop {
         }
       }
     vacuumPersistedLevels.foreach(_.unpersist(blocking = false))
+    Staging.sweep(f, new Path(dir), retainMillis) // not data: not counted
     // mirror expiry is a side effect — data-file reclaim count only
     if (uniformOn) IcebergUniform.expireSnapshots(spark, dir, retainMillis)
     acc.value.toInt
@@ -3228,11 +3173,11 @@ object DeltaInterop {
   // ---- internals ----
 
   /** Atomic put-if-absent commit of one log version. The actions are
-    * fully written to a hidden temp file first, then RENAMED into the
-    * final `%020d.json` name — a concurrent reader never sees a
-    * truncated commit (create-then-stream would expose partial bytes),
-    * and rename-without-overwrite keeps the put-if-absent conflict
-    * semantics on HDFS and local filesystems. */
+    * fully written to a hidden temp file first, then published under
+    * the final `%020d.json` name by [[Staging.putIfAbsent]] — a
+    * concurrent reader never sees a truncated commit (create-then-
+    * stream would expose partial bytes), and of two writers racing for
+    * one version exactly one wins, on HDFS and local filesystems. */
   private[graft] def commit(spark: SparkSession, dir: String, v: Long,
                          actions: Seq[String], op: String = "WRITE"): Long = {
     val f = fs(spark, dir)
@@ -3265,51 +3210,13 @@ object DeltaInterop {
     val out = f.create(tmp, false)
     try out.write((all.mkString("\n") + "\n").getBytes("UTF-8"))
     finally out.close()
-    // rename WITHOUT overwrite: fails iff the version already exists
-    val won = !f.exists(target) && f.rename(tmp, target)
-    if (!won) {
-      f.delete(tmp, false)
+    if (!Staging.putIfAbsent(f, tmp, target))
       throw new IllegalStateException(
         s"concurrent Delta commit at v=$v under $dir")
-    }
     // uniform tables mirror every commit as an Iceberg snapshot —
     // one marker-file existence check for everything else
     IcebergUniform.maybeSync(spark, dir, v, all)
     v
-  }
-
-  /** Move every staged data file under the table root, preserving the
-    * Hive-style partition subpath. Returns (relativePath, partitionValues,
-    * size) per file. */
-  private def moveStaged(f: FileSystem, staging: Path, root: Path,
-                         partCols: Seq[String]): Seq[(String, Map[String, String], Long)] = {
-    val out = scala.collection.mutable.ArrayBuffer.empty[(String, Map[String, String], Long)]
-    def walk(p: Path, relParts: List[String]): Unit =
-      f.listStatus(p).sortBy(_.getPath.getName).foreach { st =>
-        val name = st.getPath.getName
-        if (st.isDirectory) walk(st.getPath, relParts :+ name)
-        else if (st.isFile && name.endsWith(".parquet")) {
-          val rel = (relParts :+ name).mkString("/")
-          val dst = new Path(root, rel)
-          f.mkdirs(dst.getParent)
-          require(f.rename(st.getPath, dst), s"rename failed: ${st.getPath} -> $dst")
-          // unescape the Hive path segment before recording it as a
-          // partitionValue — the log stores LOGICAL values (`a b`, not
-          // `a%20b`), and prunedFiles matches equality on logical values
-          val pv = relParts.flatMap { seg =>
-            val i = seg.indexOf('=')
-            if (i > 0) Some(seg.substring(0, i) ->
-              org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
-                .unescapePathName(seg.substring(i + 1)))
-            else None
-          }.toMap
-          require(partCols.forall(pv.contains), s"staged path $rel missing partition values")
-          out += ((rel, partCols.map(c => c -> pv(c)).toMap, st.getLen))
-        }
-      }
-    walk(staging, Nil)
-    f.delete(staging, true)
-    out.toSeq
   }
 
   /** An add action for one data file, with numRecords and min/max
@@ -4192,19 +4099,14 @@ object DeltaInterop {
     // jobs over the pinned hits — overlap them (guide §2.6; empty hits
     // produce an empty descriptor array and zero change files, so the
     // no-op return below stays a no-op)
-    var perFile: Array[(String, String, Long, Long)] = Array.empty
-    var cdcs: Seq[AddFile] = Nil
-    if (withCdf)
-      Par.foreach(Seq(true, false), 2) {
-        case true =>
-          perFile = dvDescriptorsFromHits(spark, dir, candidates, hits).collect()
-        case false =>
-          cdcs = stageChangeData( // the pinned hits ARE the newly-deleted rows
+    def descriptors() = dvDescriptorsFromHits(spark, dir, candidates, hits).collect()
+    val (perFile, cdcs) =
+      if (withCdf)
+        Par.both(descriptors(),
+          stageChangeData( // the pinned hits ARE the newly-deleted rows
             hits.select(st.schema.fieldNames.map(col) :+ lit("delete").as("_change_type"): _*),
-            dir, st)
-      }
-    else
-      perFile = dvDescriptorsFromHits(spark, dir, candidates, hits).collect()
+            dir, st))
+      else (descriptors(), Nil)
     if (perFile.isEmpty) return (st.version, 0, 0L)
     val idx = qualifiedIndex(spark, dir, candidates)
     val removes = Seq.newBuilder[String]
@@ -4276,14 +4178,9 @@ object DeltaInterop {
     // zero-record files), so the no-op return below stays a no-op.
     // Postimage files hold only logically MODIFIED rows — the spec's
     // fresh-row-id case; the DV'd originals keep their ids via copy.
-    var perFile: Array[(String, String, Long, Long)] = Array.empty
-    var staged: Seq[AddFile] = Nil
-    Par.foreach(Seq(true, false), 2) {
-      case true =>
-        perFile = dvDescriptorsFromHits(spark, dir, candidates, hits).collect()
-      case false =>
-        staged = stageForTable(postimage, dir, st)
-    }
+    val (perFile, staged) = Par.both(
+      dvDescriptorsFromHits(spark, dir, candidates, hits).collect(),
+      stageForTable(postimage, dir, st))
     if (perFile.isEmpty) return (st.version, 0, 0L)
     val (newAdds, rtActions) =
       if (rowTrackingEnabled(st)) {

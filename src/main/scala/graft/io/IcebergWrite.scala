@@ -1,6 +1,7 @@
 package graft.io
 
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
+import graft.io.lake.Staging
 import org.apache.avro.generic.GenericRecord
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -99,42 +100,12 @@ object IcebergWrite {
 
   private def canonPath(p: String): String = p.replaceFirst("^file:/+", "/")
 
-  /** Hive/Spark `unescapePathName` semantics for staged partition
-    * directory names: ONLY `%XX` escapes decode. Spark's
-    * escapePathName never escapes `+`, so a literal `+` in a string
-    * partition value must survive — `java.net.URLDecoder` would turn
-    * it into a space, corrupting the manifest field summary and
-    * letting manifest-level skipping prune the manifest that actually
-    * holds the rows. */
-  private def unescapePathName(s: String): String = {
-    val sb = new java.lang.StringBuilder(s.length)
-    var i = 0
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (c == '%' && i + 2 < s.length) {
-        val code =
-          try Integer.parseInt(s.substring(i + 1, i + 3), 16)
-          catch { case _: NumberFormatException => -1 }
-        if (code >= 0) { sb.append(code.toChar); i += 3 }
-        else { sb.append(c); i += 1 }
-      } else { sb.append(c); i += 1 }
-    }
-    sb.toString
-  }
-
-  /** Decode one staged `<prefix>=<v>` directory name to its typed
-    * transformed partition value; None = the null partition (Spark's
-    * default-partition sentinel). Shared by [[appendPartitioned]] and
-    * [[compact]]'s partition-preserving rewrite. */
-  private def decodePartValue(dirName: String, prefix: String,
-                              resultDt: DataType): Option[Any] = {
-    val raw = unescapePathName(dirName.stripPrefix(s"$prefix="))
-    if (raw == "__HIVE_DEFAULT_PARTITION__") None
-    else Some(resultDt match {
-      case IntegerType => raw.toInt
-      case LongType => raw.toLong
-      case _ => raw
-    })
+  /** A staged partition directory's value (unescaped by
+    * [[Staging.stage]]) typed by its transform's result type. */
+  private def partValue(raw: String, resultDt: DataType): Any = resultDt match {
+    case IntegerType => raw.toInt
+    case LongType => raw.toLong
+    case _ => raw
   }
 
   private val BucketRe = """bucket\[(\d+)\]""".r
@@ -168,20 +139,31 @@ object IcebergWrite {
       case t => s"${c}_$t"
     }
 
+  /** A fresh data-file name under `data/`. */
+  private def dataFile(root: Path, prefix: String = ""): Path =
+    new Path(root, s"data/$prefix${java.util.UUID.randomUUID()}.parquet")
+
+  /** [[Staging.stage]] `df` into fresh [[dataFile]]s: (path, length). */
+  private def stageData(df: DataFrame, root: Path, prefix: String = ""): Seq[(Path, Long)] =
+    Staging.stage(df, root)(_ => dataFile(root, prefix)).map(s => (s.path, s.len))
+
+  /** [[Staging.dropEmpty]] over staged (path, length) pairs, with
+    * `records` the caller's footer count by canonical path. */
+  private def dropEmpty(f: FileSystem, staged: Seq[(Path, Long)])(
+      records: String => Long): Seq[(Path, Long)] =
+    Staging.dropEmpty(f, staged)(_._1, p => records(canonPath(p._1.toString)))
+
   /** Stage `df` hive-partitioned on its TRANSFORMED partition-value
     * columns (`_graft_p0..k`, computed by the codegen
-    * [[graft.functions.expressions.IcebergPartitionValue]]), rename
-    * every leaf into `data/` under fresh unique names, and return one
-    * row per partition-value TUPLE (decoded per field; None = the
-    * null partition) with its files — ONE distributed write job
-    * regardless of how many partition values exist. */
-  private def stagePartitioned(spark: SparkSession, f: FileSystem, root: Path,
-      dfWithIds: DataFrame, parts: Seq[(String, String)],
-      resultDts: Seq[DataType],
+    * [[graft.functions.expressions.IcebergPartitionValue]]) into fresh
+    * [[dataFile]]s, and return one row per partition-value TUPLE
+    * (typed per field; None = the null partition) with its files —
+    * ONE distributed write job regardless of how many partition values
+    * exist. */
+  private def stagePartitioned(root: Path, dfWithIds: DataFrame,
+      parts: Seq[(String, String)], resultDts: Seq[DataType],
       clusterBySpec: Boolean = false): Seq[(Seq[Option[Any]], Seq[(Path, Long)])] = {
     import org.apache.spark.sql.functions.col
-    val staging = new Path(root,
-      s".staging-${java.util.UUID.randomUUID().toString.take(8)}")
     val pNames = parts.indices.map(i => s"_graft_p$i")
     val staged0 = parts.zipWithIndex.foldLeft(dfWithIds) {
       case (d, ((c, transform), i)) =>
@@ -200,28 +182,12 @@ object IcebergWrite {
     // serialize each tuple's write into a single task).
     val staged = if (clusterBySpec) staged0.repartition(pNames.map(col): _*)
       else staged0
-    staged.write.partitionBy(pNames: _*).parquet(staging.toString)
-    def walk(d: Path, level: Int, acc: Seq[Option[Any]])
-        : Seq[(Seq[Option[Any]], Seq[(Path, Long)])] =
-      if (level == parts.size) {
-        val files = f.listStatus(d)
-          .filter(_.getPath.getName.endsWith(".parquet"))
-          .map { st =>
-            val dst = new Path(root, s"data/${java.util.UUID.randomUUID()}.parquet")
-            require(f.rename(st.getPath, dst), s"rename ${st.getPath} failed")
-            (dst, f.getFileStatus(dst).getLen)
-          }.toSeq
-        Seq((acc, files))
-      } else f.listStatus(d)
-        .filter(st => st.isDirectory &&
-          st.getPath.getName.startsWith(s"${pNames(level)}="))
-        .sortBy(_.getPath.getName)
-        .flatMap(sub => walk(sub.getPath, level + 1, acc :+
-          decodePartValue(sub.getPath.getName, pNames(level), resultDts(level))))
-        .toSeq
-    val out = walk(staging, 0, Nil)
-    f.delete(staging, true)
-    out
+    val files = Staging.stage(staged, root, pNames)(_ => dataFile(root))
+    val byTuple = files.groupBy(_.values)
+    files.map(_.values).distinct.map { vals =>
+      (vals.zip(resultDts).map { case (v, dt) => v.map(partValue(_, dt)) },
+        byTuple(vals).map(s => (s.path, s.len)))
+    }
   }
 
   /** The per-field manifest-list summary of one partition-value
@@ -519,18 +485,7 @@ object IcebergWrite {
       ml.put("timestamp-ms", prevUpdated)
       ml.put("metadata-file",
         new Path(root, s"metadata/v$base.metadata.json").toString)
-      val target = new Path(root, s"metadata/v${base + 1}.metadata.json")
-      val tmp = new Path(root,
-        s"metadata/.tmp-v${base + 1}-${java.util.UUID.randomUUID().toString.take(8)}.json")
-      val out = f.create(tmp, false)
-      try out.write(M.writerWithDefaultPrettyPrinter().writeValueAsBytes(n))
-      finally out.close()
-      if (putIfAbsent(f, tmp, target)) {
-        val hint = f.create(new Path(root, "metadata/version-hint.text"), true)
-        try hint.write(String.valueOf(base + 1).getBytes) finally hint.close()
-        return (base + 1).toLong
-      }
-      f.delete(tmp, false)
+      if (publish(f, root, base, n)) return (base + 1).toLong
       attempt += 1
       require(attempt < MaxCommitRetries,
         s"$what on $dir lost $MaxCommitRetries version races")
@@ -653,7 +608,7 @@ object IcebergWrite {
     // bounds). Directory names carry the TRANSFORMED values, typed by
     // each transform's result type.
     val filesOfValue: Seq[(Seq[Option[Any]], Seq[(Path, Long)])] =
-      stagePartitioned(spark, f, root, withFieldIds(df, idsByName),
+      stagePartitioned(root, withFieldIds(df, idsByName),
         parts, resultDts, clusterBySpec)
     val allPaths = filesOfValue.flatMap(_._2.map(_._1.toString))
     val stats =
@@ -693,9 +648,7 @@ object IcebergWrite {
         NewManifest(mp, partitioned = true,
           Some(summariesOf(vals, resultDts)), entries = entries)
       }
-      filesOfValue.flatMap(_._2).foreach { case (pp, _) =>
-        if (!stats.contains(canonPath(pp.toString))) f.delete(pp, false)
-      }
+      dropEmpty(f, filesOfValue.flatMap(_._2))(stats.get(_).fold(0L)(_._1))
       try {
         onBeforeCommit()
         return commitMeta(spark, f, root, base, df.schema, snapshotId, seqNo,
@@ -760,20 +713,10 @@ object IcebergWrite {
         col("_graft_pos").cast(LongType).as("pos", new MetadataBuilder()
           .putLong("parquet.field.id", 2147483545L).build()))
     spark.conf.set("spark.sql.parquet.fieldId.write.enabled", "true")
-    val staging = new Path(root, s".staging-${java.util.UUID.randomUUID().toString.take(8)}")
-    hits.write.parquet(staging.toString)
-    val staged = f.listStatus(staging).filter(_.getPath.getName.endsWith(".parquet"))
-      .map { st =>
-        val dst = new Path(root, s"data/delete-${java.util.UUID.randomUUID()}.parquet")
-        require(f.rename(st.getPath, dst), s"rename ${st.getPath} failed")
-        (dst, f.getFileStatus(dst).getLen)
-      }.toSeq
-    f.delete(staging, true)
+    val staged = stageData(hits, root, "delete-")
     // per-file row counts from the footers (no job); zero-record files drop
     val counts = rowCounts(spark, staged.map(_._1.toString))
-    val (delFiles, empties) =
-      staged.partition(p => counts.contains(canonPath(p._1.toString)))
-    empties.foreach { case (p, _) => f.delete(p, false) }
+    val delFiles = dropEmpty(f, staged)(counts.getOrElse(_, 0L))
     if (delFiles.isEmpty) return (currentSnap(), 0L)
     val deleted = counts.values.sum
     // the data files these position deletes reference (file-count
@@ -1103,19 +1046,6 @@ object IcebergWrite {
       .map(headIdOf).getOrElse(-1L)
     spark.conf.set("spark.sql.parquet.fieldId.write.enabled", "true")
 
-    def stage(df: DataFrame, prefix: String): Seq[(Path, Long)] = {
-      val staging = new Path(root,
-        s".staging-${java.util.UUID.randomUUID().toString.take(8)}")
-      df.write.parquet(staging.toString)
-      val out = f.listStatus(staging).filter(_.getPath.getName.endsWith(".parquet"))
-        .map { st =>
-          val dst = new Path(root, s"data/$prefix${java.util.UUID.randomUUID()}.parquet")
-          require(f.rename(st.getPath, dst), s"rename ${st.getPath} failed")
-          (dst, f.getFileStatus(dst).getLen)
-        }.toSeq
-      f.delete(staging, true)
-      out
-    }
     // the delete side: parquet position-delete files, or one Puffin of
     // per-file DV blobs. The distributed bitmap fold runs ONCE; the
     // puffin itself (our positions unioned with the head's live DVs)
@@ -1174,33 +1104,22 @@ object IcebergWrite {
       require((df.columns.toSet -- linCols.keySet) == idsByName.keySet,
         s"$what postimage columns ${df.columns.sorted.toSeq} must match " +
         s"current schema ${idsByName.keys.toSeq.sorted}")
-      stage(withFieldIds(df, idsByName ++ linCols), "")
+      stageData(withFieldIds(df, idsByName ++ linCols), root)
     }
     // the delete side and the append side are INDEPENDENT staging
     // writes into distinct hidden dirs (both read the checkpointed
     // hits) — overlap them on two driver threads (guide §2.6) instead
     // of paying two full job latencies back to back per merge/update
-    var stagedDel: Seq[(Path, Long)] = Nil
-    var stagedApp: Seq[(Path, Long)] = Nil
-    if (!asDv && appendDf.isDefined)
-      graft.pipeline.Par.foreach(Seq(true, false), 2) {
-        case true  => stagedDel = stage(positions, "delete-")
-        case false => stagedApp = stageAppSide()
-      }
-    else {
-      stagedDel = if (asDv) Nil else stage(positions, "delete-")
-      stagedApp = stageAppSide()
-    }
+    val (stagedDel, stagedApp) =
+      if (!asDv && appendDf.isDefined)
+        graft.pipeline.Par.both(stageData(positions, root, "delete-"), stageAppSide())
+      else (if (asDv) Nil else stageData(positions, root, "delete-"), stageAppSide())
     val delCounts = rowCounts(spark, stagedDel.map(_._1.toString))
-    val (delFiles, delEmpties) =
-      stagedDel.partition(p => delCounts.contains(canonPath(p._1.toString)))
-    delEmpties.foreach { case (p, _) => f.delete(p, false) }
+    val delFiles = dropEmpty(f, stagedDel)(delCounts.getOrElse(_, 0L))
     val appStats =
       if (stagedApp.isEmpty) Map.empty[String, (Long, Map[Int, (Array[Byte], Array[Byte])])]
       else allFileStats(spark, stagedApp.map(_._1.toString), idsByName)
-    val (appFiles, appEmpties) =
-      stagedApp.partition(p => appStats.contains(canonPath(p._1.toString)))
-    appEmpties.foreach { case (p, _) => f.delete(p, false) }
+    val appFiles = dropEmpty(f, stagedApp)(appStats.get(_).fold(0L)(_._1))
 
     if (delFiles.isEmpty && dvSide.isEmpty && appFiles.isEmpty)
       return (currentSnap(), 0L, 0L)
@@ -1453,17 +1372,9 @@ object IcebergWrite {
       s"table schema ${idsByName.keys.toSeq.sorted.mkString(",")}")
     val equalityIds = keys.columns.map(idsByName).toSeq
     spark.conf.set("spark.sql.parquet.fieldId.write.enabled", "true")
-    val staging = new Path(root,
-      s".staging-${java.util.UUID.randomUUID().toString.take(8)}")
-    withFieldIds(keys, idsByName.view.filterKeys(keys.columns.contains).toMap)
-      .write.parquet(staging.toString)
-    val staged = f.listStatus(staging).filter(_.getPath.getName.endsWith(".parquet"))
-      .map { st =>
-        val dst = new Path(root, s"data/eqdelete-${java.util.UUID.randomUUID()}.parquet")
-        require(f.rename(st.getPath, dst), s"rename ${st.getPath} failed")
-        (dst, f.getFileStatus(dst).getLen)
-      }.toSeq
-    f.delete(staging, true)
+    val staged = stageData(
+      withFieldIds(keys, idsByName.view.filterKeys(keys.columns.contains).toMap),
+      root, "eqdelete-")
     // counts AND key-column bounds in one grouped job: the bounds let
     // compact (and bound-aware readers) prune data files whose key
     // ranges provably exclude every deleted tuple
@@ -1471,9 +1382,7 @@ object IcebergWrite {
     val stats: Map[String, (Long, Map[Int, (Array[Byte], Array[Byte])])] =
       if (staged.isEmpty) Map.empty
       else allFileStats(spark, staged.map(_._1.toString), keyIds)
-    val (delFiles, empties) =
-      staged.partition(p => stats.contains(canonPath(p._1.toString)))
-    empties.foreach { case (p, _) => f.delete(p, false) }
+    val delFiles = dropEmpty(f, staged)(stats.get(_).fold(0L)(_._1))
     if (delFiles.isEmpty)
       return (readMeta(f, root, currentVersion(f, root))
         .map(_.path("current-snapshot-id").asLong(-1L)).getOrElse(-1L), 0L)
@@ -2014,19 +1923,29 @@ object IcebergWrite {
       "metadata-log").addObject()
     ml.put("timestamp-ms", prevUpdated)
     ml.put("metadata-file", new Path(root, s"metadata/v$base.metadata.json").toString)
-    val target = new Path(root, s"metadata/v${base + 1}.metadata.json")
+    if (!publish(f, root, base, n))
+      throw new IllegalStateException(
+        s"$what on $root raced a concurrent commit — re-run")
+  }
+
+  /** Publish `n` as `v<base+1>.metadata.json`: written in full to a
+    * hidden temp, then [[Staging.putIfAbsent]] — a reader never sees
+    * partial bytes, and a concurrent writer that got there first wins
+    * (its version is never replaced). On success the advisory
+    * `version-hint.text` follows (readers fall back to the listing;
+    * last wins). False = the version was taken. */
+  private def publish(f: FileSystem, root: Path, base: Int, n: JsonNode): Boolean = {
     val tmp = new Path(root,
       s"metadata/.tmp-v${base + 1}-${java.util.UUID.randomUUID().toString.take(8)}.json")
     val out = f.create(tmp, false)
     try out.write(M.writerWithDefaultPrettyPrinter().writeValueAsBytes(n))
     finally out.close()
-    if (!putIfAbsent(f, tmp, target)) {
-      f.delete(tmp, false)
-      throw new IllegalStateException(
-        s"$what on $root raced a concurrent commit — re-run")
+    val won = Staging.putIfAbsent(f, tmp, new Path(root, s"metadata/v${base + 1}.metadata.json"))
+    if (won) {
+      val hint = f.create(new Path(root, "metadata/version-hint.text"), true)
+      try hint.write(String.valueOf(base + 1).getBytes) finally hint.close()
     }
-    val hint = f.create(new Path(root, "metadata/version-hint.text"), true)
-    try hint.write(String.valueOf(base + 1).getBytes) finally hint.close()
+    won
   }
 
   // ─────────────────── table maintenance ───────────────────
@@ -2232,21 +2151,10 @@ object IcebergWrite {
     val stagedByValue: Seq[(Option[Seq[Option[Any]]], Seq[(Path, Long)])] =
       rewriteSpec match {
         case None =>
-          val staging = new Path(root,
-            s".staging-${java.util.UUID.randomUUID().toString.take(8)}")
-          withFieldIds(rows, idsByName ++ lineageIds(rows)).repartition(nOut)
-            .write.parquet(staging.toString)
-          val files = f.listStatus(staging)
-            .filter(_.getPath.getName.endsWith(".parquet"))
-            .map { st =>
-              val dst = new Path(root, s"data/${java.util.UUID.randomUUID()}.parquet")
-              require(f.rename(st.getPath, dst), s"rename ${st.getPath} failed")
-              (dst, f.getFileStatus(dst).getLen)
-            }.toSeq
-          f.delete(staging, true)
-          Seq((None, files))
+          Seq((None, stageData(
+            withFieldIds(rows, idsByName ++ lineageIds(rows)).repartition(nOut), root)))
         case Some(fields) =>
-          stagePartitioned(spark, f, root,
+          stagePartitioned(root,
             withFieldIds(rows, idsByName ++ lineageIds(rows)),
             fields, rewriteResultDts)
             .map { case (vals, files) =>
@@ -2256,9 +2164,7 @@ object IcebergWrite {
     val stats =
       if (staged.isEmpty) Map.empty[String, (Long, Map[Int, (Array[Byte], Array[Byte])])]
       else allFileStats(spark, staged.map(_._1.toString), idsByName)
-    stagedByValue.flatMap(_._2).foreach { case (p, _) =>
-      if (!stats.contains(canonPath(p.toString))) f.delete(p, false)
-    }
+    dropEmpty(f, staged)(stats.get(_).fold(0L)(_._1))
 
     val snapshotId = freshSnapshotId(f, root, v0)
     val seqNo = m0.path("last-sequence-number").asLong(0L) + 1L
@@ -2407,23 +2313,11 @@ object IcebergWrite {
       .repartitionByRange(nOut, col("_graft_z"))
       .sortWithinPartitions("_graft_z")
       .drop("_graft_z")
-    val staging = new Path(root,
-      s".staging-${java.util.UUID.randomUUID().toString.take(8)}")
-    withFieldIds(clustered, idsByName ++ lineageIds(rows))
-      .write.parquet(staging.toString)
-    val staged = f.listStatus(staging).filter(_.getPath.getName.endsWith(".parquet"))
-      .map { st =>
-        val dst = new Path(root, s"data/${java.util.UUID.randomUUID()}.parquet")
-        require(f.rename(st.getPath, dst), s"rename ${st.getPath} failed")
-        (dst, f.getFileStatus(dst).getLen)
-      }.toSeq
-    f.delete(staging, true)
+    val staged = stageData(withFieldIds(clustered, idsByName ++ lineageIds(rows)), root)
     val stats =
       if (staged.isEmpty) Map.empty[String, (Long, Map[Int, (Array[Byte], Array[Byte])])]
       else allFileStats(spark, staged.map(_._1.toString), idsByName)
-    val live = staged.filter(p => stats.contains(canonPath(p._1.toString)))
-    staged.filterNot(p => stats.contains(canonPath(p._1.toString)))
-      .foreach { case (p, _) => f.delete(p, false) }
+    val live = dropEmpty(f, staged)(stats.get(_).fold(0L)(_._1))
     val snapshotId = freshSnapshotId(f, root, v0)
     val seqNo = m0.path("last-sequence-number").asLong(0L) + 1L
     val lin0 = nextRowIdOf(Some(m0))
@@ -2845,19 +2739,12 @@ object IcebergWrite {
             .putLong("parquet.field.id", 2147483545L).build()))
         .distinct()
       spark.conf.set("spark.sql.parquet.fieldId.write.enabled", "true")
-      val staging = new Path(root,
-        s".staging-${java.util.UUID.randomUUID().toString.take(8)}")
-      rows.coalesce(1).write.parquet(staging.toString)
-      val part = f.listStatus(staging)
-        .filter(_.getPath.getName.endsWith(".parquet")).head.getPath
-      val dst = new Path(root, s"data/delete-${java.util.UUID.randomUUID()}.parquet")
-      require(f.rename(part, dst), s"rename $part failed")
-      f.delete(staging, true)
+      val dst = dataFile(root, "delete-")
+      val len = Staging.stageOne(rows, root, dst)
       newFiles += dst
       val n = FooterStats.read(spark.sparkContext.hadoopConfiguration, dst).records
       val top = poss.maxBy(_.seq)
-      entries += IcebergFormat.entry(1, dst.toString, n,
-        f.getFileStatus(dst).getLen, top.snap, top.seq, status = 0)
+      entries += IcebergFormat.entry(1, dst.toString, n, len, top.snap, top.seq, status = 0)
     }
     // equality deletes carry verbatim (their sequence SEMANTICS forbid
     // merging — raising a seq would widen what they mask)
@@ -3247,15 +3134,9 @@ object IcebergWrite {
         org.apache.spark.sql.Row(tuple: _*), specId, n, files.toInt, sz)
     }.asJava
     val df = spark.createDataFrame(rowsJ, outSchema)
-    val staging = new Path(root,
-      s".staging-${java.util.UUID.randomUUID().toString.take(8)}")
-    df.coalesce(1).write.parquet(staging.toString)
-    val part = f.listStatus(staging)
-      .filter(_.getPath.getName.endsWith(".parquet")).head.getPath
     val statsP = new Path(root,
       s"metadata/partition-stats-$curId-${java.util.UUID.randomUUID().toString.take(8)}.parquet")
-    require(f.rename(part, statsP), s"rename $part failed")
-    f.delete(staging, true)
+    val statsLen = Staging.stageOne(df, root, statsP)
     val n = m0.deepCopy[JsonNode]().asInstanceOf[ObjNode]
     val prior = Option(n.get("partition-statistics")).toSeq
       .flatMap(_.elements().asScala.toSeq)
@@ -3265,7 +3146,7 @@ object IcebergWrite {
     val e = arr.addObject()
     e.put("snapshot-id", curId)
     e.put("statistics-path", statsP.toString)
-    e.put("file-size-in-bytes", f.getFileStatus(statsP).getLen)
+    e.put("file-size-in-bytes", statsLen)
     try commitMetadataOnly(f, root, v0, m0, n, "analyzePartitions")
     catch { case e: IllegalStateException =>
       f.delete(statsP, false); throw e }
@@ -3273,15 +3154,6 @@ object IcebergWrite {
       new Path(resolveU(s0.path("statistics-path").asText)), false))
     (curId, perTuple.length.toLong)
   }
-
-  /** Crash-orphan age floor: list-based deletion (files NO snapshot —
-    * kept or expired — references) only touches files at least this
-    * old, independent of how aggressive `retainMillis` is. A RETAIN 0
-    * expiry must never eat a concurrent in-flight writer's freshly
-    * renamed data files, just-authored manifests, or active
-    * `.staging-*` directory — those are all seconds old; genuine crash
-    * debris is hours old. */
-  val OrphanMinAgeMillis: Long = 3600000L
 
   /** SNAPSHOT EXPIRY + file reclaim for native Iceberg tables — the
     * maintenance that keeps a long-running [[appendOnce]] sink's
@@ -3295,9 +3167,11 @@ object IcebergWrite {
     * metadata JSONs below the previous version drop (previous kept as
     * the undo step) and their dangling `metadata-log` entries prune
     * with them; crash debris no snapshot ever referenced (lost-race
-    * leftovers, `.staging-*` dirs) sweeps only past the
-    * [[OrphanMinAgeMillis]] age floor. Time travel to an expired
-    * snapshot fails loudly ("snapshot not found"). Driver work is
+    * leftovers, abandoned staging dirs) sweeps only past the
+    * [[Staging.OrphanMinAgeMillis]] age floor: a RETAIN 0 expiry must
+    * never eat a concurrent in-flight writer's freshly moved data
+    * files, just-authored manifests, or active staging directory.
+    * Time travel to an expired snapshot fails loudly ("snapshot not found"). Driver work is
     * metadata- and file-count-bounded.
     * Returns (snapshotsExpired, filesReclaimed). */
   def expireSnapshots(spark: SparkSession, dir: String,
@@ -3313,18 +3187,8 @@ object IcebergWrite {
     val cutoff = now - retainMillis
     // list-based deletion is gated on BOTH horizons: old enough to
     // expire AND old enough that no in-flight writer can own it
-    val orphanCutoff = now - math.max(retainMillis, OrphanMinAgeMillis)
-    var reclaimed = 0
-    // crash-window sweep: a failed write's .staging-* dir has no
-    // committed reference, ever — reclaim once it is older than the
-    // orphan horizon (an in-flight writer's staging is younger; a
-    // RETAIN 0 expiry must not eat it)
-    f.listStatus(root).foreach { st =>
-      if (st.isDirectory && st.getPath.getName.startsWith(".staging-") &&
-          st.getModificationTime < orphanCutoff) {
-        if (f.delete(st.getPath, true)) reclaimed += 1
-      }
-    }
+    val orphanCutoff = now - math.max(retainMillis, Staging.OrphanMinAgeMillis)
+    var reclaimed = Staging.sweep(f, root, retainMillis)
     val curId = m0.path("current-snapshot-id").asLong(-1L)
     val snaps = m0.path("snapshots").elements().asScala.toSeq
     val snapTs: Map[Long, Long] = snaps.map(s0 =>
@@ -3503,19 +3367,9 @@ object IcebergWrite {
       "metadata-log").addObject()
     ml.put("timestamp-ms", prevUpdated)
     ml.put("metadata-file", new Path(root, s"metadata/v$v0.metadata.json").toString)
-    val target = new Path(root, s"metadata/v${v0 + 1}.metadata.json")
-    val tmp = new Path(root,
-      s"metadata/.tmp-v${v0 + 1}-${java.util.UUID.randomUUID().toString.take(8)}.json")
-    val out = f.create(tmp, false)
-    try out.write(M.writerWithDefaultPrettyPrinter().writeValueAsBytes(n))
-    finally out.close()
-    if (!putIfAbsent(f, tmp, target)) {
-      f.delete(tmp, false)
+    if (!publish(f, root, v0, n))
       throw new IllegalStateException(
         s"expireSnapshots on $dir raced a concurrent commit — re-run")
-    }
-    val hint = f.create(new Path(root, "metadata/version-hint.text"), true)
-    try hint.write(String.valueOf(v0 + 1).getBytes) finally hint.close()
     droppedStats.result().foreach { p => if (f.delete(p, false)) reclaimed += 1 }
 
     // reachability walk: (manifest-list + manifest + data/puffin
@@ -3720,7 +3574,6 @@ object IcebergWrite {
     // under fresh unique names — invisible until the metadata commit
     // references them, reclaimable if the commit never lands. A sorted
     // write stages through ONE global range-partitioned sort.
-    val staging = new Path(root, s".staging-${java.util.UUID.randomUUID().toString.take(8)}")
     val toStage =
       if (sortBy.isEmpty) df
       else {
@@ -3728,23 +3581,13 @@ object IcebergWrite {
         df.sort(sortBy.map { case (c, asc) =>
           if (asc) col(c).asc_nulls_first else col(c).desc_nulls_last }: _*)
       }
-    withFieldIds(toStage, idsByName).write.parquet(staging.toString)
-    val staged = f.listStatus(staging).filter(_.getPath.getName.endsWith(".parquet"))
-      .map { st =>
-        val dst = new Path(root, s"data/${java.util.UUID.randomUUID()}.parquet")
-        require(f.rename(st.getPath, dst), s"rename ${st.getPath} failed")
-        (dst, f.getFileStatus(dst).getLen)
-      }.toSeq
-    f.delete(staging, true)
+    val staged = stageData(withFieldIds(toStage, idsByName), root)
     val stats =
       if (staged.isEmpty) Map.empty[String, (Long, Map[Int, (Array[Byte], Array[Byte])])]
       else allFileStats(spark, staged.map(_._1.toString), idsByName)
     // a ZERO-record staged file (empty write partition) has no stats
-    // group — never manifest it; delete it like the Delta stageData
-    // path does
-    val (dataFiles, empties) =
-      staged.partition(p => stats.contains(canonPath(p._1.toString)))
-    empties.foreach { case (p, _) => f.delete(p, false) }
+    // group — never manifest it
+    val dataFiles = dropEmpty(f, staged)(stats.get(_).fold(0L)(_._1))
 
     val sortFieldIds = sortBy.map { case (c, asc) => (idsByName(c), asc) }
     var attempt = 0
@@ -3818,23 +3661,6 @@ object IcebergWrite {
     while (prior.contains(id) || id <= 0) id += 1
     id
   }
-
-  /** PUT-IF-ABSENT commit of a fully-written temp file: rename WITHOUT
-    * overwrite through FileContext (Options.Rename.NONE — fails on an
-    * existing destination instead of clobbering it, HadoopTableOperations'
-    * commit protocol; a bare FileSystem.rename on LocalFileSystem has
-    * POSIX semantics and would silently replace a concurrent winner's
-    * already-committed version). */
-  private def putIfAbsent(f: FileSystem, tmp: Path, target: Path): Boolean =
-    try {
-      val fc = org.apache.hadoop.fs.FileContext.getFileContext(
-        target.toUri, f.getConf)
-      fc.rename(fc.makeQualified(tmp), fc.makeQualified(target))
-      true
-    } catch {
-      case _: org.apache.hadoop.fs.FileAlreadyExistsException => false
-      case e: java.io.IOException if f.exists(target) => false
-    }
 
   /** Author `v<base+1>.metadata.json` + the snapshot's manifest list and
     * commit by put-if-absent rename; throws ConcurrentModificationException
@@ -4269,24 +4095,11 @@ object IcebergWrite {
         new Path(root, s"metadata/v$base.metadata.json").toString)
     }
 
-    // THE COMMIT: full write to a hidden temp, then put-if-absent
-    // RENAME into the next metadata version — a reader never sees
-    // partial bytes, and the rename FAILS when a concurrent writer
-    // got there first (never truncates the winner's version)
-    val target = new Path(root, s"metadata/v${base + 1}.metadata.json")
-    val tmp = new Path(root,
-      s"metadata/.tmp-v${base + 1}-${java.util.UUID.randomUUID().toString.take(8)}.json")
-    val out = f.create(tmp, false)
-    try out.write(M.writerWithDefaultPrettyPrinter().writeValueAsBytes(n))
-    finally out.close()
-    if (!putIfAbsent(f, tmp, target)) {
-      f.delete(tmp, false); f.delete(listP, false)
+    if (!publish(f, root, base, n)) {
+      f.delete(listP, false)
       throw new java.util.ConcurrentModificationException(
         s"version ${base + 1} of $root was committed concurrently")
     }
-    // hint is advisory (readers fall back to the listing); last wins
-    val hint = f.create(new Path(root, "metadata/version-hint.text"), true)
-    try hint.write(String.valueOf(base + 1).getBytes) finally hint.close()
     snapshotId
   }
 }

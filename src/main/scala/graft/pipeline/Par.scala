@@ -25,13 +25,6 @@ object Par {
   def defaultPar: Int =
     math.min(32, 2 * Runtime.getRuntime.availableProcessors())
 
-  /** Apply `fn` to every element on a bounded pool; rethrows the first
-    * failure (unwrapped). Order of side effects across elements is
-    * unspecified — callers must only use this for independent work.
-    * On failure the pool is shut down with `shutdownNow` and the
-    * remaining futures are cancelled — a failed stage must stop
-    * issuing side effects (writes), not drain its queue in the
-    * background after the exception has propagated. */
   /** [[foreach]] that collects results in input order — for
     * independent per-element PARSES (e.g. one Avro manifest each),
     * where the driver-side loop is I/O-latency-bound and a bounded
@@ -57,19 +50,44 @@ object Par {
       w.zip(map(w, par)(read)).foreach { case (a, b) => consume(a, b) }
     }
 
-  def foreach[A](xs: Seq[A], par: Int = defaultPar)(fn: A => Unit): Unit = {
-    if (xs.lengthCompare(2) < 0) { xs.foreach(fn); return }
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(math.min(par, xs.size))
-    val futures = xs.map(x => pool.submit(new Runnable { def run(): Unit = fn(x) }))
+  /** Apply `fn` to every element on a bounded pool; rethrows the first
+    * failure (unwrapped). Order of side effects across elements is
+    * unspecified — callers must only use this for independent work.
+    * On failure the pool is shut down with `shutdownNow` and the
+    * remaining futures are cancelled — a failed stage must stop
+    * issuing side effects (writes), not drain its queue in the
+    * background after the exception has propagated. */
+  def foreach[A](xs: Seq[A], par: Int = defaultPar)(fn: A => Unit): Unit =
+    if (xs.lengthCompare(2) < 0) xs.foreach(fn)
+    else run(xs.map(x => () => fn(x)), math.min(par, xs.size))
+
+  /** Run two independent bodies on two threads and return both
+    * results — [[foreach]]'s failure rule for a pair: the first
+    * failure reaches the caller as soon as it happens and the other
+    * body is cancelled, not awaited. */
+  def both[A, B](a: => A, b: => B): (A, B) = {
+    var ra: Option[A] = None
+    var rb: Option[B] = None
+    run(Seq(() => ra = Some(a), () => rb = Some(b)), 2)
+    (ra.get, rb.get)
+  }
+
+  /** Run `tasks` on a pool of `width` threads, taking results in
+    * COMPLETION order so the first failure is seen without waiting for
+    * tasks that started before it. */
+  private def run(tasks: Seq[() => Unit], width: Int): Unit = {
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(width)
+    val done = new java.util.concurrent.ExecutorCompletionService[Unit](pool)
+    val futures = tasks.map(t => done.submit(() => t()))
     var failed = true
     try {
-      futures.foreach { f =>
-        try f.get()
+      futures.foreach { _ =>
+        try done.take().get()
         catch { case e: java.util.concurrent.ExecutionException => throw e.getCause }
       }
       failed = false
     } finally {
-      if (failed) { futures.foreach(_.cancel(false)); pool.shutdownNow() }
+      if (failed) { futures.foreach(_.cancel(true)); pool.shutdownNow() }
       else pool.shutdown()
     }
   }

@@ -130,23 +130,16 @@ object DedupStream {
           // the two ledgers are INDEPENDENT tables, so their staging
           // jobs and commit latencies overlap on two driver threads
           // (guide §2.6; each appId's txn watermark is its own)
-          var sCorpus = -1L
-          var sSig = -1L
-          graft.pipeline.Par.foreach(Seq(true, false), 2) {
-            case true =>
-              sCorpus = IcebergWrite.appendOnce(
-                survivors, corpusDir, s"$appId-corpus", batchId)
-            case false =>
-              sSig =
-                if (stateBuckets <= 0)
-                  IcebergWrite.appendOnce(sigRows, sigDir, s"$appId-sig", batchId)
-                else IcebergWrite.appendPartitioned(sigRows, sigDir,
-                  Seq(("band_key", s"bucket[$stateBuckets]")),
-                  txn = Some((s"$appId-sig", batchId)),
-                  // ONE file per touched bucket per batch — the state
-                  // table must not fragment into tasks × buckets shards
-                  clusterBySpec = true)
-          }
+          val (sCorpus, sSig) = graft.pipeline.Par.both(
+            IcebergWrite.appendOnce(survivors, corpusDir, s"$appId-corpus", batchId),
+            if (stateBuckets <= 0)
+              IcebergWrite.appendOnce(sigRows, sigDir, s"$appId-sig", batchId)
+            else IcebergWrite.appendPartitioned(sigRows, sigDir,
+              Seq(("band_key", s"bucket[$stateBuckets]")),
+              txn = Some((s"$appId-sig", batchId)),
+              // ONE file per touched bucket per batch — the state
+              // table must not fragment into tasks × buckets shards
+              clusterBySpec = true))
           postCommitHook(sCorpus, sSig)
         }
       }

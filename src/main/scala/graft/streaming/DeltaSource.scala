@@ -131,8 +131,8 @@ final class DeltaSource(spark: SparkSession, dir: String, metadataPath: String,
         s"""{"mode":"${o.mode}","version":${o.version},"lockVersion":${o.lockVersion}}"""
           .getBytes("UTF-8"))
       finally out.close()
-      if (!f.rename(tmp, p)) { // lost a creation race: the winner's origin stands
-        f.delete(tmp, false)
+      if (!graft.io.lake.Staging.putIfAbsent(f, tmp, p)) {
+        // lost a creation race: the winner's origin stands
         val in = f.open(p)
         val n = try M.readTree(scala.io.Source.fromInputStream(in, "UTF-8").mkString)
                 finally in.close()

@@ -164,7 +164,7 @@ final class IcebergSource(spark: SparkSession, dir: String, metadataPath: String
         branch.foreach(node.put("branch", _))
         out.write(M.writeValueAsBytes(node))
       } finally out.close()
-      if (!f.rename(tmp, p)) { f.delete(tmp, false); load() } else o
+      if (!graft.io.lake.Staging.putIfAbsent(f, tmp, p)) load() else o
     }
   }
 

@@ -1,6 +1,7 @@
 package graft.tools
 
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
+import graft.io.lake.Staging
 import org.apache.avro.Schema
 import org.apache.avro.file.DataFileReader
 import org.apache.avro.generic.{GenericData, GenericDatumReader, GenericRecord}
@@ -300,15 +301,8 @@ object IcebergFixture {
         case None =>
           df.schema.fieldNames.zipWithIndex.map { case (n0, i) => n0 -> (i + 1) }.toMap
       }
-    val staging = new Path(root, s".staging-${java.util.UUID.randomUUID().toString.take(8)}")
-    withFieldIds(df, idsByName).write.parquet(staging.toString)
-    val dataFiles = f.listStatus(staging).filter(_.getPath.getName.endsWith(".parquet"))
-      .map { st =>
-        val dst = new Path(root, s"data/${java.util.UUID.randomUUID()}.parquet")
-        require(f.rename(st.getPath, dst), s"rename ${st.getPath} failed")
-        (dst, f.getFileStatus(dst).getLen)
-      }.toSeq
-    f.delete(staging, true)
+    val dataFiles = Staging.stage(withFieldIds(df, idsByName), root)(_ => dataFile(root))
+      .map(s => (s.path, s.len))
 
     val prevVersion = currentVersion(f, root)
     val snapshotId = prevVersion + 1L
@@ -405,34 +399,20 @@ object IcebergFixture {
     val snapshotId = currentVersion(f, root) + 1L
     // ONE partitioned write job (hive-style value dirs) + ONE grouped
     // stats job, instead of a write+stats job pair per partition value
-    val staging = new Path(root, s".staging-${java.util.UUID.randomUUID().toString.take(8)}")
-    withFieldIds(df, idsByName).withColumn("_graft_p", pCol)
-      .write.partitionBy("_graft_p").parquet(staging.toString)
-    def decode(dirName: String): Any = {
-      val raw = java.net.URLDecoder.decode(
-        dirName.stripPrefix("_graft_p="), "UTF-8")
-      partDt match {
-        case IntegerType => raw.toInt
-        case LongType => raw.toLong
-        case StringType => raw
-        case other => throw new IllegalArgumentException(
-          s"partition value type $other unsupported")
-      }
+    def decode(raw: String): Any = partDt match {
+      case IntegerType => raw.toInt
+      case LongType => raw.toLong
+      case StringType => raw
+      case other => throw new IllegalArgumentException(
+        s"partition value type $other unsupported")
     }
-    val filesOfValue: Seq[(Any, Seq[(Path, Long)])] = f.listStatus(staging)
-      .filter(st => st.isDirectory && st.getPath.getName.startsWith("_graft_p="))
-      .sortBy(_.getPath.getName)
-      .map { d =>
-        val files = f.listStatus(d.getPath)
-          .filter(_.getPath.getName.endsWith(".parquet"))
-          .map { st =>
-            val dst = new Path(root, s"data/${java.util.UUID.randomUUID()}.parquet")
-            require(f.rename(st.getPath, dst), s"rename ${st.getPath} failed")
-            (dst, f.getFileStatus(dst).getLen)
-          }.toSeq
-        (decode(d.getPath.getName), files)
-      }.toSeq
-    f.delete(staging, true)
+    val staged = Staging.stage(withFieldIds(df, idsByName).withColumn("_graft_p", pCol),
+      root, Seq("_graft_p"))(_ => dataFile(root))
+    val byValue = staged.groupBy(_.values)
+    val filesOfValue: Seq[(Any, Seq[(Path, Long)])] = staged.map(_.values).distinct.map(v =>
+      (decode(v.head.getOrElse(
+        org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils.DEFAULT_PARTITION_NAME)),
+        byValue(v).map(s => (s.path, s.len))))
     val stats = allFileStats(spark,
       filesOfValue.flatMap(_._2.map(_._1.toString)), idsByName)
     val refs = filesOfValue.zipWithIndex.map { case ((v, files), i) =>
@@ -454,6 +434,9 @@ object IcebergFixture {
   }
 
   private def canonPath(p: String): String = p.replaceFirst("^file:/+", "/")
+
+  private def dataFile(root: Path, prefix: String = ""): Path =
+    new Path(root, s"data/$prefix${java.util.UUID.randomUUID()}.parquet")
 
   /** Per-file (record count, bound bytes) for a set of parquet files,
     * computed in ONE grouped aggregation keyed by
@@ -502,21 +485,16 @@ object IcebergFixture {
     require(prevVersion > 0, s"$dir has no snapshots to delete from")
     // (schemas carry forward in commitSnapshot — no rebuild needed)
 
-    val staging = new Path(root, s".staging-${java.util.UUID.randomUUID().toString.take(8)}")
-    deletes.toDF("file_path", "pos").coalesce(1).write.parquet(staging.toString)
-    val part = f.listStatus(staging).map(_.getPath)
-      .filter(_.getName.endsWith(".parquet")).head
-    val dst = new Path(root, s"data/delete-${java.util.UUID.randomUUID()}.parquet")
-    require(f.rename(part, dst), "rename failed")
-    f.delete(staging, true)
+    val dst = dataFile(root, "delete-")
+    val len = Staging.stageOne(deletes.toDF("file_path", "pos"), root, dst)
 
     val snapshotId = prevVersion + 1L
     val refFile =
       if (stampReferencedDataFile && deletes.map(_._1).distinct.size == 1)
         Some(deletes.head._1)
       else None
-    val e = entry(1, dst.toString, deletes.length.toLong,
-      f.getFileStatus(dst).getLen, snapshotId, referencedDataFile = refFile)
+    val e = entry(1, dst.toString, deletes.length.toLong, len, snapshotId,
+      referencedDataFile = refFile)
     val manifestP = new Path(root, s"metadata/delete-manifest-$snapshotId.avro")
     writeAvro(f, manifestP, EntrySchema, Seq(e))
     commitSnapshot(spark, dir, StructType(Nil), Seq(ManifestRef(manifestP, 1)), "delete")
@@ -540,13 +518,8 @@ object IcebergFixture {
     val ids = keys.columns.toSeq.map(c => idsByName.getOrElse(c,
       throw new IllegalArgumentException(s"no column $c in current schema")))
 
-    val staging = new Path(root, s".staging-${java.util.UUID.randomUUID().toString.take(8)}")
-    withFieldIds(keys, idsByName).coalesce(1).write.parquet(staging.toString)
-    val part = f.listStatus(staging).map(_.getPath)
-      .filter(_.getName.endsWith(".parquet")).head
-    val dst = new Path(root, s"data/eq-delete-${java.util.UUID.randomUUID()}.parquet")
-    require(f.rename(part, dst), "rename failed")
-    f.delete(staging, true)
+    val dst = dataFile(root, "eq-delete-")
+    Staging.stageOne(withFieldIds(keys, idsByName), root, dst)
 
     val snapshotId = prevVersion + 1L
     val nRows = spark.read.parquet(dst.toString).count()

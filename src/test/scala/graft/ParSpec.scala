@@ -37,4 +37,29 @@ class ParSpec extends AnyFunSuite {
     Par.foreach(1 to 17, par = 4)(_ => ran.incrementAndGet())
     assert(ran.get() == 17)
   }
+
+  test("both returns both results") {
+    assert(Par.both(1 + 1, "x" * 3) == ((2, "xxx")))
+  }
+
+  test("both: one side's failure reaches the caller at once; the other side is cancelled") {
+    for (failLeft <- Seq(true, false)) {
+      val boom = new IllegalStateException("boom")
+      val interrupted = new java.util.concurrent.CountDownLatch(1)
+      val finished = new AtomicInteger(0)
+      def slow(): Int =
+        try { Thread.sleep(10000); finished.incrementAndGet() }
+        catch { case _: InterruptedException => interrupted.countDown(); -1 }
+      def fail(): Int = { Thread.sleep(50); throw boom }
+      val t0 = System.nanoTime()
+      val e = intercept[IllegalStateException](
+        if (failLeft) Par.both(fail(), slow()) else Par.both(slow(), fail()))
+      val waitedMs = (System.nanoTime() - t0) / 1000000
+      assert(e eq boom)
+      assert(waitedMs < 5000, s"the caller waited ${waitedMs}ms for the other side")
+      assert(interrupted.await(5, java.util.concurrent.TimeUnit.SECONDS),
+        "the other side was not cancelled")
+      assert(finished.get == 0)
+    }
+  }
 }
