@@ -3171,8 +3171,8 @@ object IcebergWrite {
     * [[Staging.OrphanMinAgeMillis]] age floor: a RETAIN 0 expiry must
     * never eat a concurrent in-flight writer's freshly moved data
     * files, just-authored manifests, or active staging directory.
-    * Time travel to an expired snapshot fails loudly ("snapshot not found"). Driver work is
-    * metadata- and file-count-bounded.
+    * Time travel to an expired snapshot fails loudly ("snapshot not
+    * found"). Driver work is metadata- and file-count-bounded.
     * Returns (snapshotsExpired, filesReclaimed). */
   def expireSnapshots(spark: SparkSession, dir: String,
                       retainMillis: Long): (Int, Int) = {

@@ -1,6 +1,6 @@
 package graft.io.lake
 
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
 
@@ -42,7 +42,7 @@ object Staging {
     (if (partCols.isEmpty) df.write else df.write.partitionBy(partCols: _*))
       .parquet(dir.toString)
     val dirPrefixes = partCols.map(c => ExternalCatalogUtils.escapePathName(c) + "=")
-    def walk(d: Path, vals: Seq[Option[String]]): Seq[(org.apache.hadoop.fs.FileStatus, Seq[Option[String]])] =
+    def walk(d: Path, vals: Seq[Option[String]]): Seq[(FileStatus, Seq[Option[String]])] =
       f.listStatus(d).sortBy(_.getPath.getName).toSeq.flatMap { st =>
         val name = st.getPath.getName
         if (vals.size < partCols.size) {
