@@ -84,4 +84,20 @@ class LakeCommitRaceSpec extends AnyFunSuite {
     val counts = snaps.map(s => IcebergInterop.readIceberg(spark, ice, Some(s)).count())
     assert(counts.sorted == Seq(10L, 15L, 20L, 25L), counts)
   }
+
+  test("writeDeltaResilient on a UniForm table: racing syncs leave the Iceberg mirror complete") {
+    import spark.implicits._
+    def rows(t: Int, k: Int) = (0 until 5).map(i => (t * 100L + k * 10 + i, s"w$t")).toDF("id", "w")
+    val dir = Files.createTempDirectory("graft-uniform-writer-race").toString
+    DeltaInterop.writeDelta(rows(9, 9), dir, Nil)
+    DeltaInterop.enableUniform(spark, dir)
+    val dv = race(4)(t => (0 until 3).map(k =>
+      DeltaInterop.writeDeltaResilient(rows(t, k), dir, Nil))).flatten
+    assert(dv.distinct.size == 12, s"versions $dv")
+    val delta = DeltaInterop.readDelta(spark, dir)
+    assert(delta.count() == 65)
+    val ice = IcebergInterop.readIceberg(spark, dir)
+    assert(ice.count() == delta.count())
+    assert(ice.select("id").except(delta.select("id")).isEmpty)
+  }
 }
