@@ -389,14 +389,15 @@ private[graft] trait QueriesScaleOps extends QueryBase {
       .orderBy(col("c_custkey"))
   }
 
-  /** The zone-mapped z-ordered orders layout: write-once infrastructure
-    * (like the bucketed tables and the ANN index) — z-order on the
-    * scaled (customer, order-day) pair, then index per-file min/max of
-    * the RAW dimensions into the `_zonemap.json` manifest. */
+  /** The z-ordered orders layout as a Delta table: write-once
+    * infrastructure (like the bucketed tables and the ANN index) —
+    * z-order on the scaled (customer, order-day) pair, then convert the
+    * 16 files in place, so the log's per-file min/max of the RAW
+    * dimensions come from the parquet footers, with no scan job. */
   private[graft] val zoneLayoutCache = scala.collection.concurrent.TrieMap.empty[String, String]
-  def ensureZoneMappedOrders(s: SparkSession, dir: String): String =
+  def ensureZOrderedOrders(s: SparkSession, dir: String): String =
     zoneLayoutCache.getOrElseUpdate(dir, {
-      val path = graft.io.TempDirs.scratch("graft-zonemap")
+      val path = graft.io.TempDirs.scratch("graft-zorder-delta")
       val raw = T(s, dir, "orders").select(col("o_orderkey"), col("o_custkey"),
         datediff(col("o_orderdate").cast("date"), to_date(lit("1992-01-01"))).as("day"))
       val mx = raw.agg(max("o_custkey").cast("double"), max("day").cast("double")).head()
@@ -405,19 +406,19 @@ private[graft] trait QueriesScaleOps extends QueryBase {
         .withColumn("__ys", floor(col("day") * 255 / mx.getDouble(1)))
       graft.functions.ZOrder.writeZOrdered(scaled, "__xs", "__ys", path,
         numFiles = 16, bits = 8)
-      graft.io.ZoneMap.index(s, path, Seq("o_custkey", "day"))
+      graft.io.DeltaInterop.convertToDelta(s, path)
       path
     })
 
-  /** Zone-map file skipping over the z-ordered layout: the range query
-    * plans against only the files whose bounding box overlaps BOTH
-    * predicates (the spec asserts a strict subset is read), then applies
-    * the exact filter — same answer as the full scan, which is exactly
-    * what the oracle checks. */
+  /** Stats-based file skipping over the z-ordered layout: the range
+    * query plans against only the files whose Delta log bounds overlap
+    * BOTH predicates (the spec asserts a strict subset is read), then
+    * applies the exact filter — same answer as the full scan, which is
+    * exactly what the oracle checks. */
   private[graft] def q103(s: SparkSession, dir: String): DataFrame = {
-    val path = ensureZoneMappedOrders(s, dir)
-    graft.io.ZoneMap.readPruned(s, path,
-        Seq(("o_custkey", 100.0, 300.0), ("day", 1500.0, 1800.0)))
+    val path = ensureZOrderedOrders(s, dir)
+    graft.io.DeltaInterop.readDeltaWhere(s, path,
+        ranges = Map("o_custkey" -> ((100.0, 300.0)), "day" -> ((1500.0, 1800.0))))
       .filter(col("o_custkey").between(100, 300) && col("day").between(1500, 1800))
       .select(col("o_orderkey"), col("o_custkey"), col("day"))
       .orderBy(col("o_orderkey"))

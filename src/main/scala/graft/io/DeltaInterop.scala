@@ -3,7 +3,7 @@ package graft.io
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import graft.io.lake.Staging
 import graft.pipeline.Par
-import org.apache.hadoop.fs.{FileSystem, FileUtil, Path}
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -34,8 +34,7 @@ import org.apache.spark.sql.types.{DataType, StructField, StructType}
   *     file skipping;
   *   - commits are atomic put-if-absent creates of
   *     `_delta_log/%020d.json` — a losing concurrent writer gets a
-  *     version-conflict error, never a corrupt log (same contract as
-  *     the snapshot store's `_CLAIM`).
+  *     version-conflict error, never a corrupt log.
   *
   * Scale shape: the log is metadata-sized (actions, not rows); data
   * files are written once by the normal distributed write and MOVED
@@ -55,6 +54,11 @@ import org.apache.spark.sql.types.{DataType, StructField, StructType}
 object DeltaInterop {
 
   private val M = new ObjectMapper()
+
+  /** Version races an append ([[writeDeltaResilient]], [[appendOnce]])
+    * may lose, re-committing its staged files each time, before it
+    * gives up. */
+  val MaxCommitRetries = 10
 
   private def fs(spark: SparkSession, dir: String): FileSystem =
     new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -617,7 +621,7 @@ object DeltaInterop {
                   a.isNullAt(a.fieldIndex(name))) None
               else Some(a.getAs[Long](name))
             live(a.getAs[String]("path")) = AddFile(a.getAs[String]("path"),
-              mapOf("partitionValues"), a.getAs[Long]("size"), numRecords,
+              partitionValuesOf(mapOf("partitionValues")), a.getAs[Long]("size"), numRecords,
               mapOf("tags"), stats, dv, clusterer,
               longOf("baseRowId"), longOf("defaultRowCommitVersion"))
           }
@@ -892,7 +896,7 @@ object DeltaInterop {
       else null
     def longField(name: String): Option[Long] =
       if (a.has(name) && !a.get(name).isNull) Some(a.get(name).asLong) else None
-    AddFile(a.get("path").asText, jsonMap(a.get("partitionValues")),
+    AddFile(a.get("path").asText, partitionValuesOf(jsonMap(a.get("partitionValues"))),
       a.get("size").asLong, numRecords, tags, statsRaw, dv,
       if (a.has("clusteringProvider") && !a.get("clusteringProvider").isNull)
         a.get("clusteringProvider").asText else null,
@@ -943,7 +947,7 @@ object DeltaInterop {
         }
       } else if (node.has("cdc")) {
         val c = node.get("cdc")
-        cdcs += AddFile(c.get("path").asText, jsonMap(c.get("partitionValues")),
+        cdcs += AddFile(c.get("path").asText, partitionValuesOf(jsonMap(c.get("partitionValues"))),
           c.get("size").asLong, -1L, Map.empty)
       } else if (node.has("metaData")) {
         schemaChange = Some(node.get("metaData").get("schemaString").asText)
@@ -1090,8 +1094,7 @@ object DeltaInterop {
           val withProv =
             if (deleted.isEmpty) scan else scan.select(col("*") +: provCols: _*)
           st.partitionColumns.foldLeft(withProv) { (df, c) =>
-            val dt = st.schema(c).dataType
-            df.withColumn(c, lit(pv(c)).cast(dt))
+            df.withColumn(c, partitionLit(pv(c), st.schema(c).dataType))
           }
         }.reduce(_ unionByName _)
       deleted match {
@@ -1171,7 +1174,7 @@ object DeltaInterop {
               .parquet(fl.map(a => new Path(dir, a.path).toString): _*)
             val withData = scan.select(dataCols.toSeq ++ provCols: _*)
             st.partitionColumns.zip(pvs).foldLeft(withData) { case (df, (c, v)) =>
-              df.withColumn(c, lit(v).cast(st.schema(c).dataType))
+              df.withColumn(c, partitionLit(v, st.schema(c).dataType))
             }
           }.reduce(_ unionByName _)
       }
@@ -1185,8 +1188,7 @@ object DeltaInterop {
     * previously-live file in the same commit (a full-snapshot replace);
     * `false` appends. Creates the table (protocol + metaData) at
     * version 0; re-emits metaData when the schema WIDENS (additive
-    * evolution — the same contract as the snapshot store). Returns the
-    * committed version. */
+    * evolution). Returns the committed version. */
   /** Write the complete replayed state at `version` (default latest) as
     * the protocol's checkpoint: ONE parquet file
     * `_delta_log/%020d.checkpoint.parquet` with one action per row
@@ -1239,7 +1241,7 @@ object DeltaInterop {
               if (n.has("offset")) Int.box(n.get("offset").asInt) else null,
               n.get("sizeInBytes").asInt, n.get("cardinality").asLong)
           }
-        CpRow(add = CpAdd(a.path, a.partitionValues, a.size, 0L, dataChange = true,
+        CpRow(add = CpAdd(a.path, loggedPartitionValues(a), a.size, 0L, dataChange = true,
           stats, if (a.tags.nonEmpty) a.tags else null, dv, a.clusteringProvider,
           a.baseRowId, a.defaultRowCommitVersion))
       }
@@ -2107,8 +2109,7 @@ object DeltaInterop {
     * ConcurrentWriteException split, collapsed to the append case we
     * actually run at scale). Retries are bounded; the put-if-absent
     * commit keeps every outcome corruption-free regardless. */
-  def writeDeltaResilient(df: DataFrame, dir: String, partCols: Seq[String],
-                          maxRetries: Int = 10): Long = {
+  def writeDeltaResilient(df: DataFrame, dir: String, partCols: Seq[String]): Long = {
     val spark = df.sparkSession
     val adds = stageTableData(df, dir, partCols) // written ONCE
     var attempt = 0
@@ -2119,9 +2120,9 @@ object DeltaInterop {
         case e: IllegalStateException
           if e.getMessage.contains("concurrent Delta commit") =>
           attempt += 1
-          if (attempt > maxRetries)
+          if (attempt > MaxCommitRetries)
             throw new IllegalStateException(
-              s"append lost $maxRetries version races under $dir", e)
+              s"append lost $MaxCommitRetries version races under $dir", e)
       }
     }
     -1L // unreachable
@@ -2165,14 +2166,12 @@ object DeltaInterop {
 
   /** [[Staging.stage]] `df`, split by its `split` columns, into
     * `<dir>/<sub><partition dirs of partCols>/<prefix><part name>`.
-    * Returns (table-relative path, partitionValues, size) per file;
-    * the log keeps the null partition's value as Hive's sentinel. */
+    * Returns (table-relative path, partitionValues, size) per file. */
   private def stageFiles(df: DataFrame, dir: String, sub: String,
                          partCols: Seq[String], split: Seq[String],
                          prefix: String = ""): Seq[(String, Map[String, String], Long)] = {
     val root = new Path(dir)
-    def pv(values: Seq[Option[String]]) = partCols.zip(values.map(_.getOrElse(
-      org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils.DEFAULT_PARTITION_NAME)))
+    def pv(values: Seq[Option[String]]) = partCols.zip(values.map(_.getOrElse(NullPartition)))
     def rel(values: Seq[Option[String]], name: String) =
       sub + (hiveDirs(pv(values)) :+ name).mkString("/")
     Staging.stage(df, root, split)(p => new Path(root, rel(p.values, prefix + p.name)))
@@ -2412,73 +2411,6 @@ object DeltaInterop {
     * a concurrent writer's commit causes the version race. */
   @volatile private[graft] var preCommitHook: () => Unit = () => ()
 
-  /** Export the latest [[PartitionedSnapshotStore]] version as a Delta
-    * commit — INCREMENTALLY: only partitions whose manifest data dir
-    * changed since the last export are copied and re-added (each add
-    * carries its source dir in `tags.graftSrc`; an unchanged partition's
-    * files stay live with no action at all). First export creates the
-    * table. Returns (storeVersion, deltaVersion, filesCopied). */
-  def exportSnapshot(spark: SparkSession, storeDir: String, deltaDir: String,
-                     partCol: String): (Int, Long, Int) = {
-    val storeV = PartitionedSnapshotStore.latestVersion(spark, storeDir)
-    require(storeV > 0, s"no committed store version under $storeDir")
-    val manifest = PartitionedSnapshotStore.readManifest(spark, storeDir, storeV)
-    val f = fs(spark, deltaDir)
-    val prev = latestVersion(spark, deltaDir)
-    val prevState = if (prev >= 0) Some(state(spark, deltaDir)) else None
-    prevState.foreach(st => require(!rowTrackingEnabled(st),
-      s"snapshot export does not assign row ids — the row-tracked table at " +
-        s"$deltaDir needs writeDelta/appendOnce"))
-    val prevByPart: Map[String, Seq[AddFile]] =
-      prevState.map(_.files.groupBy(_.partitionValues(partCol)))
-        .getOrElse(Map.empty)
-    // schema = union over manifest dirs + the partition column
-    val dataSchema = manifest.values.toSeq.sorted
-      .map(p => spark.read.parquet(p).schema)
-      .reduce((a, b) => StructType(
-        a.fields ++ b.fields.filterNot(fd => a.fieldNames.contains(fd.name))))
-    val fullSchema = StructType(dataSchema.fields :+
-      org.apache.spark.sql.types.StructField(partCol, org.apache.spark.sql.types.IntegerType))
-    val actions = scala.collection.mutable.ArrayBuffer.empty[String]
-    if (prev < 0) {
-      actions += protocolJson()
-      actions += metaDataJson(fullSchema, Seq(partCol))
-    } else if (fullSchema.fieldNames.exists(n => !prevState.get.schema.fieldNames.contains(n))) {
-      val widened = StructType(prevState.get.schema.fields ++
-        fullSchema.fields.filterNot(fd => prevState.get.schema.fieldNames.contains(fd.name)))
-      actions += metaDataJson(widened, Seq(partCol), prevState.get.configuration)
-    }
-    var copied = 0
-    manifest.toSeq.sortBy(_._1).foreach { case (p, srcDir) =>
-      val key = p.toString
-      val prevFiles = prevByPart.getOrElse(key, Nil)
-      val unchanged = prevFiles.nonEmpty && prevFiles.forall(_.tags.get("graftSrc").contains(srcDir))
-      if (!unchanged) {
-        prevFiles.foreach(r => actions += removeJson(r))
-        val srcFs = new Path(srcDir).getFileSystem(spark.sparkContext.hadoopConfiguration)
-        srcFs.listStatus(new Path(srcDir))
-          .filter(st => st.isFile && st.getPath.getName.endsWith(".parquet"))
-          .sortBy(_.getPath.getName).foreach { st =>
-            val rel = s"$partCol=$p/v$storeV-${st.getPath.getName}"
-            val dst = new Path(deltaDir, rel)
-            f.mkdirs(dst.getParent)
-            FileUtil.copy(srcFs, st.getPath, f, dst, false, spark.sparkContext.hadoopConfiguration)
-            copied += 1
-            actions += addJson(footerAdd(spark, dst, rel, Map(partCol -> key),
-              st.getLen, Map("graftSrc" -> srcDir)))
-          }
-      }
-    }
-    // partitions dropped from the manifest leave the table too
-    prevByPart.keys.filterNot(k => manifest.contains(k.toInt)).toSeq.sorted.foreach { k =>
-      prevByPart(k).foreach(r => actions += removeJson(r))
-    }
-    val dv =
-      if (actions.isEmpty) prev // nothing changed — no empty commit
-      else commit(spark, deltaDir, prev + 1, actions.toSeq, op = "WRITE")
-    (storeV, dv, copied)
-  }
-
   /** Idempotent append — the protocol's application-transaction
     * handshake: the commit carries a `txn` action stamping (appId,
     * txnVersion), and a table whose watermark for `appId` is already at
@@ -2491,7 +2423,7 @@ object DeltaInterop {
     * caught on re-read and its staged files are cleaned up. Returns the
     * table version holding (or already holding) the batch. */
   def appendOnce(df: DataFrame, dir: String, partCols: Seq[String],
-                 appId: String, txnVersion: Long, maxRetries: Int = 10): Long = {
+                 appId: String, txnVersion: Long): Long = {
     val spark = df.sparkSession
     def committedAt(): Option[Long] = {
       val prev = latestVersion(spark, dir)
@@ -2521,9 +2453,9 @@ object DeltaInterop {
               return v
             case None =>
               attempt += 1
-              if (attempt > maxRetries)
+              if (attempt > MaxCommitRetries)
                 throw new IllegalStateException(
-                  s"append lost $maxRetries version races under $dir", e)
+                  s"append lost $MaxCommitRetries version races under $dir", e)
           }
       }
     }
@@ -2642,7 +2574,7 @@ object DeltaInterop {
           def uniPv(df0: DataFrame): DataFrame =
             if (!IcebergUniform.enabled(st)) df0
             else st.partitionColumns.zip(keyed).foldLeft(df0) { case (d, (c, (k, v))) =>
-              d.withColumn(k, lit(v).cast(physicalType(st.schema(c).dataType)))
+              d.withColumn(k, partitionLit(v, physicalType(st.schema(c).dataType)))
             }
           val rel = hiveDirs(keyed).mkString("/")
           stageFiles(rtAugment(uniPv(spark.read.schema(readSchema)
@@ -3229,8 +3161,7 @@ object DeltaInterop {
     * get no bound (a truncated bound could prune a matching file), nor
     * does any column whose footer bounds are not exact. */
   private def footerAdd(spark: SparkSession, file: Path, rel: String,
-                        partitionValues: Map[String, String], size: Long,
-                        tags: Map[String, String] = Map.empty): AddFile = {
+                        partitionValues: Map[String, String], size: Long): AddFile = {
     val fs = FooterStats.read(spark.sparkContext.hadoopConfiguration, file)
     val n = M.createObjectNode()
     n.put("numRecords", fs.records)
@@ -3241,7 +3172,7 @@ object DeltaInterop {
       l <- statsValue(lo, ceil = false)
       h <- statsValue(hi, ceil = true)
     } { mins.set[JsonNode](name, l); maxs.set[JsonNode](name, h) }
-    AddFile(rel, partitionValues, size, fs.records, tags, M.writeValueAsString(n))
+    AddFile(rel, partitionValues, size, fs.records, Map.empty, M.writeValueAsString(n))
   }
 
   private val StatsTimestamp = java.time.format.DateTimeFormatter
@@ -3647,7 +3578,7 @@ object DeltaInterop {
         val i = r.fieldIndex(n)
         if (r.isNullAt(i)) Map.empty else r.getMap[String, String](i).toMap
       }
-      AddFile(r.getAs[String]("path"), m("partitionValues"),
+      AddFile(r.getAs[String]("path"), partitionValuesOf(m("partitionValues")),
         Option(r.getAs[java.lang.Long]("size")).map(_.toLong).getOrElse(0L),
         r.getAs[Long]("numRecords"), m("tags"),
         r.getAs[String]("stats"), r.getAs[String]("dv"),
@@ -3727,8 +3658,7 @@ object DeltaInterop {
     val n = M.createObjectNode()
     val add = n.putObject("add")
     add.put("path", a.path)
-    val pv = add.putObject("partitionValues")
-    a.partitionValues.toSeq.sortBy(_._1).foreach { case (k, v) => pv.put(k, v) }
+    putPartitionValues(add, a)
     add.put("size", a.size)
     add.put("modificationTime", 0L)
     add.put("dataChange", dataChange)
@@ -3796,8 +3726,7 @@ object DeltaInterop {
     val n = M.createObjectNode()
     val c = n.putObject("cdc")
     c.put("path", a.path)
-    val pv = c.putObject("partitionValues")
-    a.partitionValues.toSeq.sortBy(_._1).foreach { case (k, v) => pv.put(k, v) }
+    putPartitionValues(c, a)
     c.put("size", a.size)
     c.put("dataChange", false)
     M.writeValueAsString(n)
@@ -3856,7 +3785,7 @@ object DeltaInterop {
               .parquet(fl.map(a => new Path(dir, a.path).toString): _*)
             val withData = scan.select(dataCols.toSeq ++ prov: _*)
             st.partitionColumns.zip(pvs).foldLeft(withData) { case (df, (c, v)) =>
-              df.withColumn(c, lit(v).cast(st.schema(c).dataType))
+              df.withColumn(c, partitionLit(v, st.schema(c).dataType))
             }.select(outCols: _*)
           }.reduce(_ unionByName _)
       }
@@ -3900,7 +3829,7 @@ object DeltaInterop {
             // the hidden _metadata column resolves only against the file
             // scan itself — select it per-branch, before the union
             st.partitionColumns.foldLeft(base.select(col("*"), prov, pos)) { (df, c) =>
-              df.withColumn(c, lit(pv(c)).cast(st.schema(c).dataType))
+              df.withColumn(c, partitionLit(pv(c), st.schema(c).dataType))
             }.select(st.schema.fieldNames.map(col) ++
               Seq(col("_graft_file"), col("_graft_pos")): _*)
           }.reduce(_ unionByName _)
@@ -4807,7 +4736,7 @@ object DeltaInterop {
         }
         val base = scan.select(dataCols.toSeq :+ col("_change_type"): _*)
         st.partitionColumns.foldLeft(base) { (df, c) =>
-          df.withColumn(c, lit(partValue(pv, c)).cast(st.schema(c).dataType))
+          df.withColumn(c, partitionLit(partValue(pv, c), st.schema(c).dataType))
         }
       }.reduce(_ unionByName _)
       .select(st.schema.fieldNames.map(col) :+ col("_change_type"): _*)
@@ -5004,6 +4933,29 @@ object DeltaInterop {
   def readDeltaAsOf(spark: SparkSession, dir: String,
                     tsMillis: Long): DataFrame =
     readDelta(spark, dir, Some(versionAtTimestamp(spark, dir, tsMillis)))
+
+  /** [[AddFile.partitionValues]] keeps the null partition as Hive's
+    * sentinel, the name of its directory; the log holds JSON null
+    * (PROTOCOL.md "Partition Value Serialization"). Logs written before
+    * that hold the sentinel itself, which reads back the same. */
+  private val NullPartition =
+    org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils.DEFAULT_PARTITION_NAME
+
+  private def partitionValuesOf(logged: Map[String, String]): Map[String, String] =
+    logged.map { case (k, v) => k -> (if (v == null) NullPartition else v) }
+
+  private def loggedPartitionValues(a: AddFile): Map[String, String] =
+    a.partitionValues.map { case (k, v) => k -> (if (v == NullPartition) null else v) }
+
+  private def putPartitionValues(action: com.fasterxml.jackson.databind.node.ObjectNode,
+                                 a: AddFile): Unit = {
+    val pv = action.putObject("partitionValues")
+    loggedPartitionValues(a).toSeq.sortBy(_._1).foreach { case (k, v) => pv.put(k, v) }
+  }
+
+  /** A partition value injected as a typed column of a scan. */
+  private def partitionLit(v: String, dt: DataType): org.apache.spark.sql.Column =
+    (if (v == NullPartition) lit(null) else lit(v)).cast(dt)
 
   private def jsonMap(node: JsonNode): Map[String, String] = {
     val it = node.properties().iterator()

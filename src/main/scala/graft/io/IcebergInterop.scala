@@ -70,12 +70,16 @@ object IcebergInterop {
     val hinted: Option[Path] =
       if (!f.exists(hint)) None
       else {
-        val in = f.open(hint)
-        val v = try scala.io.Source.fromInputStream(in).mkString.trim finally in.close()
         // the hint is ADVISORY (and written non-atomically by some
-        // writers): an empty/garbled read — a concurrent hint rewrite —
-        // or a missing named file falls back to the listing, which is
-        // ground truth in the FS-catalog convention
+        // writers): an empty/garbled read — a concurrent hint rewrite,
+        // whose checksum sidecar may not match — or a missing named
+        // file falls back to the listing, which is ground truth in the
+        // FS-catalog convention
+        val v =
+          try {
+            val in = f.open(hint)
+            try scala.io.Source.fromInputStream(in).mkString.trim finally in.close()
+          } catch { case _: java.io.IOException => "" }
         Some(new Path(meta, s"v$v.metadata.json"))
           .filter(_ => v.nonEmpty && v.forall(_.isDigit)).filter(f.exists)
       }

@@ -1,6 +1,7 @@
 package graft.io
 
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
+import com.fasterxml.jackson.databind.node.{ArrayNode, ObjectNode}
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types._
@@ -107,7 +108,9 @@ object IcebergUniform {
     * refresh the marker cache. Loud on failure — the Delta commit is
     * already durable, and a missed sync self-heals on the next
     * full-path commit (it renders CURRENT state), but silent lag would
-    * let an Iceberg reader read stale data with no signal. */
+    * let an Iceberg reader read stale data with no signal. A sync that
+    * loses its metadata version to a concurrent commit's sync
+    * re-renders the current state in full ([[resync]]). */
   def maybeSync(spark: SparkSession, dir: String, deltaVersion: Long,
                 actions: Seq[String]): Unit = {
     val f = fs(spark, dir)
@@ -120,10 +123,12 @@ object IcebergUniform {
     val metaChanged = nodes.exists(_.has("metaData"))
     if (adds.nonEmpty && !hasRemove && !weakAdds && !metaChanged) {
       val root = new Path(dir)
-      val prevMeta = readMeta(f, root, currentHint(f, root))
-      readMarker(f, markerP).zip(prevMeta) match {
+      val base = IcebergWrite.currentVersion(f, root)
+      readMarker(f, markerP).zip(readMeta(f, root, base)) match {
         case Some((cols, m)) =>
-          return syncIncremental(spark, dir, f, m, cols, deltaVersion, adds)
+          if (!syncIncremental(spark, dir, f, base, m, cols, deltaVersion, adds))
+            resync(spark, dir)
+          return
         case None => // cache not seeded yet — fall through to the full path
       }
     }
@@ -132,8 +137,20 @@ object IcebergUniform {
       f.delete(markerP, false) // disarm: later commits skip in one exists()
       return
     }
-    sync(spark, dir, st, actions)
+    if (!sync(spark, dir, st, actions)) resync(spark, dir)
     writeMarker(f, markerP, st)
+  }
+
+  /** Render the CURRENT Delta state in full after a lost sync: it
+    * covers this commit and the one whose sync won. */
+  private def resync(spark: SparkSession, dir: String): Unit = {
+    var lost = 0
+    while (!sync(spark, dir, DeltaInterop.state(spark, dir), Nil, full = true)) {
+      lost += 1
+      if (lost == IcebergWrite.MaxCommitRetries)
+        throw new java.util.ConcurrentModificationException(
+          s"UniForm sync of $dir lost $lost metadata version races")
+    }
   }
 
   /** The marker file doubles as the fast path's schema cache:
@@ -166,50 +183,75 @@ object IcebergUniform {
   }
 
   /** FAST append sync: one new manifest from the committed adds, prior
-    * manifests carried by reference, the previous metadata JSON deep-
+    * manifests carried by reference, `prevMeta` (version `base`) deep-
     * copied with one more snapshot — O(new files) metadata work and
-    * zero Delta log replay. */
+    * zero Delta log replay. False = another sync took version base+1. */
   private def syncIncremental(spark: SparkSession, dir: String, f: FileSystem,
-                              prevMeta: JsonNode, cols: Map[String, (Int, DataType)],
-                              deltaVersion: Long, adds: Seq[JsonNode]): Unit = {
-    import scala.jdk.CollectionConverters._
+                              base: Int, prevMeta: JsonNode,
+                              cols: Map[String, (Int, DataType)],
+                              deltaVersion: Long, adds: Seq[JsonNode]): Boolean = {
     val root = new Path(dir)
-    val metaDir = new Path(root, "metadata")
-    val prevV = currentHint(f, root)
     val seqNo = prevMeta.path("last-sequence-number").asLong(0L) + 1
     val snapshotId = seqNo
-    val mp = new Path(metaDir, s"uniform-m$seqNo.avro")
-    IcebergFormat.writeAvro(f, mp, IcebergFormat.EntrySchema,
-      adds.map(a => fileEntry(spark, root, addFileOf(a), snapshotId, seqNo, cols)))
-    val prior = {
-      val cur = prevMeta.path("current-snapshot-id").asLong(-1L)
-      prevMeta.path("snapshots").elements().asScala
-        .find(_.path("snapshot-id").asLong(-2L) == cur).toSeq
-        .flatMap(s0 => IcebergInterop.avroRecords(spark,
-          new Path(resolve(s0.path("manifest-list").asText))))
-    }
-    val mine = manifestRecord(mp, f.getFileStatus(mp).getLen, seqNo, snapshotId)
-    val lp = new Path(metaDir, s"uniform-snap-$snapshotId.avro")
-    IcebergFormat.writeAvro(f, lp, IcebergFormat.ManifestFileSchema, prior :+ mine)
-    val n = prevMeta.deepCopy[JsonNode]().asInstanceOf[com.fasterxml.jackson.databind.node.ObjectNode]
+    val files = writeSnapshotFiles(f, root, seqNo,
+      adds.map(a => fileEntry(spark, root, addFileOf(a), snapshotId, seqNo, cols)),
+      currentManifests(spark, prevMeta))
+    val n = prevMeta.deepCopy[JsonNode]().asInstanceOf[ObjectNode]
     n.put("last-sequence-number", seqNo)
-    val s0 = n.path("snapshots").asInstanceOf[com.fasterxml.jackson.databind.node.ArrayNode].addObject()
-    s0.put("snapshot-id", snapshotId)
-    s0.put("sequence-number", seqNo)
-    s0.put("timestamp-ms", System.currentTimeMillis())
-    s0.put("manifest-list", lp.toString)
-    s0.put("schema-id", n.path("current-schema-id").asInt(0))
-    val sum = s0.putObject("summary")
-    sum.put("operation", "append")
-    sum.put("delta-version", deltaVersion.toString)
+    addSnapshot(n.path("snapshots").asInstanceOf[ArrayNode], seqNo, files._2,
+      n.path("current-schema-id").asInt(0), "append", deltaVersion)
     n.put("current-snapshot-id", snapshotId)
-    val out = f.create(new Path(metaDir, s"v${prevV + 1}.metadata.json"), true)
-    try out.write(M.writerWithDefaultPrettyPrinter().writeValueAsBytes(n))
-    finally out.close()
-    val hint = f.create(new Path(metaDir, "version-hint.text"), true)
-    try hint.write(String.valueOf(prevV + 1).getBytes) finally hint.close()
+    publishOrDrop(f, root, base, n, files)
   }
 
+  /** The current snapshot's manifest records, carried forward by an
+    * incremental snapshot. */
+  private def currentManifests(spark: SparkSession,
+                               m: JsonNode): Seq[org.apache.avro.generic.GenericRecord] = {
+    import scala.jdk.CollectionConverters._
+    val cur = m.path("current-snapshot-id").asLong(-1L)
+    m.path("snapshots").elements().asScala
+      .find(_.path("snapshot-id").asLong(-2L) == cur).toSeq
+      .flatMap(s0 => IcebergInterop.avroRecords(spark,
+        new Path(resolve(s0.path("manifest-list").asText))))
+  }
+
+  /** Write one attempt's manifest of `entries` and its manifest list
+    * (`prior` manifests first, re-serialized under this writer's list
+    * schema), named uniquely so racing attempts never share a file.
+    * Returns (manifest, list). */
+  private def writeSnapshotFiles(f: FileSystem, root: Path, seqNo: Long,
+                                 entries: Seq[org.apache.avro.generic.GenericRecord],
+                                 prior: Seq[org.apache.avro.generic.GenericRecord]): (Path, Path) = {
+    val tag = java.util.UUID.randomUUID().toString.take(8)
+    val mp = new Path(root, s"metadata/uniform-m$seqNo-$tag.avro")
+    IcebergFormat.writeAvro(f, mp, IcebergFormat.EntrySchema, entries)
+    val lp = new Path(root, s"metadata/uniform-snap-$seqNo-$tag.avro")
+    IcebergFormat.writeAvro(f, lp, IcebergFormat.ManifestFileSchema,
+      prior :+ manifestRecord(mp, f.getFileStatus(mp).getLen, seqNo, seqNo))
+    (mp, lp)
+  }
+
+  private def addSnapshot(snaps: ArrayNode, snapshotId: Long, list: Path, schemaId: Int,
+                          op: String, deltaVersion: Long): Unit = {
+    val s0 = snaps.addObject()
+    s0.put("snapshot-id", snapshotId)
+    s0.put("sequence-number", snapshotId)
+    s0.put("timestamp-ms", System.currentTimeMillis())
+    s0.put("manifest-list", list.toString)
+    s0.put("schema-id", schemaId)
+    val sum = s0.putObject("summary")
+    sum.put("operation", op)
+    sum.put("delta-version", deltaVersion.toString)
+  }
+
+  /** [[IcebergWrite.publish]] `n` as version base+1; a lost attempt
+    * deletes its own manifest and list. */
+  private def publishOrDrop(f: FileSystem, root: Path, base: Int, n: JsonNode,
+                            files: (Path, Path)): Boolean =
+    IcebergWrite.publish(f, root, base, n) || {
+      f.delete(files._1, false); f.delete(files._2, false); false
+    }
 
   /** ADOPT a FOREIGN UniForm mirror: a table whose Delta config
     * declares uniform but whose `metadata/` was authored by another
@@ -234,7 +276,7 @@ object IcebergUniform {
     val markerP = new Path(root, s"metadata/$MarkerName")
     require(!f.exists(markerP),
       s"the mirror at $dir is already maintained by this engine")
-    require(currentHint(f, root) > 0,
+    require(IcebergWrite.currentVersion(f, root) > 0,
       s"$dir has no Iceberg metadata to adopt — use enableUniform")
     // 1. FILE AGREEMENT: the mirror's current snapshot == Delta's live set
     val (snaps, iceSchema) = IcebergInterop.streamHead(spark, dir)
@@ -286,7 +328,7 @@ object IcebergUniform {
     val f = fs(spark, dir)
     val root = new Path(dir)
     val metaDir = new Path(root, "metadata")
-    val prevV = currentHint(f, root)
+    val prevV = IcebergWrite.currentVersion(f, root)
     val m = readMeta(f, root, prevV).getOrElse(return 0)
     val cutoff = System.currentTimeMillis() - retainMillis
     val curId = m.path("current-snapshot-id").asLong(-1L)
@@ -305,15 +347,13 @@ object IcebergUniform {
         keep += new Path(resolve(r.get("manifest_path").toString)).getName)
     }
     // new metadata json first (readers switch before anything vanishes)
-    val n = m.deepCopy[JsonNode]().asInstanceOf[com.fasterxml.jackson.databind.node.ObjectNode]
+    val n = m.deepCopy[JsonNode]().asInstanceOf[ObjectNode]
     val arr = M.createArrayNode()
     kept.foreach(arr.add)
     n.set[JsonNode]("snapshots", arr)
-    val out = f.create(new Path(metaDir, s"v${prevV + 1}.metadata.json"), true)
-    try out.write(M.writerWithDefaultPrettyPrinter().writeValueAsBytes(n))
-    finally out.close()
-    val hint = f.create(new Path(metaDir, "version-hint.text"), true)
-    try hint.write(String.valueOf(prevV + 1).getBytes) finally hint.close()
+    if (!IcebergWrite.publish(f, root, prevV, n))
+      throw new java.util.ConcurrentModificationException(
+        s"expiring snapshots of $dir raced a concurrent commit — re-run")
     var reclaimed = 0
     f.listStatus(metaDir).foreach { s0 =>
       val name = s0.getPath.getName
@@ -345,13 +385,14 @@ object IcebergUniform {
     *   - dataChange=true adds only → INCREMENTAL: one manifest of the
     *     new adds, prior manifests carried forward;
     *   - metaData only → metadata-only evolution (new schema-id when
-    *     the rendered schema changed, else nothing to do). */
+    *     the rendered schema changed, else nothing to do).
+    * `full` forces the FULL shape. False = another sync took the next
+    * metadata version. */
   private def sync(spark: SparkSession, dir: String, st: DeltaState,
-                   actions: Seq[String]): Unit = {
+                   actions: Seq[String], full: Boolean = false): Boolean = {
     val f = fs(spark, dir)
     val root = new Path(dir)
-    val metaDir = new Path(root, "metadata")
-    val prevV = currentHint(f, root)
+    val prevV = IcebergWrite.currentVersion(f, root)
     val prevMeta = readMeta(f, root, prevV)
 
     val nodes = actions.map(M.readTree)
@@ -361,10 +402,10 @@ object IcebergUniform {
     val metaChanged = nodes.exists(_.has("metaData"))
 
     val mode: Char =
-      if (prevMeta.isEmpty || hasRemove || weakAdds) 'F'
+      if (full || prevMeta.isEmpty || hasRemove || weakAdds) 'F'
       else if (adds.nonEmpty) 'I'
       else if (metaChanged) 'M'
-      else return
+      else return true
 
     val ids = fieldIds(st.schema)
     val schemaNode = renderSchema(ids)
@@ -374,66 +415,43 @@ object IcebergUniform {
     val (schemas, curSchemaId) = prevMeta match {
       case None =>
         val arr = M.createArrayNode()
-        val s0 = schemaNode.deepCopy[JsonNode]().asInstanceOf[com.fasterxml.jackson.databind.node.ObjectNode]
+        val s0 = schemaNode.deepCopy[JsonNode]().asInstanceOf[ObjectNode]
         s0.put("schema-id", 0); arr.add(s0); (arr, 0)
       case Some(m) =>
         import scala.jdk.CollectionConverters._
         val arr = m.path("schemas").deepCopy[JsonNode]()
-          .asInstanceOf[com.fasterxml.jackson.databind.node.ArrayNode]
+          .asInstanceOf[ArrayNode]
         val curId = m.path("current-schema-id").asInt(0)
         val cur = arr.elements().asScala.find(_.path("schema-id").asInt(-1) == curId).get
-        val curStripped = cur.deepCopy[JsonNode]().asInstanceOf[com.fasterxml.jackson.databind.node.ObjectNode]
+        val curStripped = cur.deepCopy[JsonNode]().asInstanceOf[ObjectNode]
         curStripped.remove("schema-id")
         if (curStripped == schemaNode) (arr, curId)
         else {
           val maxId = arr.elements().asScala.map(_.path("schema-id").asInt(0)).max
-          val s0 = schemaNode.deepCopy[JsonNode]().asInstanceOf[com.fasterxml.jackson.databind.node.ObjectNode]
+          val s0 = schemaNode.deepCopy[JsonNode]().asInstanceOf[ObjectNode]
           s0.put("schema-id", maxId + 1); arr.add(s0); (arr, maxId + 1)
         }
     }
     if (mode == 'M' &&
         prevMeta.exists(_.path("current-schema-id").asInt(0) == curSchemaId))
-      return // config-only change: nothing Iceberg-visible
+      return true // config-only change: nothing Iceberg-visible
 
     val idOfPhys = ids.map { case (fd, id, phys) => phys -> ((id, fd.dataType)) }.toMap
     val seqNo = prevMeta.map(_.path("last-sequence-number").asLong(0L)).getOrElse(0L) + 1
     val snapshotId = seqNo
 
-    val newSnapshot: Option[(Path, String)] = mode match {
-      case 'M' => None
-      case 'I' =>
-        val files = adds.map(addFileOf)
-        val mp = new Path(metaDir, s"uniform-m$seqNo.avro")
-        IcebergFormat.writeAvro(f, mp, IcebergFormat.EntrySchema,
-          files.map(fileEntry(spark, root, _, snapshotId, seqNo, idOfPhys)))
-        Some((mp, "append"))
-      case _ =>
-        val mp = new Path(metaDir, s"uniform-m$seqNo.avro")
-        IcebergFormat.writeAvro(f, mp, IcebergFormat.EntrySchema,
-          st.files.map(fileEntry(spark, root, _, snapshotId, seqNo, idOfPhys)))
-        Some((mp, if (prevMeta.isEmpty) "append" else "overwrite"))
-    }
-
     // manifest list: prior manifests carry forward on incremental
     // appends; full mode starts over with the single rewritten manifest
-    val listP = newSnapshot.map { case (mp, _) =>
-      val prior: Seq[org.apache.avro.generic.GenericRecord] =
-        if (mode == 'I')
-          prevMeta.toSeq.flatMap { m =>
-            import scala.jdk.CollectionConverters._
-            val cur = m.path("current-snapshot-id").asLong(-1L)
-            m.path("snapshots").elements().asScala
-              .find(_.path("snapshot-id").asLong(-2L) == cur).toSeq
-              .flatMap(s0 => IcebergInterop.avroRecords(spark,
-                new Path(resolve(s0.path("manifest-list").asText))))
-          }
-        else Nil
-      val mine = manifestRecord(mp, f.getFileStatus(mp).getLen, seqNo, snapshotId)
-      val lp = new Path(metaDir, s"uniform-snap-$snapshotId.avro")
-      // prior records re-serialize under OUR list schema (field-subset
-      // compatible: the carried manifests were written by this writer)
-      IcebergFormat.writeAvro(f, lp, IcebergFormat.ManifestFileSchema, prior :+ mine)
-      lp
+    val newSnapshot: Option[((Path, Path), String)] = mode match {
+      case 'M' => None
+      case 'I' =>
+        Some((writeSnapshotFiles(f, root, seqNo,
+          adds.map(a => fileEntry(spark, root, addFileOf(a), snapshotId, seqNo, idOfPhys)),
+          prevMeta.toSeq.flatMap(currentManifests(spark, _))), "append"))
+      case _ =>
+        Some((writeSnapshotFiles(f, root, seqNo,
+          st.files.map(fileEntry(spark, root, _, snapshotId, seqNo, idOfPhys)), Nil),
+          if (prevMeta.isEmpty) "append" else "overwrite"))
     }
 
     val n = M.createObjectNode()
@@ -455,27 +473,16 @@ object IcebergUniform {
       import scala.jdk.CollectionConverters._
       m.path("snapshots").elements().asScala.foreach(snaps.add)
     }
-    newSnapshot.foreach { case (_, op) =>
-      val s0 = snaps.addObject()
-      s0.put("snapshot-id", snapshotId)
-      s0.put("sequence-number", seqNo)
-      s0.put("timestamp-ms", System.currentTimeMillis())
-      s0.put("manifest-list", listP.get.toString)
-      s0.put("schema-id", curSchemaId)
-      val sum = s0.putObject("summary")
-      sum.put("operation", op)
-      sum.put("delta-version", st.version.toString)
+    newSnapshot match {
+      case Some((files, op)) =>
+        addSnapshot(snaps, snapshotId, files._2, curSchemaId, op, st.version)
+        n.put("current-snapshot-id", snapshotId)
+        publishOrDrop(f, root, prevV, n, files)
+      case None =>
+        prevMeta.foreach(m => if (m.hasNonNull("current-snapshot-id"))
+          n.put("current-snapshot-id", m.path("current-snapshot-id").asLong))
+        IcebergWrite.publish(f, root, prevV, n)
     }
-    if (newSnapshot.isEmpty)
-      prevMeta.foreach(m => if (m.hasNonNull("current-snapshot-id"))
-        n.put("current-snapshot-id", m.path("current-snapshot-id").asLong))
-    else n.put("current-snapshot-id", snapshotId)
-
-    val out = f.create(new Path(metaDir, s"v${prevV + 1}.metadata.json"), true)
-    try out.write(M.writerWithDefaultPrettyPrinter().writeValueAsBytes(n))
-    finally out.close()
-    val hint = f.create(new Path(metaDir, "version-hint.text"), true)
-    try hint.write(String.valueOf(prevV + 1).getBytes) finally hint.close()
   }
 
   /** Iceberg schema JSON (no schema-id) for the table's current
@@ -547,15 +554,6 @@ object IcebergUniform {
 
   private def resolve(uri: String): String =
     if (uri.startsWith("file:")) new java.net.URI(uri).getPath else uri
-
-  private def currentHint(f: FileSystem, root: Path): Int = {
-    val hintP = new Path(root, "metadata/version-hint.text")
-    if (!f.exists(hintP)) 0
-    else {
-      val in = f.open(hintP)
-      try scala.io.Source.fromInputStream(in).mkString.trim.toInt finally in.close()
-    }
-  }
 
   private def readMeta(f: FileSystem, root: Path, v: Int): Option[JsonNode] =
     if (v == 0) None

@@ -201,10 +201,10 @@ object IcebergWrite {
         IcebergFormat.serializeBound(dt, v).map(b => (b, b)))
     }
 
-  /** Current metadata version: `version-hint.text` when present, else
-    * the highest `v<N>.metadata.json` (hint is advisory in the spec's
-    * FS-catalog convention; the listing is ground truth). 0 = no table. */
-  private def currentVersion(f: FileSystem, root: Path): Int = {
+  /** Current metadata version: the highest `v<N>.metadata.json` listed
+    * (`version-hint.text` is advisory in the spec's FS-catalog
+    * convention; the listing is ground truth). 0 = no table. */
+  private[io] def currentVersion(f: FileSystem, root: Path): Int = {
     val meta = new Path(root, "metadata")
     if (!f.exists(meta)) return 0
     val listed = f.listStatus(meta).map(_.getPath.getName)
@@ -1932,18 +1932,22 @@ object IcebergWrite {
     * hidden temp, then [[Staging.putIfAbsent]] — a reader never sees
     * partial bytes, and a concurrent writer that got there first wins
     * (its version is never replaced). On success the advisory
-    * `version-hint.text` follows (readers fall back to the listing;
-    * last wins). False = the version was taken. */
-  private def publish(f: FileSystem, root: Path, base: Int, n: JsonNode): Boolean = {
+    * `version-hint.text` follows (readers fall back to the listing).
+    * The hint is last-writer-wins, so a writer whose hint write lands
+    * after a newer version's re-points it at that version. False = the
+    * version was taken. */
+  private[io] def publish(f: FileSystem, root: Path, base: Int, n: JsonNode): Boolean = {
     val tmp = new Path(root,
       s"metadata/.tmp-v${base + 1}-${java.util.UUID.randomUUID().toString.take(8)}.json")
     val out = f.create(tmp, false)
     try out.write(M.writerWithDefaultPrettyPrinter().writeValueAsBytes(n))
     finally out.close()
     val won = Staging.putIfAbsent(f, tmp, new Path(root, s"metadata/v${base + 1}.metadata.json"))
-    if (won) {
+    var v = if (won) base + 1 else 0
+    while (v > 0) {
       val hint = f.create(new Path(root, "metadata/version-hint.text"), true)
-      try hint.write(String.valueOf(base + 1).getBytes) finally hint.close()
+      try hint.write(String.valueOf(v).getBytes) finally hint.close()
+      v = if (f.exists(new Path(root, s"metadata/v${v + 1}.metadata.json"))) v + 1 else 0
     }
     won
   }

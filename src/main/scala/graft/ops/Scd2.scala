@@ -325,58 +325,4 @@ object Scd2 {
     graft.io.Writers.parquetRefreshPartitions(merged, tableDir, Seq("scd2_part"))
     touched
   }
-
-  /** The two scale properties combined — snapshot isolation AND
-    * partition-pruned rewrite: an idiomatic SCD2 merge against a
-    * [[graft.io.PartitionedSnapshotStore]] table. The delta reads only the
-    * key-hash partitions it touches, the commit writes new files only for
-    * those partitions (every other partition's manifest entry carries
-    * forward to the new version verbatim), and the atomic pointer swap
-    * gives readers snapshot isolation + time travel. This is the form of
-    * the reference's dimension sink you would actually run daily at
-    * 100 TB. Returns the committed version. */
-  def mergeSnapshotPartitioned(
-      newDf: DataFrame,
-      tableDir: String,
-      spec: Scd2Spec,
-      clock: Clock = SystemClock,
-      numPartitions: Int = 64
-  ): Int = {
-    import graft.io.PartitionedSnapshotStore
-    val spark = newDf.sparkSession
-    val delta = newDf.withColumn("scd2_part", partitionFor(spec, numPartitions))
-    val v = PartitionedSnapshotStore.latestVersion(spark, tableDir)
-    if (v == 0)
-      return PartitionedSnapshotStore.commitDelta(
-        stampChanged(delta, spec, clock), tableDir, "scd2_part")
-    val touched = delta.select(col("scd2_part")).distinct()
-      .collect().map(_.getInt(0)).toSeq
-    val manifest = PartitionedSnapshotStore.readManifest(spark, tableDir, v)
-    val touchedExisting = touched.filter(manifest.contains)
-    val existing =
-      if (touchedExisting.isEmpty) None
-      else Some(PartitionedSnapshotStore.read(spark, tableDir, v, "scd2_part",
-        Some(touchedExisting)))
-    val merged = mergeOnePass(delta, existing, spec, clock, keepHistory = true)
-    PartitionedSnapshotStore.commitDelta(merged, tableDir, "scd2_part")
-  }
-
-  /** Transactional SCD2 maintenance on a [[graft.io.SnapshotStore]] table:
-    * read the latest committed snapshot, run the one-exchange idiomatic
-    * merge, commit the result as a NEW immutable version with an atomic
-    * pointer swap. Readers mid-query keep the old snapshot; history
-    * versions stay time-travelable until vacuumed. This is the safe form
-    * of the reference's overwrite-in-place dimension write. Returns the
-    * committed version. */
-  def mergeSnapshot(
-      newDf: DataFrame,
-      tableDir: String,
-      spec: Scd2Spec,
-      clock: Clock = SystemClock
-  ): Int = {
-    val spark = newDf.sparkSession
-    val existing = graft.io.SnapshotStore.readLatest(spark, tableDir)
-    val merged = singleShuffleIdiomatic(newDf, existing, spec, clock)
-    graft.io.SnapshotStore.commit(merged, tableDir)
-  }
 }

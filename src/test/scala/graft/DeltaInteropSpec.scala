@@ -1,7 +1,7 @@
 package graft
 
 import java.nio.file.Files
-import graft.io.{DeltaInterop, PartitionedSnapshotStore}
+import graft.io.DeltaInterop
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -73,31 +73,6 @@ class DeltaInteropSpec extends AnyFunSuite {
     assert(e.getMessage.contains("concurrent Delta commit"))
     // the winner's log is untouched
     assert(DeltaInterop.readDelta(spark, dir).count() == 4)
-  }
-
-  test("exportSnapshot: incremental — only partitions whose store dir changed are copied") {
-    val warehouse = Files.createTempDirectory("graft-delta-store").toString
-    val storeDir = s"$warehouse/store"
-    val deltaDir = s"$warehouse/delta"
-    val v1 = table(40)
-    PartitionedSnapshotStore.commitDelta(v1, storeDir, "part")
-    val (sv1, dv1, copied1) = DeltaInterop.exportSnapshot(spark, storeDir, deltaDir, "part")
-    assert(sv1 == 1 && dv1 == 0L && copied1 > 0)
-    assert(DeltaInterop.readDelta(spark, deltaDir).count() == 40)
-    // store delta touches HALF the partitions
-    PartitionedSnapshotStore.commitDelta(
-      v1.filter(col("part") < 2).withColumn("rev", lit("b")), storeDir, "part")
-    val (sv2, dv2, copied2) = DeltaInterop.exportSnapshot(spark, storeDir, deltaDir, "part")
-    assert(sv2 == 2 && dv2 == 1L)
-    val t = DeltaInterop.readDelta(spark, deltaDir)
-    assert(t.count() == 40)
-    assert(t.filter(col("rev") === "b").count() == 20)
-    // incrementality: partitions 2/3 were NOT re-copied
-    val full = copied1
-    assert(copied2 < full, s"re-copied everything: $copied2 of $full")
-    // idempotent re-export: nothing changed, no new commit, no copies
-    val (_, dv3, copied3) = DeltaInterop.exportSnapshot(spark, storeDir, deltaDir, "part")
-    assert(dv3 == dv2 && copied3 == 0)
   }
 
   test("checkpoint: state from checkpoint ≡ full JSON replay; survives log cleanup; bounds below it") {
@@ -381,6 +356,37 @@ class DeltaInteropSpec extends AnyFunSuite {
     // a partition value absent from the table prunes everything
     assert(DeltaInterop.prunedFiles(st, partitionEq = Map("part" -> "9")).isEmpty)
     assert(DeltaInterop.readDeltaWhere(spark, dir, partitionEq = Map("part" -> "9")).count() == 0)
+  }
+
+  test("a null partition value is JSON null in the log; the old Hive sentinel still reads as null") {
+    val dir = Files.createTempDirectory("graft-delta-nullpart").toString
+    val df = Seq((1L, Option(3)), (2L, Option.empty[Int])).toDF("id", "p")
+    DeltaInterop.writeDelta(df, dir, Seq("p"))
+    val log0 = new java.io.File(f"$dir/_delta_log/${0L}%020d.json")
+    val json = new String(Files.readAllBytes(log0.toPath), "UTF-8")
+    // the directory keeps Hive's sentinel; the log's value is JSON null
+    assert(json.contains("\"partitionValues\":{\"p\":null}") &&
+      !json.contains("\"p\":\"__HIVE_DEFAULT_PARTITION__\""), json)
+    def rows() = DeltaInterop.readDelta(spark, dir).orderBy("id").collect()
+      .map(r => (r.getLong(0), Option(r.get(1)))).toSeq
+    assert(rows() == Seq((1L, Some(3)), (2L, None)))
+    val st = DeltaInterop.state(spark, dir)
+    assert(DeltaInterop.prunedFiles(st, partitionEq = Map("p" -> "3")).length == 1)
+    assert(DeltaInterop.readDeltaWhere(spark, dir, partitionEq = Map("p" -> "3"))
+      .collect().map(_.getLong(0)).toSeq == Seq(1L))
+    // a checkpoint keeps the null partition too
+    DeltaInterop.checkpoint(spark, dir)
+    DeltaInterop.cleanupLog(spark, dir)
+    assert(rows() == Seq((1L, Some(3)), (2L, None)))
+    // a log that spells the null partition as Hive's sentinel reads the same
+    val old = Files.createTempDirectory("graft-delta-nullpart-old").toString
+    DeltaInterop.writeDelta(df, old, Seq("p"))
+    val oldLog = java.nio.file.Paths.get(f"$old/_delta_log/${0L}%020d.json")
+    Files.write(oldLog, new String(Files.readAllBytes(oldLog), "UTF-8")
+      .replace("\"p\":null", "\"p\":\"__HIVE_DEFAULT_PARTITION__\"").getBytes("UTF-8"))
+    Files.deleteIfExists(java.nio.file.Paths.get(f"$old/_delta_log/.${0L}%020d.json.crc"))
+    assert(DeltaInterop.readDelta(spark, old).orderBy("id").collect()
+      .map(r => (r.getLong(0), Option(r.get(1)))).toSeq == Seq((1L, Some(3)), (2L, None)))
   }
 
   test("stock spark-shell (no graft, no delta jars) reads the written table from the log alone") {

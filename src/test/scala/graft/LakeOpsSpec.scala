@@ -1,6 +1,6 @@
 package graft
 
-import graft.io.ZoneMap
+import graft.io.DeltaInterop
 import graft.operators.{RangeJoin, TableDiff}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -8,7 +8,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import java.nio.file.Files
 
 /** Lakehouse-flavored operators: bucketed range join, snapshot diff, and
-  * zone-map file skipping (composed with the z-order layout). */
+  * Delta stats file skipping (composed with the z-order layout). */
 class LakeOpsSpec extends AnyFunSuite {
   lazy val spark = SharedSpark.spark
   import spark.implicits._
@@ -60,40 +60,43 @@ class LakeOpsSpec extends AnyFunSuite {
     assert(!counts.contains("added") && !counts.contains("changed"))
   }
 
-  test("ZoneMap over a z-ordered layout: strict file subset, identical answer") {
-    val dir = SparkEntry.ensureZoneMappedOrders(spark, "/root/testdata/sf0.001")
-    val ranges = Seq(("o_custkey", 10.0, 40.0), ("day", 1500.0, 1800.0))
-    val (kept, total) = ZoneMap.pruneFiles(spark, dir, ranges)
+  test("Delta skipping over a z-ordered layout: strict file subset, identical answer") {
+    val dir = SparkEntry.ensureZOrderedOrders(spark, "/root/testdata/sf0.001")
+    val ranges = Map("o_custkey" -> ((10.0, 40.0)), "day" -> ((1500.0, 1800.0)))
+    val st = DeltaInterop.state(spark, dir)
+    val kept = DeltaInterop.prunedFiles(st, ranges = ranges)
+    val total = st.files.length
     assert(total > 1 && kept.nonEmpty && kept.length < total,
       s"expected a strict subset: kept ${kept.length} of $total")
-    val pruned = ZoneMap.readPruned(spark, dir, ranges)
+    val pruned = DeltaInterop.readDeltaWhere(spark, dir, ranges = ranges)
       .filter(col("o_custkey").between(10, 40) && col("day").between(1500, 1800))
       .select("o_orderkey").collect().map(_.getLong(0)).toSet
-    val full = spark.read.parquet(dir)
+    val full = DeltaInterop.readDelta(spark, dir)
       .filter(col("o_custkey").between(10, 40) && col("day").between(1500, 1800))
       .select("o_orderkey").collect().map(_.getLong(0)).toSet
     assert(pruned == full && full.nonEmpty)
   }
 
-  test("ZoneMap: a column with no manifest stats cannot prune (superset contract holds)") {
-    val dir = SparkEntry.ensureZoneMappedOrders(spark, "/root/testdata/sf0.001")
-    // o_totalprice was never passed to index(): every file must survive —
-    // silently dropping them would violate "pruning is a superset"
-    val (kept, total) = ZoneMap.pruneFiles(spark, dir, Seq(("o_totalprice", 0.0, 1.0)))
-    assert(kept.length == total, s"unindexed column pruned files: ${kept.length} of $total")
-    // mixed: the indexed column still prunes, the unindexed one doesn't drop the rest
-    val (keptMixed, _) = ZoneMap.pruneFiles(spark, dir,
-      Seq(("o_custkey", 10.0, 40.0), ("o_totalprice", 0.0, 1.0)))
-    val (keptIndexed, _) = ZoneMap.pruneFiles(spark, dir, Seq(("o_custkey", 10.0, 40.0)))
-    assert(keptMixed.toSet == keptIndexed.toSet)
+  test("Delta skipping: a column with no stats cannot prune (superset contract holds)") {
+    val st = DeltaInterop.state(spark,
+      SparkEntry.ensureZOrderedOrders(spark, "/root/testdata/sf0.001"))
+    def kept(ranges: (String, (Double, Double))*) =
+      DeltaInterop.prunedFiles(st, ranges = ranges.toMap).map(_.path)
+    // o_totalprice is not in the layout, so no file has stats for it:
+    // every file must survive — silently dropping them would violate
+    // "pruning is a superset"
+    assert(kept("o_totalprice" -> ((0.0, 1.0))).length == st.files.length,
+      "a column without stats pruned files")
+    // mixed: the column with stats still prunes, the other doesn't drop the rest
+    assert(kept("o_custkey" -> ((10.0, 40.0)), "o_totalprice" -> ((0.0, 1.0))).toSet ==
+      kept("o_custkey" -> ((10.0, 40.0))).toSet)
   }
 
-  test("ZoneMap: disjoint ranges read zero files and return the schema, empty") {
-    val dir = SparkEntry.ensureZoneMappedOrders(spark, "/root/testdata/sf0.001")
-    val ranges = Seq(("o_custkey", 1e9, 2e9))
-    val (kept, _) = ZoneMap.pruneFiles(spark, dir, ranges)
-    assert(kept.isEmpty)
-    val df = ZoneMap.readPruned(spark, dir, ranges)
+  test("Delta skipping: disjoint ranges read zero files and return the schema, empty") {
+    val dir = SparkEntry.ensureZOrderedOrders(spark, "/root/testdata/sf0.001")
+    val ranges = Map("o_custkey" -> ((1e9, 2e9)))
+    assert(DeltaInterop.prunedFiles(DeltaInterop.state(spark, dir), ranges = ranges).isEmpty)
+    val df = DeltaInterop.readDeltaWhere(spark, dir, ranges = ranges)
     assert(df.columns.contains("o_orderkey") && df.count() == 0)
   }
 }

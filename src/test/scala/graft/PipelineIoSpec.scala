@@ -117,117 +117,6 @@ class PipelineIoSpec extends AnyFunSuite {
     assert(read.contains("rows=3 payers=2"), s"unexpected read output:\n$read")
   }
 
-  test("snapshot-store exports: file manifest and hive copy read back with stock readers") {
-    import spark.implicits._
-    val dir = Files.createTempDirectory("graft-snap-exp").toString + "/t"
-    val v1 = (0 until 40).map(i => (i.toLong, s"c$i", "a", i % 4)).toDF("id", "name", "rev", "part")
-    graft.io.PartitionedSnapshotStore.commitDelta(v1, dir, "part")
-    graft.io.PartitionedSnapshotStore.commitDelta(
-      v1.filter(col("part") < 2).withColumn("rev", lit("b")), dir, "part")
-    val expect = graft.io.PartitionedSnapshotStore.read(spark, dir, 2, "part")
-      .select("id", "name", "rev", "part").collect().map(_.toSeq).toSet
-
-    // file manifest: stock recipe = text file of paths + basePath read
-    val mf = s"$dir/_file_manifest.txt"
-    val (v, nFiles) = graft.io.SnapshotInterop.exportFileManifest(spark, dir, mf)
-    assert(v == 2 && nFiles > 0)
-    val files = scala.io.Source.fromFile(mf.stripPrefix("file:")).getLines().toSeq
-    assert(files.nonEmpty && files.forall(_.endsWith(".parquet")))
-    val viaManifest = spark.read.option("basePath", s"$dir/data").parquet(files: _*)
-      .select("id", "name", "rev", "part").collect().map(_.toSeq).toSet
-    assert(viaManifest == expect)
-
-    // hive materialization: one plain partitioned dir, plain read
-    val out = s"$dir/../hive_export"
-    graft.io.SnapshotInterop.exportHive(spark, dir, out, "part")
-    val viaHive = spark.read.parquet(out)
-      .select("id", "name", "rev", "part").collect().map(_.toSeq).toSet
-    assert(viaHive == expect)
-  }
-
-  test("snapshot schema evolution: a widening delta reads old partitions as null; catalog follows") {
-    import spark.implicits._
-    val dir = Files.createTempDirectory("graft-snap-evo").toString + "/t"
-    val v1 = (0 until 40).map(i => (i.toLong, s"c$i", i % 4)).toDF("id", "name", "part")
-    graft.io.PartitionedSnapshotStore.commitDelta(v1, dir, "part")
-    graft.io.SnapshotInterop.publishToCatalog(spark, dir, "snap_evo_t", "part")
-    assert(!spark.table("snap_evo_t").columns.contains("extra"))
-    // v2 widens: parts 0/1 rewritten WITH a new column; 2/3 carry forward
-    graft.io.PartitionedSnapshotStore.commitDelta(
-      v1.filter(col("part") < 2).withColumn("extra", lit("x")), dir, "part")
-    val r = graft.io.PartitionedSnapshotStore.read(spark, dir, 2, "part")
-    assert(r.columns.toSet == Set("id", "name", "extra", "part"))
-    assert(r.filter(col("extra") === "x").count() == 20)
-    assert(r.filter(col("extra").isNull).count() == 20) // old partitions: null fill
-    // republish widens the CATALOG table additively; old files read null
-    graft.io.SnapshotInterop.publishToCatalog(spark, dir, "snap_evo_t", "part")
-    val t = spark.table("snap_evo_t")
-    assert(t.columns.contains("extra"))
-    assert(t.filter(col("extra") === "x").count() == 20)
-    assert(t.filter(col("extra").isNull).count() == 20)
-    assert(t.count() == 40)
-    spark.sql("DROP TABLE snap_evo_t")
-  }
-
-  test("snapshot publish survives vacuum: retained manifests pin every referenced data dir") {
-    import spark.implicits._
-    val dir = Files.createTempDirectory("graft-snap-vac").toString + "/t"
-    val v1 = (0 until 40).map(i => (i.toLong, s"c$i", "a", i % 4)).toDF("id", "name", "rev", "part")
-    graft.io.PartitionedSnapshotStore.commitDelta(v1, dir, "part")
-    // v2 rewrites parts 0/1 only — parts 2/3 still point at v1's data dirs
-    graft.io.PartitionedSnapshotStore.commitDelta(
-      v1.filter(col("part") < 2).withColumn("rev", lit("b")), dir, "part")
-    graft.io.SnapshotInterop.publishToCatalog(spark, dir, "snap_vac_t", "part")
-    // vacuum to the latest version only: manifest v1 drops, but the v1
-    // data dirs REFERENCED by manifest v2 must survive
-    graft.io.PartitionedSnapshotStore.vacuum(spark, dir, keep = 1)
-    val t = spark.table("snap_vac_t")
-    assert(t.count() == 40)
-    assert(t.filter(col("rev") === "b").count() == 20)
-    // a later delta + republish repoints the touched partitions
-    graft.io.PartitionedSnapshotStore.commitDelta(
-      v1.filter(col("part") === 3).withColumn("rev", lit("c")), dir, "part")
-    graft.io.SnapshotInterop.publishToCatalog(spark, dir, "snap_vac_t", "part")
-    assert(spark.table("snap_vac_t").filter(col("rev") === "c").count() == 10)
-    assert(spark.table("snap_vac_t").count() == 40)
-    spark.sql("DROP TABLE snap_vac_t")
-  }
-
-  test("snapshot-store interop: a second JVM reads the published table with stock Spark only") {
-    val warehouse = Files.createTempDirectory("graft-snap-warehouse").toString
-    def runPhase(mode: String): String = {
-      val java = s"${System.getProperty("java.home")}/bin/java"
-      val addOpens = Seq(
-        "java.base/java.lang", "java.base/java.lang.invoke",
-        "java.base/java.lang.reflect", "java.base/java.io",
-        "java.base/java.net", "java.base/java.nio",
-        "java.base/java.util", "java.base/java.util.concurrent",
-        "java.base/java.util.concurrent.atomic",
-        "java.base/sun.nio.ch", "java.base/sun.nio.cs",
-        "java.base/sun.security.action", "java.base/sun.util.calendar"
-      ).flatMap(p => Seq("--add-opens", s"$p=ALL-UNNAMED"))
-      val cmd = Seq(java) ++ addOpens ++ Seq(
-        "-Xmx2g", "-DSPARK_GRAFT_CPUS=4",
-        "-cp", System.getProperty("java.class.path"),
-        "graft.tools.SnapshotSmoke", mode, warehouse)
-      val out = new StringBuilder
-      val proc = new ProcessBuilder(cmd: _*).redirectErrorStream(true).start()
-      scala.io.Source.fromInputStream(proc.getInputStream).getLines()
-        .foreach(l => out.append(l).append('\n'))
-      assert(proc.waitFor() == 0, s"SnapshotSmoke $mode failed:\n$out")
-      out.toString
-    }
-    // publish = catalog metadata over the v2 manifest (v1 dirs shared for
-    // untouched partitions 2/3, v2 dirs for rewritten 0/1)
-    assert(runPhase("write").contains("published=v2 rows=40"))
-    // the stock read in a FRESH JVM sees: all 40 rows, the delta's rev=b
-    // rows exactly where v2 rewrote (partitions 0/1 = 20 rows), 4 catalog
-    // partitions, and partition-pruned SQL over an untouched partition
-    val read = runPhase("read")
-    assert(read.contains("rows=40 rev_b=20 partitions=4 part3=10"),
-      s"unexpected stock-read output:\n$read")
-  }
-
   test("IVF-PQ index persistence: a fresh JVM serves the published artifact bit-identically, no retrain") {
     val indexDir = Files.createTempDirectory("graft-ivfpq-idx").toString
     def runPhase(mode: String): String = {

@@ -108,29 +108,6 @@ class Scd2Spec extends AnyFunSuite {
     assert(exchanges == 1, s"expected 1 exchange, got $exchanges in:\n$plan")
   }
 
-  test("snapshot-store SCD2: versioned commits, time travel, atomic pointer, vacuum") {
-    import graft.io.SnapshotStore
-    val dir = java.nio.file.Files.createTempDirectory("graft-snap").toString
-    val v1 = Scd2.mergeSnapshot(dim(("1", "a", "x"), ("2", "b", "y")), dir, spec, t0)
-    val v2 = Scd2.mergeSnapshot(dim(("1", "a", "x2"), ("2", "b", "y")), dir, spec, t1)
-    assert((v1, v2) == (1, 2))
-    assert(SnapshotStore.latestVersion(spark, dir) == 2)
-    // latest: key 1 has expired v + active v2; key 2 untouched
-    val latest = SnapshotStore.readLatest(spark, dir).get
-    assert(latest.filter($"id" === "1").count() == 2)
-    assert(latest.filter($"id" === "1" && $"is_active" === true)
-      .head().getAs[String]("city") == "x2")
-    // time travel: version 1 still shows the original state
-    val old = SnapshotStore.read(spark, dir, 1)
-    assert(old.filter($"id" === "1").count() == 1)
-    assert(old.filter($"is_active" === true).count() == 2)
-    // vacuum keeps the latest `keep` versions
-    val v3 = Scd2.mergeSnapshot(dim(("1", "a", "x3"), ("2", "b", "y")), dir, spec, t2)
-    SnapshotStore.vacuum(spark, dir, keep = 2)
-    assert(!new java.io.File(s"$dir/v=1").exists())
-    assert(new java.io.File(s"$dir/v=2").exists() && new java.io.File(s"$dir/v=$v3").exists())
-  }
-
   test("partition-pruned merge rewrites only the partitions the delta touches") {
     val dir = java.nio.file.Files.createTempDirectory("graft-scd2-part").toString
     val nParts = 8
@@ -170,55 +147,6 @@ class Scd2Spec extends AnyFunSuite {
     assert(table.count() == 41)
     // every key's versions live in the partition its key hashes to
     assert(table.filter($"id" === "k7").select("scd2_part").distinct().count() == 1)
-  }
-
-  test("partitioned snapshot merge: pruned commit, shared files, time travel, safe vacuum") {
-    import graft.io.PartitionedSnapshotStore
-    val dir = java.nio.file.Files.createTempDirectory("graft-scd2-psnap").toString
-    val nParts = 8
-    val run1 = (1 to 40).map(i => (s"k$i", s"name$i", "x")).toDF("id", "name", "city")
-    assert(Scd2.mergeSnapshotPartitioned(run1, dir, spec, t0, nParts) == 1)
-    val m1 = PartitionedSnapshotStore.readManifest(spark, dir, 1)
-    assert(m1.size == nParts && m1.values.forall(_.contains("v=1")))
-
-    // delta commit: one changed key → exactly one partition gets new files
-    assert(Scd2.mergeSnapshotPartitioned(
-      Seq(("k7", "name7", "MOVED")).toDF("id", "name", "city"), dir, spec, t1, nParts) == 2)
-    val m2 = PartitionedSnapshotStore.readManifest(spark, dir, 2)
-    val changed = m2.filter { case (p, path) => m1(p) != path }
-    assert(changed.size == 1, s"expected one rewritten partition, got $changed")
-    assert(changed.values.head.contains("v=2"))
-    // every untouched partition's entry carried forward VERBATIM (same files)
-    assert((m2 -- changed.keys) == (m1 -- changed.keys))
-
-    // latest read: correct SCD2 (expired + active for k7), full key set
-    val latest = PartitionedSnapshotStore.readLatest(spark, dir, "scd2_part").get
-    assert(latest.count() == 41)
-    val k7 = latest.filter($"id" === "k7").collect()
-    assert(k7.length == 2 && k7.count(_.getAs[Boolean]("is_active")) == 1)
-    // time travel: v1 still has the pre-change row only
-    val v1 = PartitionedSnapshotStore.read(spark, dir, 1, "scd2_part")
-    assert(v1.count() == 40)
-    assert(v1.filter($"id" === "k7").head().getAs[String]("city") == "x")
-
-    // vacuum keeping 2 versions: v=1 data dirs are still referenced by the
-    // v=2 manifest (shared files) and MUST survive
-    PartitionedSnapshotStore.vacuum(spark, dir, keep = 2)
-    assert(PartitionedSnapshotStore.readLatest(spark, dir, "scd2_part").get.count() == 41)
-
-    // a third commit, then vacuum keeping 1: only v=3's manifest is
-    // retained; v=2's solitary data dir loses its last reference ONLY if
-    // v=3 rewrote that partition — k7 changes again, so it does
-    assert(Scd2.mergeSnapshotPartitioned(
-      Seq(("k7", "name7", "MOVED-AGAIN")).toDF("id", "name", "city"), dir, spec, t2, nParts) == 3)
-    PartitionedSnapshotStore.vacuum(spark, dir, keep = 1)
-    val afterVacuum = PartitionedSnapshotStore.readLatest(spark, dir, "scd2_part").get
-    assert(afterVacuum.count() == 42) // 40 + 2 history versions of k7
-    assert(afterVacuum.filter($"id" === "k7" && $"is_active").head()
-      .getAs[String]("city") == "MOVED-AGAIN")
-    // v=2's data dir is gone (unreferenced), v=1's survives (still shared)
-    val dataDirs = new java.io.File(s"$dir/data").listFiles().map(_.getName).toSet
-    assert(dataDirs.contains("v=1") && !dataDirs.contains("v=2") && dataDirs.contains("v=3"))
   }
 
   test("new keys insert as active; deleted keys stay (no delete detection)") {
