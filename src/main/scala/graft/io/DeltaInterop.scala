@@ -1,7 +1,7 @@
 package graft.io
 
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
-import graft.io.lake.Staging
+import graft.io.lake.{Commit, Staging}
 import graft.pipeline.Par
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.parquet.hadoop.ParquetFileReader
@@ -33,8 +33,13 @@ import org.apache.spark.sql.types.{DataType, StructField, StructType}
   *     parquet footers (metadata-only read) so downstream readers get
   *     file skipping;
   *   - commits are atomic put-if-absent creates of
-  *     `_delta_log/%020d.json` — a losing concurrent writer gets a
-  *     version-conflict error, never a corrupt log.
+  *     `_delta_log/%020d.json` — a losing concurrent writer gets the
+  *     kernel's lost-race signal ([[graft.io.lake.Commit.LostRace]]),
+  *     never a corrupt log. [[writeDelta]] and [[appendOnce]] run
+  *     their commit through the one optimistic loop
+  *     ([[graft.io.lake.Commit.optimistic]]): an append rebases onto
+  *     the new head, at most 1 + `Commit.MaxCommitRetries` attempts;
+  *     an overwrite fails fast. Every other operation commits once.
   *
   * Scale shape: the log is metadata-sized (actions, not rows); data
   * files are written once by the normal distributed write and MOVED
@@ -54,11 +59,6 @@ import org.apache.spark.sql.types.{DataType, StructField, StructType}
 object DeltaInterop {
 
   private val M = new ObjectMapper()
-
-  /** Version races an append ([[writeDeltaResilient]], [[appendOnce]])
-    * may lose, re-committing its staged files each time, before it
-    * gives up. */
-  val MaxCommitRetries = 10
 
   private def fs(spark: SparkSession, dir: String): FileSystem =
     new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -2097,46 +2097,39 @@ object DeltaInterop {
     new Path(catalog.defaultTablePath(ident)).toString
   }
 
-  /** [[writeDelta]] with optimistic-concurrency retry — Delta's
-    * transaction contract. An APPEND never logically conflicts with a
-    * concurrent commit (its staged files are fresh names, its adds
-    * remove nothing), so on a version collision it REBASES: re-read the
-    * head, re-validate the (possibly evolved) schema, re-commit the
-    * same staged files at the new version — the data is written once,
-    * only the metadata attempt repeats. An OVERWRITE's remove-set is
-    * invalidated by any concurrent commit, so it fails fast to the
-    * caller (delta-spark's ProtocolChangedException/
-    * ConcurrentWriteException split, collapsed to the append case we
-    * actually run at scale). Retries are bounded; the put-if-absent
-    * commit keeps every outcome corruption-free regardless. */
-  def writeDeltaResilient(df: DataFrame, dir: String, partCols: Seq[String]): Long = {
-    val spark = df.sparkSession
-    val adds = stageTableData(df, dir, partCols) // written ONCE
-    var attempt = 0
-    while (true) {
-      try return attemptCommit(spark, dir, partCols, df.schema, adds,
-        overwrite = false, checkpointInterval = 10)
-      catch {
-        case e: IllegalStateException
-          if e.getMessage.contains("concurrent Delta commit") =>
-          attempt += 1
-          if (attempt > MaxCommitRetries)
-            throw new IllegalStateException(
-              s"append lost $MaxCommitRetries version races under $dir", e)
-      }
-    }
-    -1L // unreachable
-  }
-
   /** As [[writeDelta]], with the checkpoint cadence explicit: every
     * `checkpointInterval`-th commit also writes a checkpoint (0
-    * disables — delta-spark's `checkpointInterval` table property). */
+    * disables — delta-spark's `checkpointInterval` table property).
+    * Optimistic concurrency is Delta's transaction contract: an APPEND
+    * never logically conflicts with a concurrent commit (its staged
+    * files are fresh names, its adds remove nothing), so on a version
+    * collision it REBASES — re-read the head, re-validate the (possibly
+    * evolved) schema, re-commit the same staged files at the new
+    * version; the data is written once, only the log attempt repeats.
+    * An OVERWRITE's remove-set is invalidated by any concurrent commit,
+    * so it fails fast with the lost race (delta-spark's
+    * ProtocolChangedException/ConcurrentWriteException split, collapsed
+    * to the append case we actually run at scale). */
   def writeDelta(df: DataFrame, dir: String, partCols: Seq[String],
-                 overwrite: Boolean, checkpointInterval: Int): Long = {
+                 overwrite: Boolean, checkpointInterval: Int): Long =
+    commitStaged(df, dir, partCols, overwrite, checkpointInterval, txn = None)
+
+  /** Stage `df` once, then commit it through [[Commit.optimistic]]: a
+    * lost append rebases; a lost overwrite rethrows; with a `txn`, a
+    * duplicate writer that committed the same batch first wins and our
+    * staged files drop. */
+  private def commitStaged(df: DataFrame, dir: String, partCols: Seq[String],
+                           overwrite: Boolean, checkpointInterval: Int,
+                           txn: Option[(String, Long)]): Long = {
     val spark = df.sparkSession
     val adds = stageTableData(df, dir, partCols)
-    attemptCommit(spark, dir, partCols, df.schema, adds, overwrite,
-      checkpointInterval)
+    Commit.optimistic(fs(spark, dir), if (overwrite) "overwrite" else "append", dir,
+      staged = adds.map(a => new Path(dir, a.path)),
+      replayed = txn.flatMap { case (appId, tv) => committedTxn(spark, dir, appId, tv) },
+      conflict = lost => if (overwrite) Some(lost) else None) { _ =>
+      attemptCommit(spark, dir, partCols, df.schema, adds, overwrite,
+        checkpointInterval, txn)
+    }
   }
 
   /** Stage `df` ([[Staging.stage]]) under Spark's part-file names in
@@ -2343,9 +2336,9 @@ object DeltaInterop {
   }
 
   /** One optimistic commit attempt for already-staged files: read the
-    * head, validate, commit at head+1. Throws the put-if-absent
-    * version-conflict `IllegalStateException` if another writer won the
-    * version — the staged data files remain valid for a rebase. */
+    * head, validate, commit at head+1. Throws [[Commit.LostRace]] if
+    * another writer won the version — the staged data files remain
+    * valid for a rebase. */
   private def attemptCommit(spark: SparkSession, dir: String,
                             partCols: Seq[String], schema: StructType,
                             adds: Seq[AddFile], overwrite: Boolean,
@@ -2418,49 +2411,25 @@ object DeltaInterop {
     * exactly-once contract for streaming micro-batches: a batch
     * replayed after a crash (committed to the table but not yet to the
     * engine's own checkpoint) is recognized and dropped instead of
-    * double-counted. Loses of the version race rebase like
-    * [[writeDeltaResilient]]; a racing DUPLICATE of the same txn is
-    * caught on re-read and its staged files are cleaned up. Returns the
-    * table version holding (or already holding) the batch. */
+    * double-counted. Lost version races rebase like [[writeDelta]]'s
+    * appends; a racing DUPLICATE of the same txn is caught on re-read
+    * and its staged files are cleaned up. Returns the table version
+    * holding (or already holding) the batch. */
   def appendOnce(df: DataFrame, dir: String, partCols: Seq[String],
-                 appId: String, txnVersion: Long): Long = {
-    val spark = df.sparkSession
-    def committedAt(): Option[Long] = {
-      val prev = latestVersion(spark, dir)
-      if (prev < 0) None
-      else {
-        val st = state(spark, dir)
-        if (st.txns.get(appId).exists(_ >= txnVersion)) Some(st.version) else None
-      }
+                 appId: String, txnVersion: Long): Long =
+    committedTxn(df.sparkSession, dir, appId, txnVersion).getOrElse( // replayed: nothing staged
+      commitStaged(df, dir, partCols, overwrite = false, checkpointInterval = 10,
+        txn = Some((appId, txnVersion))))
+
+  /** The head version when `appId`'s txn watermark already covers
+    * `txnVersion`. */
+  private def committedTxn(spark: SparkSession, dir: String, appId: String,
+                           txnVersion: Long): Option[Long] =
+    if (latestVersion(spark, dir) < 0) None
+    else {
+      val st = state(spark, dir)
+      if (st.txns.get(appId).exists(_ >= txnVersion)) Some(st.version) else None
     }
-    committedAt() match {
-      case Some(v) => return v // replayed batch: nothing staged, nothing written
-      case None    => ()
-    }
-    val adds = stageTableData(df, dir, partCols)
-    var attempt = 0
-    while (true) {
-      try return attemptCommit(spark, dir, partCols, df.schema, adds,
-        overwrite = false, checkpointInterval = 10,
-        txn = Some((appId, txnVersion)))
-      catch {
-        case e: IllegalStateException
-          if e.getMessage.contains("concurrent Delta commit") =>
-          committedAt() match {
-            case Some(v) => // a duplicate writer won: drop our staged files
-              val f = fs(spark, dir)
-              adds.foreach(a => f.delete(new Path(dir, a.path), false))
-              return v
-            case None =>
-              attempt += 1
-              if (attempt > MaxCommitRetries)
-                throw new IllegalStateException(
-                  s"append lost $MaxCommitRetries version races under $dir", e)
-          }
-      }
-    }
-    -1L // unreachable
-  }
 
   /** OPTIMIZE-style small-file compaction: live files smaller than
     * `smallFileBytes` are rewritten into ~one file per partition and
@@ -3143,8 +3112,7 @@ object DeltaInterop {
     try out.write((all.mkString("\n") + "\n").getBytes("UTF-8"))
     finally out.close()
     if (!Staging.putIfAbsent(f, tmp, target))
-      throw new IllegalStateException(
-        s"concurrent Delta commit at v=$v under $dir")
+      throw new Commit.LostRace(s"concurrent Delta commit at v=$v under $dir")
     // uniform tables mirror every commit as an Iceberg snapshot —
     // one marker-file existence check for everything else
     IcebergUniform.maybeSync(spark, dir, v, all)

@@ -7,6 +7,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types._
 
 import graft.io.DeltaInterop.{AddFile, DeltaState}
+import graft.io.lake.Commit
 
 /** UniForm: Iceberg metadata a Delta table maintains alongside its
   * own log, so Iceberg readers can read the table WITHOUT a copy —
@@ -108,9 +109,11 @@ object IcebergUniform {
     * refresh the marker cache. Loud on failure — the Delta commit is
     * already durable, and a missed sync self-heals on the next
     * full-path commit (it renders CURRENT state), but silent lag would
-    * let an Iceberg reader read stale data with no signal. A sync that
-    * loses its metadata version to a concurrent commit's sync
-    * re-renders the current state in full ([[resync]]). */
+    * let an Iceberg reader read stale data with no signal. The sync
+    * runs through the one optimistic loop ([[Commit.optimistic]]): one
+    * that loses its metadata version to a concurrent commit's sync
+    * deletes its manifest and list and re-renders the current state in
+    * full, at most 1 + `Commit.MaxCommitRetries` attempts. */
   def maybeSync(spark: SparkSession, dir: String, deltaVersion: Long,
                 actions: Seq[String]): Unit = {
     val f = fs(spark, dir)
@@ -126,8 +129,7 @@ object IcebergUniform {
       val base = IcebergWrite.currentVersion(f, root)
       readMarker(f, markerP).zip(readMeta(f, root, base)) match {
         case Some((cols, m)) =>
-          if (!syncIncremental(spark, dir, f, base, m, cols, deltaVersion, adds))
-            resync(spark, dir)
+          syncing(spark, dir)(syncIncremental(_, spark, dir, f, base, m, cols, deltaVersion, adds))
           return
         case None => // cache not seeded yet — fall through to the full path
       }
@@ -137,21 +139,18 @@ object IcebergUniform {
       f.delete(markerP, false) // disarm: later commits skip in one exists()
       return
     }
-    if (!sync(spark, dir, st, actions)) resync(spark, dir)
+    syncing(spark, dir)(sync(_, spark, dir, st, actions))
     writeMarker(f, markerP, st)
   }
 
-  /** Render the CURRENT Delta state in full after a lost sync: it
-    * covers this commit and the one whose sync won. */
-  private def resync(spark: SparkSession, dir: String): Unit = {
-    var lost = 0
-    while (!sync(spark, dir, DeltaInterop.state(spark, dir), Nil, full = true)) {
-      lost += 1
-      if (lost == IcebergWrite.MaxCommitRetries)
-        throw new java.util.ConcurrentModificationException(
-          s"UniForm sync of $dir lost $lost metadata version races")
+  /** Run `first` as the sync's first attempt; after a lost race, render
+    * the CURRENT Delta state in full: it covers this commit and the one
+    * whose sync won. */
+  private def syncing(spark: SparkSession, dir: String)(first: Commit.Attempt => Unit): Unit =
+    Commit.optimistic(fs(spark, dir), "UniForm sync", dir) { at =>
+      if (at.n == 0) first(at)
+      else sync(at, spark, dir, DeltaInterop.state(spark, dir), Nil, full = true)
     }
-  }
 
   /** The marker file doubles as the fast path's schema cache:
     * physical column name → (field id, Spark type JSON), refreshed on
@@ -185,23 +184,23 @@ object IcebergUniform {
   /** FAST append sync: one new manifest from the committed adds, prior
     * manifests carried by reference, `prevMeta` (version `base`) deep-
     * copied with one more snapshot — O(new files) metadata work and
-    * zero Delta log replay. False = another sync took version base+1. */
-  private def syncIncremental(spark: SparkSession, dir: String, f: FileSystem,
-                              base: Int, prevMeta: JsonNode,
+    * zero Delta log replay. */
+  private def syncIncremental(at: Commit.Attempt, spark: SparkSession, dir: String,
+                              f: FileSystem, base: Int, prevMeta: JsonNode,
                               cols: Map[String, (Int, DataType)],
-                              deltaVersion: Long, adds: Seq[JsonNode]): Boolean = {
+                              deltaVersion: Long, adds: Seq[JsonNode]): Unit = {
     val root = new Path(dir)
     val seqNo = prevMeta.path("last-sequence-number").asLong(0L) + 1
     val snapshotId = seqNo
-    val files = writeSnapshotFiles(f, root, seqNo,
+    val list = writeSnapshotFiles(at, f, root, seqNo,
       adds.map(a => fileEntry(spark, root, addFileOf(a), snapshotId, seqNo, cols)),
       currentManifests(spark, prevMeta))
     val n = prevMeta.deepCopy[JsonNode]().asInstanceOf[ObjectNode]
     n.put("last-sequence-number", seqNo)
-    addSnapshot(n.path("snapshots").asInstanceOf[ArrayNode], seqNo, files._2,
+    addSnapshot(n.path("snapshots").asInstanceOf[ArrayNode], seqNo, list,
       n.path("current-schema-id").asInt(0), "append", deltaVersion)
     n.put("current-snapshot-id", snapshotId)
-    publishOrDrop(f, root, base, n, files)
+    publish(f, root, base, n)
   }
 
   /** The current snapshot's manifest records, carried forward by an
@@ -218,18 +217,18 @@ object IcebergUniform {
 
   /** Write one attempt's manifest of `entries` and its manifest list
     * (`prior` manifests first, re-serialized under this writer's list
-    * schema), named uniquely so racing attempts never share a file.
-    * Returns (manifest, list). */
-  private def writeSnapshotFiles(f: FileSystem, root: Path, seqNo: Long,
+    * schema), named uniquely so racing attempts never share a file, and
+    * declared to `at`. Returns the list. */
+  private def writeSnapshotFiles(at: Commit.Attempt, f: FileSystem, root: Path, seqNo: Long,
                                  entries: Seq[org.apache.avro.generic.GenericRecord],
-                                 prior: Seq[org.apache.avro.generic.GenericRecord]): (Path, Path) = {
+                                 prior: Seq[org.apache.avro.generic.GenericRecord]): Path = {
     val tag = java.util.UUID.randomUUID().toString.take(8)
-    val mp = new Path(root, s"metadata/uniform-m$seqNo-$tag.avro")
+    val mp = at.declare(new Path(root, s"metadata/uniform-m$seqNo-$tag.avro"))
     IcebergFormat.writeAvro(f, mp, IcebergFormat.EntrySchema, entries)
-    val lp = new Path(root, s"metadata/uniform-snap-$seqNo-$tag.avro")
+    val lp = at.declare(new Path(root, s"metadata/uniform-snap-$seqNo-$tag.avro"))
     IcebergFormat.writeAvro(f, lp, IcebergFormat.ManifestFileSchema,
       prior :+ manifestRecord(mp, f.getFileStatus(mp).getLen, seqNo, seqNo))
-    (mp, lp)
+    lp
   }
 
   private def addSnapshot(snaps: ArrayNode, snapshotId: Long, list: Path, schemaId: Int,
@@ -245,13 +244,11 @@ object IcebergUniform {
     sum.put("delta-version", deltaVersion.toString)
   }
 
-  /** [[IcebergWrite.publish]] `n` as version base+1; a lost attempt
-    * deletes its own manifest and list. */
-  private def publishOrDrop(f: FileSystem, root: Path, base: Int, n: JsonNode,
-                            files: (Path, Path)): Boolean =
-    IcebergWrite.publish(f, root, base, n) || {
-      f.delete(files._1, false); f.delete(files._2, false); false
-    }
+  /** [[IcebergWrite.publish]] `n` as version base+1, or the kernel's
+    * lost-race signal. */
+  private def publish(f: FileSystem, root: Path, base: Int, n: JsonNode): Unit =
+    if (!IcebergWrite.publish(f, root, base, n))
+      throw new Commit.LostRace(s"UniForm metadata v${base + 1} of $root was published concurrently")
 
   /** ADOPT a FOREIGN UniForm mirror: a table whose Delta config
     * declares uniform but whose `metadata/` was authored by another
@@ -352,7 +349,7 @@ object IcebergUniform {
     kept.foreach(arr.add)
     n.set[JsonNode]("snapshots", arr)
     if (!IcebergWrite.publish(f, root, prevV, n))
-      throw new java.util.ConcurrentModificationException(
+      throw new IllegalStateException(
         s"expiring snapshots of $dir raced a concurrent commit — re-run")
     var reclaimed = 0
     f.listStatus(metaDir).foreach { s0 =>
@@ -386,10 +383,9 @@ object IcebergUniform {
     *     new adds, prior manifests carried forward;
     *   - metaData only → metadata-only evolution (new schema-id when
     *     the rendered schema changed, else nothing to do).
-    * `full` forces the FULL shape. False = another sync took the next
-    * metadata version. */
-  private def sync(spark: SparkSession, dir: String, st: DeltaState,
-                   actions: Seq[String], full: Boolean = false): Boolean = {
+    * `full` forces the FULL shape. */
+  private def sync(at: Commit.Attempt, spark: SparkSession, dir: String, st: DeltaState,
+                   actions: Seq[String], full: Boolean = false): Unit = {
     val f = fs(spark, dir)
     val root = new Path(dir)
     val prevV = IcebergWrite.currentVersion(f, root)
@@ -405,7 +401,7 @@ object IcebergUniform {
       if (full || prevMeta.isEmpty || hasRemove || weakAdds) 'F'
       else if (adds.nonEmpty) 'I'
       else if (metaChanged) 'M'
-      else return true
+      else return
 
     val ids = fieldIds(st.schema)
     val schemaNode = renderSchema(ids)
@@ -434,7 +430,7 @@ object IcebergUniform {
     }
     if (mode == 'M' &&
         prevMeta.exists(_.path("current-schema-id").asInt(0) == curSchemaId))
-      return true // config-only change: nothing Iceberg-visible
+      return // config-only change: nothing Iceberg-visible
 
     val idOfPhys = ids.map { case (fd, id, phys) => phys -> ((id, fd.dataType)) }.toMap
     val seqNo = prevMeta.map(_.path("last-sequence-number").asLong(0L)).getOrElse(0L) + 1
@@ -442,14 +438,14 @@ object IcebergUniform {
 
     // manifest list: prior manifests carry forward on incremental
     // appends; full mode starts over with the single rewritten manifest
-    val newSnapshot: Option[((Path, Path), String)] = mode match {
+    val newSnapshot: Option[(Path, String)] = mode match {
       case 'M' => None
       case 'I' =>
-        Some((writeSnapshotFiles(f, root, seqNo,
+        Some((writeSnapshotFiles(at, f, root, seqNo,
           adds.map(a => fileEntry(spark, root, addFileOf(a), snapshotId, seqNo, idOfPhys)),
           prevMeta.toSeq.flatMap(currentManifests(spark, _))), "append"))
       case _ =>
-        Some((writeSnapshotFiles(f, root, seqNo,
+        Some((writeSnapshotFiles(at, f, root, seqNo,
           st.files.map(fileEntry(spark, root, _, snapshotId, seqNo, idOfPhys)), Nil),
           if (prevMeta.isEmpty) "append" else "overwrite"))
     }
@@ -474,15 +470,14 @@ object IcebergUniform {
       m.path("snapshots").elements().asScala.foreach(snaps.add)
     }
     newSnapshot match {
-      case Some((files, op)) =>
-        addSnapshot(snaps, snapshotId, files._2, curSchemaId, op, st.version)
+      case Some((list, op)) =>
+        addSnapshot(snaps, snapshotId, list, curSchemaId, op, st.version)
         n.put("current-snapshot-id", snapshotId)
-        publishOrDrop(f, root, prevV, n, files)
       case None =>
         prevMeta.foreach(m => if (m.hasNonNull("current-snapshot-id"))
           n.put("current-snapshot-id", m.path("current-snapshot-id").asLong))
-        IcebergWrite.publish(f, root, prevV, n)
     }
+    publish(f, root, prevV, n)
   }
 
   /** Iceberg schema JSON (no schema-id) for the table's current

@@ -1,7 +1,8 @@
 package graft.io
 
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
-import graft.io.lake.Staging
+import graft.io.lake.{Commit, Staging}
+import graft.io.lake.Commit.LostRace
 import org.apache.avro.generic.GenericRecord
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -24,11 +25,15 @@ import org.apache.spark.sql.types._
   * come from one grouped aggregation keyed by `_metadata.file_path`
   * (never a per-file job); manifests/metadata are
   * file-count-bounded driver work, exactly like the Delta commit
-  * path. Appends REBASE on version races (the staged files and
-  * manifest stay valid; only the metadata JSON re-derives), bounded
-  * by `MaxCommitRetries`; `overwrite` refuses to rebase across a
-  * concurrent commit — replacing state someone else just changed is
-  * a genuine conflict, delta-spark's own choice.
+  * path. Every commit runs through the one optimistic loop
+  * ([[graft.io.lake.Commit.optimistic]]): a lost version is the
+  * kernel's `LostRace`, an attempt declares the manifests and lists
+  * it writes so a loss deletes them, and at most
+  * 1 + `Commit.MaxCommitRetries` attempts run. Appends and row-level
+  * deltas REBASE (the staged data stays valid; manifests and the
+  * metadata JSON re-derive from the new head); `overwrite` and the
+  * maintenance operations refuse — replacing state someone else just
+  * changed is a genuine conflict, delta-spark's own choice.
   *
   * Scope: v2 appends/overwrites of flat schemas, partitioned writes
   * (identity and hidden transforms — `year/month/day/hour`,
@@ -52,11 +57,9 @@ object IcebergWrite {
   private val M = new ObjectMapper()
   private type ObjNode = com.fasterxml.jackson.databind.node.ObjectNode
 
-  /** Version races to absorb before giving up (append only). */
-  val MaxCommitRetries = 5
-
-  /** Test hook: runs between staging and each commit attempt, letting
-    * a spec inject a deterministic version race. No-op in production. */
+  /** Test hook: runs between staging and each commit attempt's
+    * publish, letting a spec inject a deterministic version race.
+    * No-op in production. */
   private[graft] var onBeforeCommit: () => Unit = () => ()
 
   /** Test hook: force the grouped-aggregation stats job even when the
@@ -94,6 +97,9 @@ object IcebergWrite {
       // the manifest's just-authored entries, kept IN MEMORY so the
       // commit's summary counting never re-reads the file it wrote
       entries: Seq[GenericRecord] = Nil)
+
+  /** One manifest-list entry: see [[listed]]. */
+  private type Listed = (String, Long, Int, Long, Int, Long, AnyRef)
 
   private def fs(spark: SparkSession, dir: String): FileSystem =
     new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -444,8 +450,7 @@ object IcebergWrite {
     import scala.jdk.CollectionConverters._
     val f = fs(spark, dir)
     val root = new Path(dir)
-    var attempt = 0
-    while (true) {
+    Commit.optimistic(f, what, dir) { _ =>
       val base = currentVersion(f, root)
       val m = readMeta(f, root, base).getOrElse(throw new IllegalArgumentException(
         s"$dir has no Iceberg metadata — nothing to evolve"))
@@ -485,12 +490,22 @@ object IcebergWrite {
       ml.put("timestamp-ms", prevUpdated)
       ml.put("metadata-file",
         new Path(root, s"metadata/v$base.metadata.json").toString)
-      if (publish(f, root, base, n)) return (base + 1).toLong
-      attempt += 1
-      require(attempt < MaxCommitRetries,
-        s"$what on $dir lost $MaxCommitRetries version races")
+      publishOrLose(f, root, base, n)
+      (base + 1).toLong
     }
-    -1L // unreachable
+  }
+
+  /** The version an attempt commits on, its metadata, a fresh
+    * snapshot id and the next sequence number: `v0`, the head the
+    * operation read, first; the current head after a lost race. */
+  private final case class Head(version: Int, meta: Option[JsonNode],
+                                snapshotId: Long, seqNo: Long)
+
+  private def head(at: Commit.Attempt, f: FileSystem, root: Path, v0: Int): Head = {
+    val v = if (at.n == 0) v0 else currentVersion(f, root)
+    val m = readMeta(f, root, v)
+    Head(v, m, freshSnapshotId(f, root, v),
+      m.map(_.path("last-sequence-number").asLong(0L)).getOrElse(0L) + 1L)
   }
 
   /** Whether `dir` holds a committed graft/foreign Iceberg table
@@ -580,11 +595,7 @@ object IcebergWrite {
     val f = fs(spark, dir)
     val root = new Path(dir)
     f.mkdirs(new Path(root, "metadata")); f.mkdirs(new Path(root, "data"))
-    txn.foreach { case (appId, tv) =>
-      if (committedTxn(spark, f, root, appId) >= tv)
-        return readMeta(f, root, currentVersion(f, root))
-          .map(_.path("current-snapshot-id").asLong(-1L)).getOrElse(-1L)
-    }
+    replayedTxn(spark, f, root, txn).foreach(return _)
     require(parts.nonEmpty, "at least one partition field is required")
     require(parts.map(_._1).distinct.size == parts.size,
       s"duplicate partition source column in ${parts.map(_._1).mkString(",")}")
@@ -614,14 +625,12 @@ object IcebergWrite {
     val stats =
       if (allPaths.isEmpty) Map.empty[String, (Long, Map[Int, (Array[Byte], Array[Byte])])]
       else allFileStats(spark, allPaths, idsByName)
+    dropEmpty(f, filesOfValue.flatMap(_._2))(stats.get(_).fold(0L)(_._1))
 
-    var attempt = 0
-    var base = v0
-    while (true) {
-      val snapshotId = freshSnapshotId(f, root, base)
-      val baseMeta = readMeta(f, root, base)
-      val seqNo = baseMeta
-        .map(_.path("last-sequence-number").asLong(0L)).getOrElse(0L) + 1L
+    Commit.optimistic(f, "append", dir,
+      staged = filesOfValue.flatMap(_._2.map(_._1)),
+      replayed = replayedTxn(spark, f, root, txn)) { at =>
+      val Head(base, baseMeta, snapshotId, seqNo) = head(at, f, root, v0)
       // v3 ROW LINEAGE: one running watermark across every manifest's
       // entries, re-derived per attempt from the base version
       val lin0 = nextRowIdOf(baseMeta)
@@ -642,40 +651,16 @@ object IcebergWrite {
         if (entries.isEmpty) None else Some((vals, i, entries))
       }
       val mans = graft.pipeline.Par.map(manSpecs) { case (vals, i, entries) =>
-        val mp = new Path(root,
-          s"metadata/manifest-$snapshotId-$i-${java.util.UUID.randomUUID().toString.take(8)}.avro")
-        IcebergFormat.writeAvro(f, mp, IcebergFormat.EntrySchema, entries)
+        val mp = writeManifest(at, f, root, s"manifest-$snapshotId-$i-", entries)
         NewManifest(mp, partitioned = true,
           Some(summariesOf(vals, resultDts)), entries = entries)
       }
-      dropEmpty(f, filesOfValue.flatMap(_._2))(stats.get(_).fold(0L)(_._1))
-      try {
-        onBeforeCommit()
-        return commitMeta(spark, f, root, base, df.schema, snapshotId, seqNo,
-          mans, replace = false, txn = txn,
-          partSpec = Some(SpecReq(parts.map { case (c, t) =>
-            (specFieldName(c, t), idsByName(c), t) })),
-          nextRowId = lin0.map(_ => rowIdW))
-      } catch {
-        case _: java.util.ConcurrentModificationException =>
-          mans.foreach(nm => f.delete(nm.path, false))
-          // a DUPLICATE same-batch writer may have won the race: if the
-          // ledger now covers this txn, drop our staged files and defer
-          txn.foreach { case (appId, tv) =>
-            if (committedTxn(spark, f, root, appId) >= tv) {
-              filesOfValue.flatMap(_._2).foreach { case (pp, _) =>
-                f.delete(pp, false) }
-              return readMeta(f, root, currentVersion(f, root))
-                .map(_.path("current-snapshot-id").asLong(-1L)).getOrElse(-1L)
-            }
-          }
-          attempt += 1
-          require(attempt < MaxCommitRetries,
-            s"append to $dir lost $MaxCommitRetries version races")
-          base = currentVersion(f, root)
-      }
+      commitMeta(at, spark, f, root, base, df.schema, snapshotId, seqNo,
+        mans, replace = false, txn = txn,
+        partSpec = Some(SpecReq(parts.map { case (c, t) =>
+          (specFieldName(c, t), idsByName(c), t) })),
+        nextRowId = lin0.map(_ => rowIdW))
     }
-    -1L // unreachable
   }
 
   /** MERGE-ON-READ DELETE for native Iceberg tables: rows where
@@ -728,54 +713,42 @@ object IcebergWrite {
         .collect().map(r => canonPath(r.getString(0))).toSet
     }
 
-    var attempt = 0
-    var base = v0
-    while (true) {
-      val snapshotId = freshSnapshotId(f, root, base)
-      val seqNo = readMeta(f, root, base)
-        .map(_.path("last-sequence-number").asLong(0L)).getOrElse(0L) + 1L
+    Commit.optimistic(f, "delete", dir, staged = delFiles.map(_._1),
+      conflict = _ => referencesGone(spark, dir, referenced, "delete")) { at =>
+      val Head(base, _, snapshotId, seqNo) = head(at, f, root, v0)
       val entries = delFiles.map { case (p, size) =>
         IcebergFormat.entry(1, p.toString,
           counts(canonPath(p.toString)), size, snapshotId, seqNo)
       }
-      val mp = new Path(root,
-        s"metadata/delete-manifest-$snapshotId-${java.util.UUID.randomUUID().toString.take(8)}.avro")
-      IcebergFormat.writeAvro(f, mp, IcebergFormat.EntrySchema, entries)
-      try {
-        onBeforeCommit()
-        val dummySchema = StructType(Nil) // schemas carry forward past v1
-        return (commitMeta(spark, f, root, base, dummySchema, snapshotId,
-          seqNo, Seq(NewManifest(mp, partitioned = false, None, content = 1,
-            entries = entries)),
-          replace = false, operation = Some("delete")), deleted)
-      } catch {
-        case _: java.util.ConcurrentModificationException =>
-          f.delete(mp, false)
-          attempt += 1
-          require(attempt < MaxCommitRetries,
-            s"delete on $dir lost $MaxCommitRetries version races")
-          base = currentVersion(f, root)
-          // validateDataFilesExist: the position-delete files were
-          // computed against the PRE-race snapshot — rebasing is only
-          // sound if every data file they reference is still live in
-          // the new head. A concurrent overwrite/compaction replaced
-          // them ⇒ the delete would mask nothing while reporting
-          // rowsDeleted>0 (a silently lost delete) — fail loudly
-          // instead, like overwrite does.
-          val live = IcebergInterop.liveDataPaths(spark, dir,
-            readSnapAt(f, root)).toSet
-          val gone = referenced.filterNot(live)
-          if (gone.nonEmpty) {
-            delFiles.foreach { case (p, _) => f.delete(p, false) }
-            throw new IllegalStateException(
-              s"delete on $dir raced a concurrent commit that replaced " +
-              s"${gone.size} referenced data file(s) (e.g. ${gone.head}) — " +
-              "the staged position deletes no longer apply; re-run the " +
-              "delete against the new snapshot")
-          }
-      }
+      val mp = writeManifest(at, f, root, s"delete-manifest-$snapshotId-", entries)
+      val dummySchema = StructType(Nil) // schemas carry forward past v1
+      (commitMeta(at, spark, f, root, base, dummySchema, snapshotId,
+        seqNo, Seq(NewManifest(mp, partitioned = false, None, content = 1,
+          entries = entries)),
+        replace = false, operation = Some("delete")), deleted)
     }
-    (-1L, -1L) // unreachable
+  }
+
+  /** validateDataFilesExist, the refusal of a row-level delta that
+    * lost a version race: its deletes were computed against the
+    * pre-race snapshot, so rebasing is only sound if every data file
+    * they reference is still live in the new head. A concurrent
+    * overwrite or compaction that replaced one would leave the delta
+    * masking nothing while reporting rows deleted (a silently lost
+    * delete): fail loudly instead, like overwrite does. */
+  private def referencesGone(spark: SparkSession, dir: String,
+                             referenced: => Set[String],
+                             what: String): Option[Throwable] = {
+    val live = IcebergInterop.liveDataPaths(spark, dir,
+      readSnapAt(fs(spark, dir), new Path(dir))).toSet
+    val gone = referenced.filterNot(live)
+    gone.headOption.map { g =>
+      new IllegalStateException(
+        s"$what on $dir raced a concurrent commit that replaced " +
+        s"${gone.size} referenced data file(s) (e.g. $g) — " +
+        s"the staged deletes no longer apply; re-run the $what " +
+        "against the new snapshot")
+    }
   }
 
   /** MERGE-ON-READ UPDATE for native Iceberg tables: rows where
@@ -873,11 +846,7 @@ object IcebergWrite {
     val root = new Path(dir)
     val v0 = currentVersion(f, root)
     require(v0 > 0, s"$dir has no snapshots to merge into")
-    txn.foreach { case (appId, tv) =>
-      if (committedTxn(spark, f, root, appId) >= tv)
-        return (readMeta(f, root, currentVersion(f, root))
-          .map(_.path("current-snapshot-id").asLong(-1L)).getOrElse(-1L), 0L, 0L)
-    }
+    replayedTxn(spark, f, root, txn).foreach(snap => return (snap, 0L, 0L))
     val m0 = readMeta(f, root, v0).get
     val fieldIds = currentFieldIds(m0)
     val schemaNames = fieldIds.map(_._1)
@@ -1065,7 +1034,7 @@ object IcebergWrite {
       }
     var dvDeleted = 0L
     // (puffin path, puffin length, per-blob (ref, off, size, cardinality))
-    def buildDvSide(): Option[(Path, Long, Seq[(String, Long, Long, Long)])] =
+    def buildDvSide(at: Commit.Attempt): Option[(Path, Long, Seq[(String, Long, Long, Long)])] =
       if (dvPerFile.isEmpty) None
       else {
         val conf = spark.sparkContext.hadoopConfiguration
@@ -1088,13 +1057,12 @@ object IcebergWrite {
               (file, merged, card)
           }
         }
-        val puffinP = new Path(root, s"data/dv-${java.util.UUID.randomUUID()}.puffin")
+        val puffinP = at.declare(new Path(root, s"data/dv-${java.util.UUID.randomUUID()}.puffin"))
         val refs = IcebergFormat.writePuffinDvBlobs(f, puffinP, blobs)
         val cardOf = blobs.map(b => (b._1, b._3)).toMap
         Some((puffinP, f.getFileStatus(puffinP).getLen,
           refs.map { case (rf, off, size) => (rf, off, size, cardOf(rf)) }))
       }
-    var dvSide = buildDvSide()
     def stageAppSide(): Seq[(Path, Long)] = appendDf.toSeq.flatMap { df =>
       // a lineage table's postimages carry the reserved `_row_id`
       // (/ `_last_updated_sequence_number`) columns MATERIALIZED so
@@ -1121,7 +1089,7 @@ object IcebergWrite {
       else allFileStats(spark, stagedApp.map(_._1.toString), idsByName)
     val appFiles = dropEmpty(f, stagedApp)(appStats.get(_).fold(0L)(_._1))
 
-    if (delFiles.isEmpty && dvSide.isEmpty && appFiles.isEmpty)
+    if (delFiles.isEmpty && dvPerFile.isEmpty && appFiles.isEmpty)
       return (currentSnap(), 0L, 0L)
     def deleted = delCounts.values.sum + dvDeleted // dvDeleted moves on rebase
     val appended = appStats.values.map(_._1).sum
@@ -1132,18 +1100,20 @@ object IcebergWrite {
          .collect().map(r => canonPath(r.getString(0))).toSet) ++
       dvPerFile.map(p => canonPath(p._1))
 
-    var attempt = 0
-    var base = v0
-    while (true) {
-      val snapshotId = freshSnapshotId(f, root, base)
-      val baseMetaA = readMeta(f, root, base)
-      val seqNo = baseMetaA
-        .map(_.path("last-sequence-number").asLong(0L)).getOrElse(0L) + 1L
+    Commit.optimistic(f, what, dir, staged = (delFiles ++ appFiles).map(_._1),
+      replayed = replayedTxn(spark, f, root, txn).map((_, 0L, 0L)),
+      conflict = _ => referencesGone(spark, dir, referenced, what)) { at =>
+      val Head(base, baseMetaA, snapshotId, seqNo) = head(at, f, root, v0)
       // v3 ROW LINEAGE: appended postimage/insert files get fresh
       // first_row_id ranges (materialized _row_id values win at read;
       // null slots — a merge's inserted rows — derive fresh ids)
       val lin0 = nextRowIdOf(baseMetaA)
       var rowIdW = lin0.getOrElse(0L)
+      // the puffin unions our positions with the head's live DVs on
+      // every attempt: the racer may have committed a DV for one of our
+      // files, and a stale pre-race union would replace, and so drop,
+      // the racer's deletions
+      val dvSide = buildDvSide(at)
       val mans = Seq.newBuilder[NewManifest]
       if (delFiles.nonEmpty || dvSide.isDefined) {
         val entries = delFiles.map { case (p, size) =>
@@ -1156,9 +1126,7 @@ object IcebergWrite {
               dvRef = Some((rf, off, size)))
           }
         }
-        val mp = new Path(root,
-          s"metadata/delete-manifest-$snapshotId-${java.util.UUID.randomUUID().toString.take(8)}.avro")
-        IcebergFormat.writeAvro(f, mp, IcebergFormat.EntrySchema, entries)
+        val mp = writeManifest(at, f, root, s"delete-manifest-$snapshotId-", entries)
         mans += NewManifest(mp, partitioned = false, None, content = 1,
           entries = entries)
       }
@@ -1169,58 +1137,15 @@ object IcebergWrite {
           IcebergFormat.entry(0, p.toString, rows, size, snapshotId, seqNo,
             bounds = bounds, firstRowId = fr)
         }
-        val mp = new Path(root,
-          s"metadata/manifest-$snapshotId-${java.util.UUID.randomUUID().toString.take(8)}.avro")
-        IcebergFormat.writeAvro(f, mp, IcebergFormat.EntrySchema, entries)
+        val mp = writeManifest(at, f, root, s"manifest-$snapshotId-", entries)
         mans += NewManifest(mp, partitioned = false, None, entries = entries)
       }
-      val built = mans.result()
-      try {
-        onBeforeCommit()
-        val snap = commitMeta(spark, f, root, base, StructType(Nil), snapshotId,
-          seqNo, built, replace = false, operation = Some(operation),
-          txn = txn, minFormatVersion = if (asDv) 3 else 0,
-          nextRowId = lin0.map(_ => rowIdW))
-        return (snap, deleted, appended)
-      } catch {
-        case _: java.util.ConcurrentModificationException =>
-          built.foreach(nm => f.delete(nm.path, false))
-          // a DUPLICATE same-batch writer may have won the race: if the
-          // ledger now covers this txn, drop our staged files and defer
-          txn.foreach { case (appId, tv) =>
-            if (committedTxn(spark, f, root, appId) >= tv) {
-              (delFiles ++ appFiles).foreach { case (p, _) => f.delete(p, false) }
-              dvSide.foreach { case (p, _, _) => f.delete(p, false) }
-              return (currentSnap(), 0L, 0L)
-            }
-          }
-          attempt += 1
-          require(attempt < MaxCommitRetries,
-            s"$what on $dir lost $MaxCommitRetries version races")
-          base = currentVersion(f, root)
-          val live = IcebergInterop.liveDataPaths(spark, dir,
-            readSnapAt(f, root)).toSet
-          val gone = referenced.filterNot(live)
-          if (gone.nonEmpty) {
-            (delFiles ++ appFiles).foreach { case (p, _) => f.delete(p, false) }
-            dvSide.foreach { case (p, _, _) => f.delete(p, false) }
-            throw new IllegalStateException(
-              s"$what on $dir raced a concurrent commit that replaced " +
-              s"${gone.size} referenced data file(s) (e.g. ${gone.head}) — " +
-              s"the staged position deletes no longer apply; re-run the $what " +
-              "against the new snapshot")
-          }
-          // superset rule on rebase: the racer may have committed a DV
-          // for one of our files — rebuild the union against the NEW
-          // head's live DVs (the stale pre-race union would replace,
-          // and so drop, the racer's deletions)
-          dvSide.foreach { case (p, _, _) =>
-            f.delete(p, false)
-            dvSide = buildDvSide()
-          }
-      }
+      val snap = commitMeta(at, spark, f, root, base, StructType(Nil), snapshotId,
+        seqNo, mans.result(), replace = false, operation = Some(operation),
+        txn = txn, minFormatVersion = if (asDv) 3 else 0,
+        nextRowId = lin0.map(_ => rowIdW))
+      (snap, deleted, appended)
     }
-    (-1L, -1L, -1L) // unreachable
   }
 
   /** MERGE-ON-READ DELETE via v3 DELETION VECTORS: predicate rows mask
@@ -1263,14 +1188,15 @@ object IcebergWrite {
     if (perFile.isEmpty) return (currentSnap(), 0L)
     val conf = spark.sparkContext.hadoopConfiguration
     val referenced = perFile.map(p => canonPath(p._1)).toSet
-    var deleted = 0L
-    // the puffin (our positions ∪ the head's live DVs) rebuilds on
-    // every rebase — the superset-replacement rule must hold against
-    // whatever a concurrent writer just committed, and a stale
-    // pre-race union would drop the racer's DV and resurrect its rows
-    def buildPuffin(): (Path, Long, Seq[(String, Long, Long)], Map[String, Long]) = {
+    Commit.optimistic(f, "DV delete", dir,
+      conflict = _ => referencesGone(spark, dir, referenced, "DV delete")) { at =>
+      val Head(base, _, snapshotId, seqNo) = head(at, f, root, v0)
+      // the puffin (our positions ∪ the head's live DVs) rebuilds on
+      // every attempt — the superset-replacement rule must hold against
+      // whatever a concurrent writer just committed, and a stale
+      // pre-race union would drop the racer's DV and resurrect its rows
       val prior = IcebergInterop.liveDvs(spark, dir, readSnapAt(f, root))
-      deleted = 0L
+      var deleted = 0L
       val blobs: Seq[(String, Array[Byte], Long)] = perFile.map { case (file, bytes) =>
         prior.get(canonPath(file)) match {
           case None =>
@@ -1289,61 +1215,23 @@ object IcebergWrite {
             (file, merged, card)
         }
       }
-      val puffinP = new Path(root,
-        s"data/dv-${java.util.UUID.randomUUID()}.puffin")
+      val puffinP = at.declare(new Path(root,
+        s"data/dv-${java.util.UUID.randomUUID()}.puffin"))
       val refs = IcebergFormat.writePuffinDvBlobs(f, puffinP, blobs)
-      (puffinP, f.getFileStatus(puffinP).getLen, refs,
-        blobs.map(b => (b._1, b._3)).toMap)
-    }
-    var (puffinP, puffinLen, refs, cardOf) = buildPuffin()
-
-    var attempt = 0
-    var base = v0
-    while (true) {
-      val snapshotId = freshSnapshotId(f, root, base)
-      val seqNo = readMeta(f, root, base)
-        .map(_.path("last-sequence-number").asLong(0L)).getOrElse(0L) + 1L
+      val puffinLen = f.getFileStatus(puffinP).getLen
+      val cardOf = blobs.map(b => (b._1, b._3)).toMap
       val entries = refs.map { case (refFile, off, size) =>
         IcebergFormat.entry(1, puffinP.toString, cardOf(refFile), puffinLen,
           snapshotId, seqNo, fileFormat = "PUFFIN",
           dvRef = Some((refFile, off, size)))
       }
-      val mp = new Path(root,
-        s"metadata/delete-manifest-$snapshotId-${java.util.UUID.randomUUID().toString.take(8)}.avro")
-      IcebergFormat.writeAvro(f, mp, IcebergFormat.EntrySchema, entries)
-      try {
-        onBeforeCommit()
-        return (commitMeta(spark, f, root, base, StructType(Nil), snapshotId,
-          seqNo, Seq(NewManifest(mp, partitioned = false, None, content = 1,
-            entries = entries)),
-          replace = false, operation = Some("delete"),
-          minFormatVersion = 3), deleted)
-      } catch {
-        case _: java.util.ConcurrentModificationException =>
-          f.delete(mp, false)
-          attempt += 1
-          require(attempt < MaxCommitRetries,
-            s"DV delete on $dir lost $MaxCommitRetries version races")
-          base = currentVersion(f, root)
-          val live = IcebergInterop.liveDataPaths(spark, dir,
-            readSnapAt(f, root)).toSet
-          val gone = referenced.filterNot(live)
-          if (gone.nonEmpty) {
-            f.delete(puffinP, false)
-            throw new IllegalStateException(
-              s"DV delete on $dir raced a concurrent commit that replaced " +
-              s"${gone.size} referenced data file(s) (e.g. ${gone.head}) — " +
-              "re-run the delete against the new snapshot")
-          }
-          // the racer may have committed a DV for one of our files —
-          // rebuild the union against the NEW head's live DVs
-          f.delete(puffinP, false)
-          val rebuilt = buildPuffin()
-          puffinP = rebuilt._1; puffinLen = rebuilt._2
-          refs = rebuilt._3; cardOf = rebuilt._4
-      }
+      val mp = writeManifest(at, f, root, s"delete-manifest-$snapshotId-", entries)
+      (commitMeta(at, spark, f, root, base, StructType(Nil), snapshotId,
+        seqNo, Seq(NewManifest(mp, partitioned = false, None, content = 1,
+          entries = entries)),
+        replace = false, operation = Some("delete"),
+        minFormatVersion = 3), deleted)
     }
-    (-1L, -1L) // unreachable
   }
 
   /** EQUALITY DELETE for native Iceberg tables: every row whose
@@ -1388,36 +1276,19 @@ object IcebergWrite {
         .map(_.path("current-snapshot-id").asLong(-1L)).getOrElse(-1L), 0L)
     val nKeys = stats.values.map(_._1).sum
 
-    var attempt = 0
-    var base = v0
-    while (true) {
-      val snapshotId = freshSnapshotId(f, root, base)
-      val seqNo = readMeta(f, root, base)
-        .map(_.path("last-sequence-number").asLong(0L)).getOrElse(0L) + 1L
+    Commit.optimistic(f, "equality delete", dir, staged = delFiles.map(_._1)) { at =>
+      val Head(base, _, snapshotId, seqNo) = head(at, f, root, v0)
       val entries = delFiles.map { case (p, size) =>
         val (n, bounds) = stats(canonPath(p.toString))
         IcebergFormat.entry(2, p.toString, n, size, snapshotId, seqNo,
           equalityIds = equalityIds, bounds = bounds)
       }
-      val mp = new Path(root,
-        s"metadata/delete-manifest-$snapshotId-${java.util.UUID.randomUUID().toString.take(8)}.avro")
-      IcebergFormat.writeAvro(f, mp, IcebergFormat.EntrySchema, entries)
-      try {
-        onBeforeCommit()
-        return (commitMeta(spark, f, root, base, StructType(Nil), snapshotId,
-          seqNo, Seq(NewManifest(mp, partitioned = false, None, content = 1,
-            entries = entries)),
-          replace = false, operation = Some("delete")), nKeys)
-      } catch {
-        case _: java.util.ConcurrentModificationException =>
-          f.delete(mp, false)
-          attempt += 1
-          require(attempt < MaxCommitRetries,
-            s"equality delete on $dir lost $MaxCommitRetries version races")
-          base = currentVersion(f, root)
-      }
+      val mp = writeManifest(at, f, root, s"delete-manifest-$snapshotId-", entries)
+      (commitMeta(at, spark, f, root, base, StructType(Nil), snapshotId,
+        seqNo, Seq(NewManifest(mp, partitioned = false, None, content = 1,
+          entries = entries)),
+        replace = false, operation = Some("delete")), nKeys)
     }
-    (-1L, -1L) // unreachable
   }
 
   /** ROLL BACK the table to `snapshotId` — Iceberg's
@@ -1441,25 +1312,13 @@ object IcebergWrite {
     // carry the TARGET's manifest list verbatim as the new snapshot's
     val conf = spark.sparkContext.hadoopConfiguration
     val carried = IcebergFormat.readAvro(conf,
-      new Path(resolveU(target.path("manifest-list").asText))).map { r =>
-      (gStr(r, "manifest_path"), gLong(r, "manifest_length", 0L),
-        gInt(r, "content", 0), gLong(r, "sequence_number", 0L),
-        gInt(r, "partition_spec_id", 0), gLong(r, "added_snapshot_id", snapshotId),
-        Option(r.getSchema.getField("partitions"))
-          .flatMap(_ => Option(r.get("partitions"))).orNull)
-    }
+      new Path(resolveU(target.path("manifest-list").asText))).map(listed(_, snapshotId))
     val newId = freshSnapshotId(f, root, v0)
     val seqNo = m0.path("last-sequence-number").asLong(0L) + 1L
-    try {
-      onBeforeCommit()
-      commitMeta(spark, f, root, v0, StructType(Nil), newId, seqNo, Nil,
+    commitOnce(f, dir, "rollback") { at =>
+      commitMeta(at, spark, f, root, v0, StructType(Nil), newId, seqNo, Nil,
         replace = false, operation = Some("rollback"),
         priorOverride = Some(carried))
-    } catch {
-      case _: java.util.ConcurrentModificationException =>
-        throw new IllegalStateException(
-          s"rollback of $dir raced a concurrent commit — re-run against " +
-          "the new head")
     }
   }
 
@@ -1653,19 +1512,12 @@ object IcebergWrite {
     require(fork > 0,
       s"$branch shares no ancestor with main at $dir — cannot cherry-pick")
 
-    def listOf(snapId: Long): Seq[(String, Long, Int, Long, Int, Long, AnyRef)] =
+    def listOf(snapId: Long): Seq[Listed] =
       m0.path("snapshots").elements().asScala
         .find(_.path("snapshot-id").asLong(-2L) == snapId)
         .map { s0 =>
           IcebergFormat.readAvro(conf,
-            new Path(resolveU(s0.path("manifest-list").asText))).map { r =>
-            (gStr(r, "manifest_path"), gLong(r, "manifest_length", 0L),
-              gInt(r, "content", 0), gLong(r, "sequence_number", 0L),
-              gInt(r, "partition_spec_id", 0),
-              gLong(r, "added_snapshot_id", snapId),
-              Option(r.getSchema.getField("partitions"))
-                .flatMap(_ => Option(r.get("partitions"))).orNull)
-          }
+            new Path(resolveU(s0.path("manifest-list").asText))).map(listed(_, snapId))
         }.getOrElse(throw new IllegalArgumentException(
           s"snapshot $snapId expired at $dir — cannot cherry-pick"))
     val forkList = listOf(fork)
@@ -1684,7 +1536,7 @@ object IcebergWrite {
     if (staged.isEmpty) return mainHead // nothing staged beyond the fork
 
     // parse the staged manifests once, live entries only
-    val stagedMans: Seq[((String, Long, Int, Long, Int, Long, AnyRef),
+    val stagedMans: Seq[(Listed,
       Seq[GenericRecord])] = graft.pipeline.Par.map(staged) { t =>
       (t, IcebergFormat.readAvro(conf, new Path(resolveU(t._1))))
     }
@@ -1851,17 +1703,11 @@ object IcebergWrite {
     val seqNo = m0.path("last-sequence-number").asLong(0L) + 1L
     val anyDelete = staged.exists(_._3 != 0)
     val carried = mainList ++ staged.map(t => t.copy(_6 = newId))
-    try {
-      onBeforeCommit()
-      commitMeta(spark, f, root, v0, StructType(Nil), newId, seqNo, Nil,
+    commitOnce(f, dir, s"cherry-pick publish of $branch") { at =>
+      commitMeta(at, spark, f, root, v0, StructType(Nil), newId, seqNo, Nil,
         replace = false,
         operation = Some(if (anyDelete) "overwrite" else "append"),
         priorOverride = Some(carried))
-    } catch {
-      case _: java.util.ConcurrentModificationException =>
-        throw new IllegalStateException(
-          s"cherry-pick publish of $branch at $dir raced a concurrent " +
-          "commit — re-run against the new head")
     }
   }
 
@@ -1924,9 +1770,26 @@ object IcebergWrite {
     ml.put("timestamp-ms", prevUpdated)
     ml.put("metadata-file", new Path(root, s"metadata/v$base.metadata.json").toString)
     if (!publish(f, root, base, n))
-      throw new IllegalStateException(
-        s"$what on $root raced a concurrent commit — re-run")
+      throw new LostRace(s"$what on $root raced a concurrent commit — re-run")
   }
+
+  /** [[Commit.optimistic]] for an operation that must not rebase: its
+    * input was read from the head it replaces, so a lost version
+    * refuses once the attempt's files (and `staged`) are deleted. */
+  private def commitOnce[A](f: FileSystem, dir: String, what: String,
+                            staged: => Seq[Path] = Nil)(attempt: Commit.Attempt => A): A =
+    Commit.optimistic(f, what, dir, staged, conflict = _ => Some(new IllegalStateException(
+      s"$what on $dir raced a concurrent commit — re-run against the new head")))(attempt)
+
+  /** The current snapshot id when the summary ledger already covers
+    * `txn` (appId, txnVersion): a replayed batch, or a duplicate writer
+    * that won the race. */
+  private def replayedTxn(spark: SparkSession, f: FileSystem, root: Path,
+                          txn: Option[(String, Long)]): Option[Long] =
+    txn.collect { case (appId, tv) if committedTxn(spark, f, root, appId) >= tv =>
+      readMeta(f, root, currentVersion(f, root))
+        .map(_.path("current-snapshot-id").asLong(-1L)).getOrElse(-1L)
+    }
 
   /** Publish `n` as `v<base+1>.metadata.json`: written in full to a
     * hidden temp, then [[Staging.putIfAbsent]] — a reader never sees
@@ -1952,6 +1815,22 @@ object IcebergWrite {
     won
   }
 
+  /** Write `entries` as `metadata/<prefix><random>.avro`, a file only
+    * `at`'s commit will reference. */
+  private def writeManifest(at: Commit.Attempt, f: FileSystem, root: Path, prefix: String,
+                            entries: Seq[GenericRecord],
+                            schema: org.apache.avro.Schema = IcebergFormat.EntrySchema): Path = {
+    val mp = at.declare(new Path(root,
+      s"metadata/$prefix${java.util.UUID.randomUUID().toString.take(8)}.avro"))
+    IcebergFormat.writeAvro(f, mp, schema, entries)
+    mp
+  }
+
+  /** [[publish]], or the kernel's lost-race signal. */
+  private def publishOrLose(f: FileSystem, root: Path, base: Int, n: JsonNode): Unit =
+    if (!publish(f, root, base, n))
+      throw new LostRace(s"version ${base + 1} of $root was committed concurrently")
+
   // ─────────────────── table maintenance ───────────────────
 
   private def gStr(r: GenericRecord, n: String): String = r.get(n).toString
@@ -1963,6 +1842,17 @@ object IcebergWrite {
       .map(_.asInstanceOf[Number].longValue).getOrElse(d)
   private def resolveU(uri: String): String =
     if (uri.startsWith("file:")) new java.net.URI(uri).getPath else uri
+
+  /** A manifest-list record as a commit carries it VERBATIM: (path,
+    * length, content, sequence number, spec id, added-snapshot id, raw
+    * partition summaries); `addedBy` stands in for a missing
+    * added_snapshot_id. */
+  private def listed(r: GenericRecord, addedBy: Long): Listed =
+    (gStr(r, "manifest_path"), gLong(r, "manifest_length", 0L),
+      gInt(r, "content", 0), gLong(r, "sequence_number", 0L),
+      gInt(r, "partition_spec_id", 0), gLong(r, "added_snapshot_id", addedBy),
+      Option(r.getSchema.getField("partitions"))
+        .flatMap(_ => Option(r.get("partitions"))).orNull)
   private def entryBounds(df: GenericRecord): Map[Int, (Array[Byte], Array[Byte])] = {
     import scala.jdk.CollectionConverters._
     def side(field: String): Map[Int, Array[Byte]] =
@@ -2172,91 +2062,70 @@ object IcebergWrite {
 
     val snapshotId = freshSnapshotId(f, root, v0)
     val seqNo = m0.path("last-sequence-number").asLong(0L) + 1L
-    // lineage: rewritten files still get fresh first_row_id ranges
-    // (cheap, keeps the every-file-has-a-range invariant); their
-    // MATERIALIZED _row_id values win at read, so identities hold
-    val lin0 = nextRowIdOf(Some(m0))
-    var rowIdW = lin0.getOrElse(0L)
-    // carried list: clean manifests verbatim; partially-dirty ones
-    // swap to an EXISTING-entry replacement keeping original seqs +
-    // the original summary bytes (over-approximate bounds stay SAFE
-    // for pruning — false positives only)
-    val carried = Seq.newBuilder[(String, Long, Int, Long, Int, Long, AnyRef)]
-    val freshManifests = Seq.newBuilder[NewManifest]
-    def manTuple(r: GenericRecord, path: String, len: Long):
-        (String, Long, Int, Long, Int, Long, AnyRef) =
-      (path, len, gInt(r, "content", 0), gLong(r, "sequence_number", 0L),
-        gInt(r, "partition_spec_id", 0), gLong(r, "added_snapshot_id", curId),
-        Option(r.getSchema.getField("partitions"))
-          .flatMap(_ => Option(r.get("partitions"))).orNull)
-    dataMans.foreach { man =>
-      val live = liveEntries(man)
-      val (dirtyE, cleanE) =
-        live.partition(isDirty(_, gLong(man.rec, "sequence_number", 0L)))
-      if (dirtyE.isEmpty)
-        carried += manTuple(man.rec, gStr(man.rec, "manifest_path"),
-          gLong(man.rec, "manifest_length", 0L))
-      else if (cleanE.nonEmpty) {
-        val manSeq = gLong(man.rec, "sequence_number", 0L)
-        val entries = cleanE.map { e =>
-          val df = e.get("data_file").asInstanceOf[GenericRecord]
-          IcebergFormat.entry(0, gStr(df, "file_path"),
-            gLong(df, "record_count", 0L), gLong(df, "file_size_in_bytes", 0L),
-            gLong(e, "snapshot_id", curId), gLong(e, "sequence_number", manSeq),
-            bounds = entryBounds(df), status = 0,
-            sortOrderId = Option(df.getSchema.getField("sort_order_id"))
-              .flatMap(_ => Option(df.get("sort_order_id")))
-              .map(_.asInstanceOf[Number].intValue),
-            // lineage: a clean file's id range carries VERBATIM
-            firstRowId = Option(df.getSchema.getField("first_row_id"))
-              .flatMap(_ => Option(df.get("first_row_id")))
-              .map(_.asInstanceOf[Number].longValue))
-        }
-        val mp = new Path(root,
-          s"metadata/manifest-$snapshotId-x${java.util.UUID.randomUUID().toString.take(8)}.avro")
-        IcebergFormat.writeAvro(f, mp, IcebergFormat.EntrySchema, entries)
-        carried += ((mp.toString, f.getFileStatus(mp).getLen, 0, manSeq,
-          gInt(man.rec, "partition_spec_id", 0), snapshotId,
-          Option(man.rec.getSchema.getField("partitions"))
-            .flatMap(_ => Option(man.rec.get("partitions"))).orNull))
-      } // fully-dirty manifest: drops (its rows live in the rewrite)
-    }
-    val newFiles = staged.filter(p => stats.contains(canonPath(p._1.toString)))
-    stagedByValue.zipWithIndex.foreach { case ((valueOpt, files), i) =>
-      val live = files.filter(p => stats.contains(canonPath(p._1.toString)))
-      if (live.nonEmpty) {
-        val entries = live.map { case (p, size) =>
-          val (nRows, bounds) = stats(canonPath(p.toString))
-          val fr = lin0.map { _ => val v = rowIdW; rowIdW += nRows; v }
-          IcebergFormat.entry(0, p.toString, nRows, size, snapshotId, seqNo,
-            bounds = bounds, firstRowId = fr)
-        }
-        val mp = new Path(root,
-          s"metadata/manifest-$snapshotId-$i-${java.util.UUID.randomUUID().toString.take(8)}.avro")
-        IcebergFormat.writeAvro(f, mp, IcebergFormat.EntrySchema, entries)
-        freshManifests += (valueOpt match {
-          case None => NewManifest(mp, partitioned = false, None,
-            entries = entries)
-          case Some(vals) => NewManifest(mp, partitioned = true,
-            Some(summariesOf(vals, rewriteResultDts)), entries = entries)
-        })
+    commitOnce(f, dir, "compaction", staged = staged.map(_._1)) { at =>
+      // lineage: rewritten files still get fresh first_row_id ranges
+      // (cheap, keeps the every-file-has-a-range invariant); their
+      // MATERIALIZED _row_id values win at read, so identities hold
+      val lin0 = nextRowIdOf(Some(m0))
+      var rowIdW = lin0.getOrElse(0L)
+      // carried list: clean manifests verbatim; partially-dirty ones
+      // swap to an EXISTING-entry replacement keeping original seqs +
+      // the original summary bytes (over-approximate bounds stay SAFE
+      // for pruning — false positives only)
+      val carried = Seq.newBuilder[Listed]
+      val freshManifests = Seq.newBuilder[NewManifest]
+      dataMans.foreach { man =>
+        val live = liveEntries(man)
+        val (dirtyE, cleanE) =
+          live.partition(isDirty(_, gLong(man.rec, "sequence_number", 0L)))
+        if (dirtyE.isEmpty)
+          carried += listed(man.rec, curId)
+        else if (cleanE.nonEmpty) {
+          val manSeq = gLong(man.rec, "sequence_number", 0L)
+          val entries = cleanE.map { e =>
+            val df = e.get("data_file").asInstanceOf[GenericRecord]
+            IcebergFormat.entry(0, gStr(df, "file_path"),
+              gLong(df, "record_count", 0L), gLong(df, "file_size_in_bytes", 0L),
+              gLong(e, "snapshot_id", curId), gLong(e, "sequence_number", manSeq),
+              bounds = entryBounds(df), status = 0,
+              sortOrderId = Option(df.getSchema.getField("sort_order_id"))
+                .flatMap(_ => Option(df.get("sort_order_id")))
+                .map(_.asInstanceOf[Number].intValue),
+              // lineage: a clean file's id range carries VERBATIM
+              firstRowId = Option(df.getSchema.getField("first_row_id"))
+                .flatMap(_ => Option(df.get("first_row_id")))
+                .map(_.asInstanceOf[Number].longValue))
+          }
+          val mp = writeManifest(at, f, root, s"manifest-$snapshotId-x", entries)
+          carried += listed(man.rec, curId).copy(
+            _1 = mp.toString, _2 = f.getFileStatus(mp).getLen, _6 = snapshotId)
+        } // fully-dirty manifest: drops (its rows live in the rewrite)
       }
-    }
-    try {
-      onBeforeCommit()
-      val snap = commitMeta(spark, f, root, v0, StructType(Nil), snapshotId,
+      stagedByValue.zipWithIndex.foreach { case ((valueOpt, files), i) =>
+        val live = files.filter(p => stats.contains(canonPath(p._1.toString)))
+        if (live.nonEmpty) {
+          val entries = live.map { case (p, size) =>
+            val (nRows, bounds) = stats(canonPath(p.toString))
+            val fr = lin0.map { _ => val v = rowIdW; rowIdW += nRows; v }
+            IcebergFormat.entry(0, p.toString, nRows, size, snapshotId, seqNo,
+              bounds = bounds, firstRowId = fr)
+          }
+          val mp = writeManifest(at, f, root, s"manifest-$snapshotId-$i-", entries)
+          freshManifests += (valueOpt match {
+            case None => NewManifest(mp, partitioned = false, None,
+              entries = entries)
+            case Some(vals) => NewManifest(mp, partitioned = true,
+              Some(summariesOf(vals, rewriteResultDts)), entries = entries)
+          })
+        }
+      }
+      val snap = commitMeta(at, spark, f, root, v0, StructType(Nil), snapshotId,
         seqNo, freshManifests.result(), replace = false,
         operation = Some("replace"), priorOverride = Some(carried.result()),
         partSpec = rewriteSpec.map(fields => SpecReq(fields.map {
           case (c, t) => (specFieldName(c, t), idsByName(c), t) })),
         nextRowId = lin0.map(_ => rowIdW))
       (snap, dirtyFiles.length, deleteFilesFolded)
-    } catch {
-      case _: java.util.ConcurrentModificationException =>
-        newFiles.foreach { case (p, _) => f.delete(p, false) }
-        throw new IllegalStateException(
-          s"compaction of $dir raced a concurrent commit — its carried " +
-          "manifest set no longer reflects the head; re-run the compaction")
     }
   }
 
@@ -2332,23 +2201,15 @@ object IcebergWrite {
       IcebergFormat.entry(0, p.toString, nRows, size, snapshotId, seqNo,
         bounds = bounds, firstRowId = fr)
     }
-    val mp = new Path(root,
-      s"metadata/manifest-$snapshotId-z${java.util.UUID.randomUUID().toString.take(8)}.avro")
-    IcebergFormat.writeAvro(f, mp, IcebergFormat.EntrySchema, entries)
-    try {
-      onBeforeCommit()
-      val snap = commitMeta(spark, f, root, v0, StructType(Nil), snapshotId,
+    commitOnce(f, dir, "optimizeZOrder", staged = live.map(_._1)) { at =>
+      val mp = writeManifest(at, f, root, s"manifest-$snapshotId-z", entries)
+      val snap = commitMeta(at, spark, f, root, v0, StructType(Nil), snapshotId,
         seqNo, Seq(NewManifest(mp, partitioned = false, None,
           entries = entries)),
         replace = false, operation = Some("replace"),
         priorOverride = Some(Nil), // every prior manifest folds away
         nextRowId = lin0.map(_ => rowIdW))
       (snap, liveData.length, live.length)
-    } catch {
-      case _: java.util.ConcurrentModificationException =>
-        (live.map(_._1) :+ mp).foreach(p => f.delete(p, false))
-        throw new IllegalStateException(
-          s"optimizeZOrder on $dir raced a concurrent commit — re-run")
     }
   }
 
@@ -2471,160 +2332,144 @@ object IcebergWrite {
     val FS = IcebergFormat.ManifestFileSchema
       .getField("partitions").schema().getTypes.get(1)
 
-    var mergedAway = 0
-    val outList = Seq.newBuilder[(String, Long, Int, Long, Int, Long, AnyRef)]
-    def verbatim(m: Man): Unit =
-      outList += ((gStr(m.rec, "manifest_path"),
-        gLong(m.rec, "manifest_length", 0L), m.content,
-        gLong(m.rec, "sequence_number", 0L), m.specId,
-        gLong(m.rec, "added_snapshot_id", curId),
-        Option(m.rec.getSchema.getField("partitions"))
-          .flatMap(_ => Option(m.rec.get("partitions"))).orNull))
+    commitOnce(f, dir, "rewriteManifests") { at =>
+      var mergedAway = 0
+      val outList = Seq.newBuilder[Listed]
 
-    // stable grouping: (content kind, spec id) — merging across specs
-    // would need partition-tuple re-derivation; across kinds is invalid
-    val groups = mans.zipWithIndex.groupBy { case (m, _) => (m.content, m.specId) }
-      .toSeq.sortBy(_._2.head._2)
-    groups.foreach { case ((content, specId), members0) =>
-      val members = members0.map(_._1)
-      // bin-pack in list order; a bin of ONE carries verbatim
-      val bins = Seq.newBuilder[Seq[Man]]
-      var bin = Seq.newBuilder[Man]; var n = 0; var binSize = 0
-      members.foreach { m =>
-        val live = liveOf(m).length
-        if (binSize > 0 && n + live > targetEntriesPerManifest) {
-          bins += bin.result(); bin = Seq.newBuilder[Man]; n = 0; binSize = 0
-        }
-        bin += m; n += live; binSize += 1
-      }
-      if (binSize > 0) bins += bin.result()
-      // summary-merge types (None ⇒ partitioned group merges lose no
-      // skipping because we refuse to merge it at all)
-      val sumTypes: Option[Seq[DataType]] =
-        if (specId == 0) Some(Nil) else specResultTypes(m0, specId)
-      bins.result().foreach { b =>
-        if (b.lengthCompare(1) <= 0 || (specId != 0 && sumTypes.isEmpty)) {
-          b.foreach(verbatim)
-        } else {
-          mergedAway += b.length - 1
-          val entries = b.flatMap { m =>
-            val manSeq = gLong(m.rec, "sequence_number", 0L)
-            val manSnap = gLong(m.rec, "added_snapshot_id", curId)
-            liveOf(m).map { e =>
-              val df = e.get("data_file").asInstanceOf[GenericRecord]
-              val off = Option(df.getSchema.getField("content_offset"))
-                .flatMap(_ => Option(df.get("content_offset")))
-                .map(_.asInstanceOf[Number].longValue)
-              val refFile = Option(df.getSchema.getField("referenced_data_file"))
-                .flatMap(_ => Option(df.get("referenced_data_file"))).map(_.toString)
-              IcebergFormat.entry(
-                gInt(df, "content", 0), gStr(df, "file_path"),
-                gLong(df, "record_count", 0L), gLong(df, "file_size_in_bytes", 0L),
-                gLong(e, "snapshot_id", manSnap),      // ORIGINAL snapshot
-                gLong(e, "sequence_number", manSeq),    // ORIGINAL sequence
-                equalityIds = Option(df.getSchema.getField("equality_ids"))
-                  .flatMap(_ => Option(df.get("equality_ids")))
-                  .map(_.asInstanceOf[java.util.List[_]].asScala
-                    .map(_.asInstanceOf[Number].intValue).toSeq).getOrElse(Nil),
-                bounds = entryBounds(df),
-                fileFormat = gStr(df, "file_format"),
-                dvRef = off.map(o => (refFile.get, o,
-                  gLong(df, "content_size_in_bytes", 0L))),
-                referencedDataFile = if (off.isEmpty) refFile else None,
-                firstRowId = Option(df.getSchema.getField("first_row_id"))
-                  .flatMap(_ => Option(df.get("first_row_id")))
-                  .map(_.asInstanceOf[Number].longValue),
-                status = 0,
-                sortOrderId = Option(df.getSchema.getField("sort_order_id"))
-                  .flatMap(_ => Option(df.get("sort_order_id")))
-                  .map(_.asInstanceOf[Number].intValue))
-            }
+      // stable grouping: (content kind, spec id) — merging across specs
+      // would need partition-tuple re-derivation; across kinds is invalid
+      val groups = mans.zipWithIndex.groupBy { case (m, _) => (m.content, m.specId) }
+        .toSeq.sortBy(_._2.head._2)
+      groups.foreach { case ((content, specId), members0) =>
+        val members = members0.map(_._1)
+        // bin-pack in list order; a bin of ONE carries verbatim
+        val bins = Seq.newBuilder[Seq[Man]]
+        var bin = Seq.newBuilder[Man]; var n = 0; var binSize = 0
+        members.foreach { m =>
+          val live = liveOf(m).length
+          if (binSize > 0 && n + live > targetEntriesPerManifest) {
+            bins += bin.result(); bin = Seq.newBuilder[Man]; n = 0; binSize = 0
           }
-          val mp = new Path(root,
-            s"metadata/manifest-$snapshotId-m${java.util.UUID.randomUUID().toString.take(8)}.avro")
-          IcebergFormat.writeAvro(f, mp, IcebergFormat.EntrySchema, entries)
-          // merged field summary: element-wise contains_null OR,
-          // lower min / upper max by typed byte comparison; a member
-          // without bounds (null partition) contributes no bounds
-          val parts: AnyRef =
-            if (specId == 0) null
-            else {
-              val types = sumTypes.get
-              // None = the member carries NO field summary at all
-              // (spec-optional): its files could hold ANY value, so
-              // the merged field must emit NO bounds (and a
-              // conservative contains_null) or pruning would wrongly
-              // drop the merged manifest
-              val perMan: Seq[Option[Seq[(Boolean, Option[Array[Byte]], Option[Array[Byte]])]]] =
-                b.map { m =>
-                  Option(m.rec.getSchema.getField("partitions"))
-                    .flatMap(_ => Option(m.rec.get("partitions"))).map {
-                      _.asInstanceOf[java.util.List[_]].asScala.map { s0 =>
-                        val r = s0.asInstanceOf[GenericRecord]
-                        def byteOf(fd: String): Option[Array[Byte]] =
-                          Option(r.get(fd)).map { bb0 =>
-                            val bb = bb0.asInstanceOf[java.nio.ByteBuffer].duplicate()
-                            val out = new Array[Byte](bb.remaining()); bb.get(out); out
-                          }
-                        (Option(r.get("contains_null")).exists(_.asInstanceOf[Boolean]),
-                          byteOf("lower_bound"), byteOf("upper_bound"))
-                      }.toSeq
-                    }
-                }
-              val anyMissing = perMan.exists(_.isEmpty)
-              val arr = new org.apache.avro.generic.GenericData.Array[GenericRecord](
-                types.length, FS)
-              types.zipWithIndex.foreach { case (dt, i) =>
-                val col0 = perMan.flatten.map(s0 =>
-                  if (i < s0.length) s0(i) else (true, None, None))
-                val rec = new org.apache.avro.generic.GenericData.Record(FS.getElementType)
-                rec.put("contains_null", anyMissing || col0.exists(_._1))
-                // bounds are only SAFE when every member is covered:
-                // either it has both bounds, or it is a null-only
-                // summary (contains_null, no values to bound). A
-                // member with VALUES but no bounds (contains_null
-                // false, bounds absent — spec-legal) poisons the
-                // field: emit no bounds, the merged manifest stays
-                // unprunable rather than wrongly prunable.
-                val nullOnly = (t: (Boolean, Option[Array[Byte]], Option[Array[Byte]])) =>
-                  t._1 && t._2.isEmpty && t._3.isEmpty
-                val bounded = col0.filter(t => t._2.isDefined && t._3.isDefined)
-                val safe = !anyMissing &&
-                  col0.forall(t => nullOnly(t) || (t._2.isDefined && t._3.isDefined))
-                if (safe && bounded.nonEmpty) {
-                  rec.put("lower_bound", java.nio.ByteBuffer.wrap(
-                    bounded.map(_._2.get)
-                      .reduce((a, x) => if (cmpBound(dt, x, a) < 0) x else a)))
-                  rec.put("upper_bound", java.nio.ByteBuffer.wrap(
-                    bounded.map(_._3.get)
-                      .reduce((a, x) => if (cmpBound(dt, x, a) > 0) x else a)))
-                }
-                arr.add(rec)
+          bin += m; n += live; binSize += 1
+        }
+        if (binSize > 0) bins += bin.result()
+        // summary-merge types (None ⇒ partitioned group merges lose no
+        // skipping because we refuse to merge it at all)
+        val sumTypes: Option[Seq[DataType]] =
+          if (specId == 0) Some(Nil) else specResultTypes(m0, specId)
+        bins.result().foreach { b =>
+          if (b.lengthCompare(1) <= 0 || (specId != 0 && sumTypes.isEmpty)) {
+            b.foreach(m => outList += listed(m.rec, curId))
+          } else {
+            mergedAway += b.length - 1
+            val entries = b.flatMap { m =>
+              val manSeq = gLong(m.rec, "sequence_number", 0L)
+              val manSnap = gLong(m.rec, "added_snapshot_id", curId)
+              liveOf(m).map { e =>
+                val df = e.get("data_file").asInstanceOf[GenericRecord]
+                val off = Option(df.getSchema.getField("content_offset"))
+                  .flatMap(_ => Option(df.get("content_offset")))
+                  .map(_.asInstanceOf[Number].longValue)
+                val refFile = Option(df.getSchema.getField("referenced_data_file"))
+                  .flatMap(_ => Option(df.get("referenced_data_file"))).map(_.toString)
+                IcebergFormat.entry(
+                  gInt(df, "content", 0), gStr(df, "file_path"),
+                  gLong(df, "record_count", 0L), gLong(df, "file_size_in_bytes", 0L),
+                  gLong(e, "snapshot_id", manSnap),      // ORIGINAL snapshot
+                  gLong(e, "sequence_number", manSeq),    // ORIGINAL sequence
+                  equalityIds = Option(df.getSchema.getField("equality_ids"))
+                    .flatMap(_ => Option(df.get("equality_ids")))
+                    .map(_.asInstanceOf[java.util.List[_]].asScala
+                      .map(_.asInstanceOf[Number].intValue).toSeq).getOrElse(Nil),
+                  bounds = entryBounds(df),
+                  fileFormat = gStr(df, "file_format"),
+                  dvRef = off.map(o => (refFile.get, o,
+                    gLong(df, "content_size_in_bytes", 0L))),
+                  referencedDataFile = if (off.isEmpty) refFile else None,
+                  firstRowId = Option(df.getSchema.getField("first_row_id"))
+                    .flatMap(_ => Option(df.get("first_row_id")))
+                    .map(_.asInstanceOf[Number].longValue),
+                  status = 0,
+                  sortOrderId = Option(df.getSchema.getField("sort_order_id"))
+                    .flatMap(_ => Option(df.get("sort_order_id")))
+                    .map(_.asInstanceOf[Number].intValue))
               }
-              arr
             }
-          outList += ((mp.toString, f.getFileStatus(mp).getLen, content,
-            b.map(m => gLong(m.rec, "sequence_number", 0L)).max,
-            specId, snapshotId, parts))
+            val mp = writeManifest(at, f, root, s"manifest-$snapshotId-m", entries)
+            // merged field summary: element-wise contains_null OR,
+            // lower min / upper max by typed byte comparison; a member
+            // without bounds (null partition) contributes no bounds
+            val parts: AnyRef =
+              if (specId == 0) null
+              else {
+                val types = sumTypes.get
+                // None = the member carries NO field summary at all
+                // (spec-optional): its files could hold ANY value, so
+                // the merged field must emit NO bounds (and a
+                // conservative contains_null) or pruning would wrongly
+                // drop the merged manifest
+                val perMan: Seq[Option[Seq[(Boolean, Option[Array[Byte]], Option[Array[Byte]])]]] =
+                  b.map { m =>
+                    Option(m.rec.getSchema.getField("partitions"))
+                      .flatMap(_ => Option(m.rec.get("partitions"))).map {
+                        _.asInstanceOf[java.util.List[_]].asScala.map { s0 =>
+                          val r = s0.asInstanceOf[GenericRecord]
+                          def byteOf(fd: String): Option[Array[Byte]] =
+                            Option(r.get(fd)).map { bb0 =>
+                              val bb = bb0.asInstanceOf[java.nio.ByteBuffer].duplicate()
+                              val out = new Array[Byte](bb.remaining()); bb.get(out); out
+                            }
+                          (Option(r.get("contains_null")).exists(_.asInstanceOf[Boolean]),
+                            byteOf("lower_bound"), byteOf("upper_bound"))
+                        }.toSeq
+                      }
+                  }
+                val anyMissing = perMan.exists(_.isEmpty)
+                val arr = new org.apache.avro.generic.GenericData.Array[GenericRecord](
+                  types.length, FS)
+                types.zipWithIndex.foreach { case (dt, i) =>
+                  val col0 = perMan.flatten.map(s0 =>
+                    if (i < s0.length) s0(i) else (true, None, None))
+                  val rec = new org.apache.avro.generic.GenericData.Record(FS.getElementType)
+                  rec.put("contains_null", anyMissing || col0.exists(_._1))
+                  // bounds are only SAFE when every member is covered:
+                  // either it has both bounds, or it is a null-only
+                  // summary (contains_null, no values to bound). A
+                  // member with VALUES but no bounds (contains_null
+                  // false, bounds absent — spec-legal) poisons the
+                  // field: emit no bounds, the merged manifest stays
+                  // unprunable rather than wrongly prunable.
+                  val nullOnly = (t: (Boolean, Option[Array[Byte]], Option[Array[Byte]])) =>
+                    t._1 && t._2.isEmpty && t._3.isEmpty
+                  val bounded = col0.filter(t => t._2.isDefined && t._3.isDefined)
+                  val safe = !anyMissing &&
+                    col0.forall(t => nullOnly(t) || (t._2.isDefined && t._3.isDefined))
+                  if (safe && bounded.nonEmpty) {
+                    rec.put("lower_bound", java.nio.ByteBuffer.wrap(
+                      bounded.map(_._2.get)
+                        .reduce((a, x) => if (cmpBound(dt, x, a) < 0) x else a)))
+                    rec.put("upper_bound", java.nio.ByteBuffer.wrap(
+                      bounded.map(_._3.get)
+                        .reduce((a, x) => if (cmpBound(dt, x, a) > 0) x else a)))
+                  }
+                  arr.add(rec)
+                }
+                arr
+              }
+            outList += ((mp.toString, f.getFileStatus(mp).getLen, content,
+              b.map(m => gLong(m.rec, "sequence_number", 0L)).max,
+              specId, snapshotId, parts))
+          }
         }
       }
-    }
-    if (mergedAway == 0) return (curId, 0, listRecs.length)
-    val out = outList.result()
-    try {
-      onBeforeCommit()
-      val snap = commitMeta(spark, f, root, v0, StructType(Nil), snapshotId,
-        seqNo, Nil, replace = false, operation = Some("replace"),
-        priorOverride = Some(out))
-      (snap, mergedAway, out.length)
-    } catch {
-      case _: java.util.ConcurrentModificationException =>
-        out.filter(_._6 == snapshotId).foreach { case (p, _, _, _, _, _, _) =>
-          f.delete(new Path(p), false)
-        }
-        throw new IllegalStateException(
-          s"rewriteManifests on $dir raced a concurrent commit — its " +
-          "merged manifest set no longer reflects the head; re-run")
+      if (mergedAway == 0) (curId, 0, listRecs.length)
+      else {
+        val out = outList.result()
+        val snap = commitMeta(at, spark, f, root, v0, StructType(Nil), snapshotId,
+          seqNo, Nil, replace = false, operation = Some("replace"),
+          priorOverride = Some(out))
+        (snap, mergedAway, out.length)
+      }
     }
   }
 
@@ -2709,88 +2554,69 @@ object IcebergWrite {
 
     val snapshotId = freshSnapshotId(f, root, v0)
     val seqNo = m0.path("last-sequence-number").asLong(0L) + 1L
-    val entries = Seq.newBuilder[GenericRecord]
-    val newFiles = Seq.newBuilder[Path]
-    // ONE consolidated Puffin of every live DV blob, original ids kept
-    if (dvLive.nonEmpty) {
-      val blobs: Seq[(String, Array[Byte], Long)] = dvLive.map { e =>
-        val bytes = IcebergFormat.readPuffinDvBytes(conf,
-          new Path(resolveU(gStr(e.df, "file_path"))),
-          gLong(e.df, "content_offset", -1L),
-          gLong(e.df, "content_size_in_bytes", -1L))
-        (gStr(e.df, "referenced_data_file"), bytes,
-          gLong(e.df, "record_count", 0L))
+    commitOnce(f, dir, "rewritePositionDeletes") { at =>
+      val entries = Seq.newBuilder[GenericRecord]
+      // ONE consolidated Puffin of every live DV blob, original ids kept
+      if (dvLive.nonEmpty) {
+        val blobs: Seq[(String, Array[Byte], Long)] = dvLive.map { e =>
+          val bytes = IcebergFormat.readPuffinDvBytes(conf,
+            new Path(resolveU(gStr(e.df, "file_path"))),
+            gLong(e.df, "content_offset", -1L),
+            gLong(e.df, "content_size_in_bytes", -1L))
+          (gStr(e.df, "referenced_data_file"), bytes,
+            gLong(e.df, "record_count", 0L))
+        }
+        val puffinP = at.declare(new Path(root, s"data/dv-${java.util.UUID.randomUUID()}.puffin"))
+        val refs = IcebergFormat.writePuffinDvBlobs(f, puffinP, blobs)
+        val puffinLen = f.getFileStatus(puffinP).getLen
+        val byRef = dvLive.map(e => gStr(e.df, "referenced_data_file") -> e).toMap
+        refs.foreach { case (rf, off, size) =>
+          val e = byRef(rf)
+          entries += IcebergFormat.entry(1, puffinP.toString,
+            gLong(e.df, "record_count", 0L), puffinLen, e.snap, e.seq,
+            fileFormat = "PUFFIN", dvRef = Some((rf, off, size)), status = 0)
+        }
       }
-      val puffinP = new Path(root, s"data/dv-${java.util.UUID.randomUUID()}.puffin")
-      val refs = IcebergFormat.writePuffinDvBlobs(f, puffinP, blobs)
-      newFiles += puffinP
-      val puffinLen = f.getFileStatus(puffinP).getLen
-      val byRef = dvLive.map(e => gStr(e.df, "referenced_data_file") -> e).toMap
-      refs.foreach { case (rf, off, size) =>
-        val e = byRef(rf)
-        entries += IcebergFormat.entry(1, puffinP.toString,
-          gLong(e.df, "record_count", 0L), puffinLen, e.snap, e.seq,
-          fileFormat = "PUFFIN", dvRef = Some((rf, off, size)), status = 0)
+      // ONE consolidated position-delete parquet (max contributor's ids)
+      if (posFiles.nonEmpty) {
+        val rows = spark.read.parquet(posFiles: _*)
+          .select(
+            col("file_path").as("file_path", new MetadataBuilder()
+              .putLong("parquet.field.id", 2147483546L).build()),
+            col("pos").cast(LongType).as("pos", new MetadataBuilder()
+              .putLong("parquet.field.id", 2147483545L).build()))
+          .distinct()
+        spark.conf.set("spark.sql.parquet.fieldId.write.enabled", "true")
+        val dst = at.declare(dataFile(root, "delete-"))
+        val len = Staging.stageOne(rows, root, dst)
+        val n = FooterStats.read(spark.sparkContext.hadoopConfiguration, dst).records
+        val top = poss.maxBy(_.seq)
+        entries += IcebergFormat.entry(1, dst.toString, n, len, top.snap, top.seq, status = 0)
       }
-    }
-    // ONE consolidated position-delete parquet (max contributor's ids)
-    if (posFiles.nonEmpty) {
-      val rows = spark.read.parquet(posFiles: _*)
-        .select(
-          col("file_path").as("file_path", new MetadataBuilder()
-            .putLong("parquet.field.id", 2147483546L).build()),
-          col("pos").cast(LongType).as("pos", new MetadataBuilder()
-            .putLong("parquet.field.id", 2147483545L).build()))
-        .distinct()
-      spark.conf.set("spark.sql.parquet.fieldId.write.enabled", "true")
-      val dst = dataFile(root, "delete-")
-      val len = Staging.stageOne(rows, root, dst)
-      newFiles += dst
-      val n = FooterStats.read(spark.sparkContext.hadoopConfiguration, dst).records
-      val top = poss.maxBy(_.seq)
-      entries += IcebergFormat.entry(1, dst.toString, n, len, top.snap, top.seq, status = 0)
-    }
-    // equality deletes carry verbatim (their sequence SEMANTICS forbid
-    // merging — raising a seq would widen what they mask)
-    eqs.foreach { e =>
-      entries += IcebergFormat.entry(2, gStr(e.df, "file_path"),
-        gLong(e.df, "record_count", 0L), gLong(e.df, "file_size_in_bytes", 0L),
-        e.snap, e.seq,
-        equalityIds = Option(e.df.getSchema.getField("equality_ids"))
-          .flatMap(_ => Option(e.df.get("equality_ids")))
-          .map(_.asInstanceOf[java.util.List[_]].asScala
-            .map(_.asInstanceOf[Number].intValue).toSeq).getOrElse(Nil),
-        bounds = entryBounds(e.df), status = 0)
-    }
-    val mp = new Path(root,
-      s"metadata/delete-manifest-$snapshotId-${java.util.UUID.randomUUID().toString.take(8)}.avro")
-    IcebergFormat.writeAvro(f, mp, IcebergFormat.EntrySchema, entries.result())
-    val outList: Seq[(String, Long, Int, Long, Int, Long, AnyRef)] =
-      dataMans.map(r => (gStr(r, "manifest_path"),
-        gLong(r, "manifest_length", 0L), 0,
-        gLong(r, "sequence_number", 0L), gInt(r, "partition_spec_id", 0),
-        gLong(r, "added_snapshot_id", curId),
-        Option(r.getSchema.getField("partitions"))
-          .flatMap(_ => Option(r.get("partitions"))).orNull)) :+
-      ((mp.toString, f.getFileStatus(mp).getLen, 1,
-        delMans.map(r => gLong(r, "sequence_number", 0L)).max, 0,
-        snapshotId, null: AnyRef))
-    try {
-      onBeforeCommit()
-      val snap = commitMeta(spark, f, root, v0, StructType(Nil), snapshotId,
+      // equality deletes carry verbatim (their sequence SEMANTICS forbid
+      // merging — raising a seq would widen what they mask)
+      eqs.foreach { e =>
+        entries += IcebergFormat.entry(2, gStr(e.df, "file_path"),
+          gLong(e.df, "record_count", 0L), gLong(e.df, "file_size_in_bytes", 0L),
+          e.snap, e.seq,
+          equalityIds = Option(e.df.getSchema.getField("equality_ids"))
+            .flatMap(_ => Option(e.df.get("equality_ids")))
+            .map(_.asInstanceOf[java.util.List[_]].asScala
+              .map(_.asInstanceOf[Number].intValue).toSeq).getOrElse(Nil),
+          bounds = entryBounds(e.df), status = 0)
+      }
+      val mp = writeManifest(at, f, root, s"delete-manifest-$snapshotId-", entries.result())
+      val outList: Seq[Listed] = dataMans.map(listed(_, curId)) :+
+        ((mp.toString, f.getFileStatus(mp).getLen, 1,
+          delMans.map(r => gLong(r, "sequence_number", 0L)).max, 0,
+          snapshotId, null: AnyRef))
+      val snap = commitMeta(at, spark, f, root, v0, StructType(Nil), snapshotId,
         seqNo, Nil, replace = false, operation = Some("replace"),
         priorOverride = Some(outList),
         minFormatVersion = if (dvLive.nonEmpty) 3 else 0)
       val after = (if (dvLive.nonEmpty) 1 else 0) +
         (if (posFiles.nonEmpty) 1 else 0) + eqFiles.length
       (snap, before, after)
-    } catch {
-      case _: java.util.ConcurrentModificationException =>
-        f.delete(mp, false)
-        newFiles.result().foreach(p => f.delete(p, false))
-        throw new IllegalStateException(
-          s"rewritePositionDeletes on $dir raced a concurrent commit — " +
-          "its consolidated delete set no longer reflects the head; re-run")
     }
   }
 
@@ -2819,64 +2645,46 @@ object IcebergWrite {
       .find(_.path("snapshot-id").asLong(-2L) == curId)
     val snapshotId = freshSnapshotId(f, root, v0)
     val seqNo = m0.path("last-sequence-number").asLong(0L) + 1L
-    var rowIdW = 0L
-    val outList = Seq.newBuilder[(String, Long, Int, Long, Int, Long, AnyRef)]
-    snapNode.toSeq.flatMap(s0 => IcebergFormat.readAvro(conf,
-      new Path(resolveU(s0.path("manifest-list").asText)))).foreach { r =>
-      val content = gInt(r, "content", 0)
-      val parts: AnyRef = Option(r.getSchema.getField("partitions"))
-        .flatMap(_ => Option(r.get("partitions"))).orNull
-      if (content != 0)
-        outList += ((gStr(r, "manifest_path"),
-          gLong(r, "manifest_length", 0L), content,
-          gLong(r, "sequence_number", 0L), gInt(r, "partition_spec_id", 0),
-          gLong(r, "added_snapshot_id", curId), parts)) // deletes: verbatim
-      else {
-        val manSeq = gLong(r, "sequence_number", 0L)
-        val manSnap = gLong(r, "added_snapshot_id", curId)
-        val live = IcebergFormat.readAvro(conf,
-          new Path(resolveU(gStr(r, "manifest_path"))))
-          .filter(e => gInt(e, "status", 0) != 2)
-        // each entry carries through VERBATIM (a foreign writer's
-        // partition tuple / value counts / split offsets survive) —
-        // only status, the pinned originals, and first_row_id change
-        val outSchema =
-          if (live.isEmpty) IcebergFormat.EntrySchema
-          else IcebergFormat.lineageEntrySchema(live.head.getSchema)
-        val dfSchema = outSchema.getField("data_file").schema()
-        val entries = live.map { e =>
-          val df0 = e.get("data_file").asInstanceOf[GenericRecord]
-          val rows = gLong(df0, "record_count", 0L)
-          val fr = { val v = rowIdW; rowIdW += rows; v }
-          val ne = IcebergFormat.recordTo(outSchema, e)
-          ne.put("status", 0)
-          ne.put("snapshot_id", gLong(e, "snapshot_id", manSnap))    // ORIGINAL
-          ne.put("sequence_number", gLong(e, "sequence_number", manSeq))
-          val df = IcebergFormat.recordTo(dfSchema, df0)
-          df.put("first_row_id", fr)
-          ne.put("data_file", df)
-          ne
+    commitOnce(f, dir, "enableRowLineage") { at =>
+      var rowIdW = 0L
+      val outList = Seq.newBuilder[Listed]
+      snapNode.toSeq.flatMap(s0 => IcebergFormat.readAvro(conf,
+        new Path(resolveU(s0.path("manifest-list").asText)))).foreach { r =>
+        if (gInt(r, "content", 0) != 0) outList += listed(r, curId) // deletes: verbatim
+        else {
+          val manSeq = gLong(r, "sequence_number", 0L)
+          val manSnap = gLong(r, "added_snapshot_id", curId)
+          val live = IcebergFormat.readAvro(conf,
+            new Path(resolveU(gStr(r, "manifest_path"))))
+            .filter(e => gInt(e, "status", 0) != 2)
+          // each entry carries through VERBATIM (a foreign writer's
+          // partition tuple / value counts / split offsets survive) —
+          // only status, the pinned originals, and first_row_id change
+          val outSchema =
+            if (live.isEmpty) IcebergFormat.EntrySchema
+            else IcebergFormat.lineageEntrySchema(live.head.getSchema)
+          val dfSchema = outSchema.getField("data_file").schema()
+          val entries = live.map { e =>
+            val df0 = e.get("data_file").asInstanceOf[GenericRecord]
+            val rows = gLong(df0, "record_count", 0L)
+            val fr = { val v = rowIdW; rowIdW += rows; v }
+            val ne = IcebergFormat.recordTo(outSchema, e)
+            ne.put("status", 0)
+            ne.put("snapshot_id", gLong(e, "snapshot_id", manSnap))    // ORIGINAL
+            ne.put("sequence_number", gLong(e, "sequence_number", manSeq))
+            val df = IcebergFormat.recordTo(dfSchema, df0)
+            df.put("first_row_id", fr)
+            ne.put("data_file", df)
+            ne
+          }
+          val mp = writeManifest(at, f, root, s"manifest-$snapshotId-l", entries, outSchema)
+          outList += listed(r, curId).copy(
+            _1 = mp.toString, _2 = f.getFileStatus(mp).getLen, _6 = snapshotId)
         }
-        val mp = new Path(root,
-          s"metadata/manifest-$snapshotId-l${java.util.UUID.randomUUID().toString.take(8)}.avro")
-        IcebergFormat.writeAvro(f, mp, outSchema, entries)
-        outList += ((mp.toString, f.getFileStatus(mp).getLen, 0, manSeq,
-          gInt(r, "partition_spec_id", 0), snapshotId, parts))
       }
-    }
-    val out = outList.result()
-    try {
-      onBeforeCommit()
-      commitMeta(spark, f, root, v0, StructType(Nil), snapshotId, seqNo,
+      commitMeta(at, spark, f, root, v0, StructType(Nil), snapshotId, seqNo,
         Nil, replace = false, operation = Some("replace"),
-        priorOverride = Some(out), nextRowId = Some(rowIdW))
-    } catch {
-      case _: java.util.ConcurrentModificationException =>
-        out.filter(_._6 == snapshotId).foreach { case (p, _, _, _, _, _, _) =>
-          f.delete(new Path(p), false)
-        }
-        throw new IllegalStateException(
-          s"enableRowLineage on $dir raced a concurrent commit — re-run")
+        priorOverride = Some(outList.result()), nextRowId = Some(rowIdW))
     }
   }
 
@@ -2983,11 +2791,11 @@ object IcebergWrite {
       b.properties.toSeq.sortBy(_._1).foreach { case (k, v) => props.put(k, v) }
     }
     // a lost version race must not strand the just-written stats file:
-    // nothing references it yet, and the orphan sweep is age-guarded,
-    // so reclaim it HERE before surfacing the race
-    try commitMetadataOnly(f, root, v0, m0, n, "analyzeTable")
-    catch { case e: IllegalStateException =>
-      f.delete(statsP, false); throw e }
+    // nothing references it yet, and the orphan sweep is age-guarded
+    commitOnce(f, dir, "analyzeTable", staged = Seq(statsP)) { _ =>
+      onBeforeCommit()
+      commitMetadataOnly(f, root, v0, m0, n, "analyzeTable")
+    }
     // the replaced entry's file only reclaims AFTER its replacement
     // committed (a lost race leaves everything intact)
     stale.foreach(s0 => f.delete(
@@ -3151,9 +2959,10 @@ object IcebergWrite {
     e.put("snapshot-id", curId)
     e.put("statistics-path", statsP.toString)
     e.put("file-size-in-bytes", statsLen)
-    try commitMetadataOnly(f, root, v0, m0, n, "analyzePartitions")
-    catch { case e: IllegalStateException =>
-      f.delete(statsP, false); throw e }
+    commitOnce(f, dir, "analyzePartitions", staged = Seq(statsP)) { _ =>
+      onBeforeCommit()
+      commitMetadataOnly(f, root, v0, m0, n, "analyzePartitions")
+    }
     stale.foreach(s0 => f.delete(
       new Path(resolveU(s0.path("statistics-path").asText)), false))
     (curId, perTuple.length.toLong)
@@ -3541,11 +3350,7 @@ object IcebergWrite {
     f.mkdirs(new Path(root, "metadata")); f.mkdirs(new Path(root, "data"))
     // replayed batch: the ledger already covers this txn — nothing
     // staged, nothing written
-    txn.foreach { case (appId, tv) =>
-      if (committedTxn(spark, f, root, appId) >= tv)
-        return readMeta(f, root, currentVersion(f, root))
-          .map(_.path("current-snapshot-id").asLong(-1L)).getOrElse(-1L)
-    }
+    replayedTxn(spark, f, root, txn).foreach(return _)
     val v0 = currentVersion(f, root)
     val meta0 = readMeta(f, root, v0)
     // v3 write-default: a column the frame OMITS but the schema
@@ -3594,13 +3399,14 @@ object IcebergWrite {
     val dataFiles = dropEmpty(f, staged)(stats.get(_).fold(0L)(_._1))
 
     val sortFieldIds = sortBy.map { case (c, asc) => (idsByName(c), asc) }
-    var attempt = 0
-    var base = v0
-    while (true) {
-      val snapshotId = freshSnapshotId(f, root, base)
-      val baseMeta = readMeta(f, root, base)
-      val seqNo = baseMeta
-        .map(_.path("last-sequence-number").asLong(0L)).getOrElse(0L) + 1L
+    Commit.optimistic(f, if (replace) "overwrite" else "append", dir,
+      staged = dataFiles.map(_._1),
+      // a DUPLICATE same-batch writer may have won the race
+      replayed = replayedTxn(spark, f, root, txn),
+      conflict = _ => if (!replace) None else Some(new IllegalArgumentException(
+        s"overwrite of $dir lost the version race to a concurrent " +
+        "commit — replacing state that just changed is a conflict, not a rebase"))) { at =>
+      val Head(base, baseMeta, snapshotId, seqNo) = head(at, f, root, v0)
       val orderId: Option[Int] =
         if (sortFieldIds.isEmpty) None
         else Some(resolveSortOrderId(baseMeta, sortFieldIds))
@@ -3620,39 +3426,13 @@ object IcebergWrite {
         IcebergFormat.entry(0, p.toString, rows, size, snapshotId, seqNo,
           bounds = bounds, sortOrderId = orderId, firstRowId = fr)
       }
-      val manifestP = new Path(root,
-        s"metadata/manifest-$snapshotId-${java.util.UUID.randomUUID().toString.take(8)}.avro")
-      IcebergFormat.writeAvro(f, manifestP, IcebergFormat.EntrySchema, entries)
-      try {
-        onBeforeCommit()
-        return commitMeta(spark, f, root, base, df.schema, snapshotId, seqNo,
-          Seq(NewManifest(manifestP, partitioned = false, None,
-            entries = entries)), replace, txn,
-          sortReq = orderId.map(id => (id, sortFieldIds)),
-          nextRowId = lin0.map(_ => rowIdW))
-      }
-      catch {
-        case _: java.util.ConcurrentModificationException =>
-          f.delete(manifestP, false) // re-authored next attempt (new ids)
-          // a DUPLICATE same-batch writer may have won the race: if the
-          // ledger now covers this txn, drop our staged files and defer
-          txn.foreach { case (appId, tv) =>
-            if (committedTxn(spark, f, root, appId) >= tv) {
-              dataFiles.foreach { case (pp, _) => f.delete(pp, false) }
-              return readMeta(f, root, currentVersion(f, root))
-                .map(_.path("current-snapshot-id").asLong(-1L)).getOrElse(-1L)
-            }
-          }
-          require(!replace,
-            s"overwrite of $dir lost the version race to a concurrent " +
-            "commit — replacing state that just changed is a conflict, not a rebase")
-          attempt += 1
-          require(attempt < MaxCommitRetries,
-            s"append to $dir lost $MaxCommitRetries version races")
-          base = currentVersion(f, root)
-      }
+      val manifestP = writeManifest(at, f, root, s"manifest-$snapshotId-", entries)
+      commitMeta(at, spark, f, root, base, df.schema, snapshotId, seqNo,
+        Seq(NewManifest(manifestP, partitioned = false, None,
+          entries = entries)), replace, txn,
+        sortReq = orderId.map(id => (id, sortFieldIds)),
+        nextRowId = lin0.map(_ => rowIdW))
     }
-    -1L // unreachable
   }
 
   /** A snapshot id no prior snapshot used (random, positive — the spec
@@ -3666,16 +3446,16 @@ object IcebergWrite {
     id
   }
 
-  /** Author `v<base+1>.metadata.json` + the snapshot's manifest list and
-    * commit by put-if-absent rename; throws ConcurrentModificationException
-    * on a lost race. Prior manifests carry forward from the current
+  /** Author `v<base+1>.metadata.json` + the snapshot's manifest list
+    * (declared to `at`) and commit by put-if-absent rename; throws
+    * [[LostRace]] on a lost race. [[onBeforeCommit]] fires first. Prior manifests carry forward from the current
     * snapshot's manifest list on append; an overwrite starts from just
     * the new manifests (older files stay reachable through older
     * snapshots). The metadata JSON starts from a DEEP COPY of the
     * previous version — every field this commit doesn't change
     * (properties, refs, sort-orders, a foreign writer's extras)
     * carries forward verbatim. */
-  private def commitMeta(spark: SparkSession, f: FileSystem, root: Path,
+  private def commitMeta(at: Commit.Attempt, spark: SparkSession, f: FileSystem, root: Path,
                          base: Int, schema: StructType, snapshotId: Long,
                          seqNo: Long, newManifests: Seq[NewManifest],
                          replace: Boolean,
@@ -3687,8 +3467,7 @@ object IcebergWrite {
                          // addedBy, partitions-raw) instead of the
                          // head's list — it drops folded delete
                          // manifests and swaps rewritten ones
-                         priorOverride: Option[Seq[(String, Long, Int,
-                           Long, Int, Long, AnyRef)]] = None,
+                         priorOverride: Option[Seq[Listed]] = None,
                          // one-way format upgrade (v3 for deletion
                          // vectors) — never downgrades
                          minFormatVersion: Int = 0,
@@ -3702,6 +3481,7 @@ object IcebergWrite {
                          // implies format-version >= 3
                          nextRowId: Option[Long] = None): Long = {
     import scala.jdk.CollectionConverters._
+    onBeforeCommit()
     val prevMeta = readMeta(f, root, base)
     val MFS = IcebergFormat.ManifestFileSchema
 
@@ -3713,7 +3493,7 @@ object IcebergWrite {
     // (path, len, content, seq, specId, addedBy, partitions-raw) — the
     // raw field-summary object carries forward VERBATIM so a table's
     // manifest-level skipping survives later commits
-    val prior: Seq[(String, Long, Int, Long, Int, Long, AnyRef)] =
+    val prior: Seq[Listed] =
       if (priorOverride.isDefined) priorOverride.get
       else if (replace) Nil
       else prevMeta.toSeq.flatMap { m =>
@@ -3723,20 +3503,7 @@ object IcebergWrite {
           .flatMap { s0 =>
             IcebergFormat.readAvro(spark.sparkContext.hadoopConfiguration,
               new Path(new java.net.URI(s0.path("manifest-list").asText).getPath))
-              .map { r =>
-                (r.get("manifest_path").toString,
-                  r.get("manifest_length").asInstanceOf[Number].longValue,
-                  r.get("content").asInstanceOf[Number].intValue,
-                  Option(r.get("sequence_number"))
-                    .map(_.asInstanceOf[Number].longValue).getOrElse(0L),
-                  Option(r.getSchema.getField("partition_spec_id"))
-                    .flatMap(_ => Option(r.get("partition_spec_id")))
-                    .map(_.asInstanceOf[Number].intValue).getOrElse(0),
-                  Option(r.get("added_snapshot_id"))
-                    .map(_.asInstanceOf[Number].longValue).getOrElse(snapshotId),
-                  Option(r.getSchema.getField("partitions"))
-                    .flatMap(_ => Option(r.get("partitions"))).orNull)
-              }
+              .map(listed(_, snapshotId))
           }
       }
     // ---- metadata node: DEEP COPY of the previous version (every
@@ -3846,14 +3613,12 @@ object IcebergWrite {
       existing match {
         case Some(o) =>
           if (o.path("order-id").asInt(-1) != oid)
-            throw new java.util.ConcurrentModificationException(
-              s"sort order ids moved under $root — rebase")
+            throw new LostRace(s"sort order ids moved under $root — rebase")
         case None =>
           val mx = orders.elements().asScala
             .map(_.path("order-id").asInt(0)).maxOption.getOrElse(0)
           if (oid != mx + 1)
-            throw new java.util.ConcurrentModificationException(
-              s"sort order ids moved under $root — rebase")
+            throw new LostRace(s"sort order ids moved under $root — rebase")
           val o = orders.addObject(); o.put("order-id", oid)
           val fa = o.putArray("fields")
           fields.foreach { case (sid, asc) =>
@@ -3867,7 +3632,7 @@ object IcebergWrite {
     }
 
     val FS = MFS.getField("partitions").schema().getTypes.get(1)
-    val fresh: Seq[(String, Long, Int, Long, Int, Long, AnyRef)] =
+    val fresh: Seq[Listed] =
       newManifests.map { nm =>
         val parts: AnyRef = nm.summary.map { sums =>
           val arr = new org.apache.avro.generic.GenericData.Array[GenericRecord](
@@ -3900,9 +3665,7 @@ object IcebergWrite {
         if (parts != null) r.put("partitions", parts)
         r
       }
-    val listP = new Path(root,
-      s"metadata/snap-$snapshotId-${java.util.UUID.randomUUID().toString.take(8)}.avro")
-    IcebergFormat.writeAvro(f, listP, MFS, listRecords)
+    val listP = writeManifest(at, f, root, s"snap-$snapshotId-", listRecords, MFS)
 
     val parentId = prevMeta.map(headIdOf).filter(_ > 0)
     if (branchCtx.value.isEmpty) n.put("current-snapshot-id", snapshotId)
@@ -4099,11 +3862,7 @@ object IcebergWrite {
         new Path(root, s"metadata/v$base.metadata.json").toString)
     }
 
-    if (!publish(f, root, base, n)) {
-      f.delete(listP, false)
-      throw new java.util.ConcurrentModificationException(
-        s"version ${base + 1} of $root was committed concurrently")
-    }
+    publishOrLose(f, root, base, n)
     snapshotId
   }
 }

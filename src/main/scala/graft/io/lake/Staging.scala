@@ -11,8 +11,10 @@ import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
   * until a commit references it, unreferenced (and reclaimable) if the
   * commit never lands. A commit publishes its log or metadata file by
   * [[putIfAbsent]], so of two writers racing for one version exactly
-  * one wins. A write that dies between staging and the move leaves
-  * only its staging directory, which [[sweep]] reclaims. */
+  * one wins; the loser's next step (rebase, replay or refuse) is
+  * [[Commit.optimistic]]'s, the one retry loop of both formats. A
+  * write that dies between staging and the move leaves only its
+  * staging directory, which [[sweep]] reclaims. */
 object Staging {
 
   val Prefix = ".staging-"

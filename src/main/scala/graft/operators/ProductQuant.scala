@@ -374,30 +374,14 @@ object ProductQuant {
     try out.write(mapper.writerWithDefaultPrettyPrinter().writeValueAsBytes(node))
     finally out.close()
     // atomic pointer swap — the publish point
-    val tmp = new Path(root, "_CURRENT.tmp")
-    val po = fs.create(tmp, true)
-    try po.write(s"v$next".getBytes("UTF-8")) finally po.close()
-    val fc = org.apache.hadoop.fs.FileContext.getFileContext(
-      root.toUri, spark.sparkContext.hadoopConfiguration)
-    fc.rename(tmp, new Path(root, "_CURRENT"), org.apache.hadoop.fs.Options.Rename.OVERWRITE)
+    graft.io.lake.VersionedDir.swap(spark.sparkContext.hadoopConfiguration, dir, s"v$next")
     vdir.toString
   }
 
   /** The published index version, or None before the first save. */
-  def currentVersion(spark: org.apache.spark.sql.SparkSession, dir: String): Option[Int] = {
-    import org.apache.hadoop.fs.Path
-    val root = new Path(dir)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val p = new Path(root, "_CURRENT")
-    if (!fs.exists(p)) None
-    else {
-      val in = fs.open(p)
-      val v = try new String(
-          org.apache.commons.io.IOUtils.toByteArray(in), "UTF-8").trim
-        finally in.close()
-      Some(v.stripPrefix("v").toInt)
-    }
-  }
+  def currentVersion(spark: org.apache.spark.sql.SparkSession, dir: String): Option[Int] =
+    graft.io.lake.VersionedDir.current(spark.sparkContext.hadoopConfiguration, dir)
+      .map(d => new org.apache.hadoop.fs.Path(d).getName.stripPrefix("v").toInt)
 
   /** Load the published index — NO training anywhere on this path: meta
     * is one small JSON read, codes are the parquet serving set. */

@@ -1,12 +1,10 @@
 package graft.streaming
 
 import graft.io.{Readers, Writers}
+import graft.io.lake.VersionedDir
 import graft.ops.IncrementalAgg
-import org.apache.hadoop.fs.{FileContext, Options, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.streaming.StreamingQuery
-
-import java.nio.charset.StandardCharsets
 
 /** Streaming materialized-view maintenance: each micro-batch of raw rows
   * folds into a persisted per-key aggregate state via
@@ -37,22 +35,9 @@ import java.nio.charset.StandardCharsets
   */
 object AggStream {
 
-  private val Pointer = "_CURRENT"
-
   /** The committed state version dir, or None before the first commit. */
-  def currentStateDir(spark: SparkSession, statePath: String): Option[String] = {
-    val root = new Path(statePath)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val p = new Path(root, Pointer)
-    if (!fs.exists(p)) None
-    else {
-      val in = fs.open(p)
-      val v =
-        try new String(org.apache.commons.io.IOUtils.toByteArray(in), StandardCharsets.UTF_8).trim
-        finally in.close()
-      Some(new Path(root, v).toString)
-    }
-  }
+  def currentStateDir(spark: SparkSession, statePath: String): Option[String] =
+    VersionedDir.current(spark.sparkContext.hadoopConfiguration, statePath)
 
   /** Read the current committed state (pointer-resolved).
     *
@@ -90,35 +75,15 @@ object AggStream {
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch0: DataFrame, batchId: Long) =>
         val batch = BatchTuning.rightSize(batch0)
-        if (!batch.isEmpty) {
-          val root = new Path(statePath)
-          val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-          val cur = currentStateDir(spark, statePath)
-          val lastId = cur.map(d => new Path(d).getName.stripPrefix("v").toLong).getOrElse(-1L)
-          if (batchId > lastId) {
+        if (!batch.isEmpty)
+          VersionedDir.commit(spark.sparkContext.hadoopConfiguration, statePath,
+              batchId, retainVersions) { (cur, next) =>
             val merged = cur match {
               case Some(d) => IncrementalAgg.merge(Readers.parquet(spark, d), batch, keys, measures)
               case None    => IncrementalAgg.build(batch, keys, measures)
             }
-            val newDir = new Path(root, s"v$batchId")
-            Writers.parquet(merged, newDir.toString)
-            // atomic pointer swap — the commit point
-            val tmp = new Path(root, s"$Pointer.tmp")
-            val out = fs.create(tmp, true)
-            try out.write(s"v$batchId".getBytes(StandardCharsets.UTF_8))
-            finally out.close()
-            val fc = FileContext.getFileContext(root.toUri, spark.sparkContext.hadoopConfiguration)
-            fc.rename(tmp, new Path(root, Pointer), Options.Rename.OVERWRITE)
-            // GC: keep the newest `retainVersions` version dirs (committed
-            // one included); everything older goes
-            val versions = fs.listStatus(root)
-              .filter(st => st.isDirectory && st.getPath.getName.startsWith("v"))
-              .map(_.getPath)
-              .sortBy(p => -p.getName.stripPrefix("v").toLong)
-            versions.drop(math.max(retainVersions, 2))
-              .foreach(p => fs.delete(p, true))
+            Writers.parquet(merged, next)
           }
-        }
         postCommitHook(batchId)
         ()
       }

@@ -1,13 +1,11 @@
 package graft.streaming
 
 import graft.io.{Readers, Writers}
+import graft.io.lake.VersionedDir
 import graft.ops.Scd2
 import graft.pipeline.{Clock, SystemClock}
-import org.apache.hadoop.fs.{FileContext, Options, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.streaming.StreamingQuery
-
-import java.nio.charset.StandardCharsets
 
 /** Streaming SCD2 dimension maintenance: a stream of dimension updates is
   * merged into a persisted dim with the same hash-diff semantics as the
@@ -31,22 +29,9 @@ import java.nio.charset.StandardCharsets
   */
 object DimStream {
 
-  private val Pointer = "_CURRENT"
-
   /** The committed dim version dir, or None before the first commit. */
-  def currentDimDir(spark: SparkSession, dimPath: String): Option[String] = {
-    val root = new Path(dimPath)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val p = new Path(root, Pointer)
-    if (!fs.exists(p)) None
-    else {
-      val in = fs.open(p)
-      val v =
-        try new String(org.apache.commons.io.IOUtils.toByteArray(in), StandardCharsets.UTF_8).trim
-        finally in.close()
-      Some(new Path(root, v).toString)
-    }
-  }
+  def currentDimDir(spark: SparkSession, dimPath: String): Option[String] =
+    VersionedDir.current(spark.sparkContext.hadoopConfiguration, dimPath)
 
   /** Read the current committed dim (pointer-resolved). */
   def readDim(spark: SparkSession, dimPath: String): DataFrame =
@@ -75,36 +60,19 @@ object DimStream {
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch0: DataFrame, batchId: Long) =>
         val batch = BatchTuning.rightSize(batch0)
-        if (!batch.isEmpty) {
-          val root = new Path(dimPath)
-          val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-          val cur = currentDimDir(spark, dimPath)
-          val lastId = cur.map(d => new Path(d).getName.stripPrefix("v").toLong).getOrElse(-1L)
-          if (batchId > lastId) {
+        if (!batch.isEmpty)
+          VersionedDir.commit(spark.sparkContext.hadoopConfiguration, dimPath,
+              batchId, retainVersions) { (cur, next) =>
             val clock = clockForBatch(batchId)
             val deduped = batch.dropDuplicates(spec.keyCols)
             val existing = cur.map(d => Readers.parquet(spark, d))
             val merged =
               if (faithful) Scd2.faithful(deduped, existing, spec, clock)
               else Scd2.idiomatic(deduped, existing, spec, clock)
-            // new immutable version (overwrite: a crash-before-swap replay
-            // rewrites the same dir deterministically), then atomic swap
-            Writers.parquet(merged, new Path(root, s"v$batchId").toString)
-            val tmp = new Path(root, s"$Pointer.tmp")
-            val out = fs.create(tmp, true)
-            try out.write(s"v$batchId".getBytes(StandardCharsets.UTF_8))
-            finally out.close()
-            val fc = FileContext.getFileContext(root.toUri, spark.sparkContext.hadoopConfiguration)
-            fc.rename(tmp, new Path(root, Pointer), Options.Rename.OVERWRITE)
-            // GC: newest `retainVersions` version dirs survive
-            fs.listStatus(root)
-              .filter(st => st.isDirectory && st.getPath.getName.startsWith("v"))
-              .map(_.getPath)
-              .sortBy(p => -p.getName.stripPrefix("v").toLong)
-              .drop(math.max(retainVersions, 2))
-              .foreach(p => fs.delete(p, true))
+            // overwrite: a crash-before-swap replay rewrites the same dir
+            // deterministically
+            Writers.parquet(merged, next)
           }
-        }
         postCommitHook(batchId)
         () // foreachBatch wants a Unit-returning function
       }

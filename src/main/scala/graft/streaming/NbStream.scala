@@ -3,7 +3,8 @@ package graft.streaming
 import graft.io.Readers
 import graft.operators.LangModel
 import graft.operators.LangModel.NbLangModel
-import org.apache.hadoop.fs.{FileContext, Options, Path}
+import graft.io.lake.VersionedDir
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
@@ -35,8 +36,6 @@ import java.nio.charset.StandardCharsets
   * table any engine can read.
   */
 object NbStream {
-
-  private val Pointer = "_CURRENT"
 
   /** Persist a model as a version dir: `counts/` (gram, lang, cnt),
     * `labels/` (lang, docs), `_META` (n, hashBits). Totals and vocab
@@ -92,19 +91,8 @@ object NbStream {
   }
 
   /** The committed model version dir, or None before the first commit. */
-  def currentModelDir(spark: SparkSession, modelPath: String): Option[String] = {
-    val root = new Path(modelPath)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val p = new Path(root, Pointer)
-    if (!fs.exists(p)) None
-    else {
-      val in = fs.open(p)
-      val v =
-        try new String(org.apache.commons.io.IOUtils.toByteArray(in), StandardCharsets.UTF_8).trim
-        finally in.close()
-      Some(new Path(root, v).toString)
-    }
-  }
+  def currentModelDir(spark: SparkSession, modelPath: String): Option[String] =
+    VersionedDir.current(spark.sparkContext.hadoopConfiguration, modelPath)
 
   /** Read the current committed model (pointer-resolved). */
   def readCurrentModel(spark: SparkSession, modelPath: String): NbLangModel =
@@ -133,37 +121,20 @@ object NbStream {
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch0: DataFrame, batchId: Long) =>
         val batch = BatchTuning.rightSize(batch0)
-        if (!batch.isEmpty) {
-          val root = new Path(modelPath)
-          val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-          val cur = currentModelDir(spark, modelPath)
-          val lastId = cur.map(d => new Path(d).getName.stripPrefix("v").toLong).getOrElse(-1L)
-          if (batchId > lastId) {
+        if (!batch.isEmpty)
+          VersionedDir.commit(spark.sparkContext.hadoopConfiguration, modelPath,
+              batchId, retainVersions) { (cur, next) =>
             val partial = LangModel.train(batch, textCol, labelCol, n, hashBits = hashBits)
             val merged = cur match {
               case Some(d) => LangModel.merge(readModel(spark, d), partial)
               case None    => partial
             }
-            writeModel(spark, merged, new Path(root, s"v$batchId").toString)
+            writeModel(spark, merged, next)
             // crash-injection seam: a failure HERE leaves a complete or
             // partial v<batchId> dir with no pointer — the replay must
             // rewrite it (writeModel overwrites) and then swap
             preSwapHook(batchId)
-            // atomic pointer swap — the commit point
-            val tmp = new Path(root, s"$Pointer.tmp")
-            val out = fs.create(tmp, true)
-            try out.write(s"v$batchId".getBytes(StandardCharsets.UTF_8))
-            finally out.close()
-            val fc = FileContext.getFileContext(root.toUri, spark.sparkContext.hadoopConfiguration)
-            fc.rename(tmp, new Path(root, Pointer), Options.Rename.OVERWRITE)
-            val versions = fs.listStatus(root)
-              .filter(st => st.isDirectory && st.getPath.getName.startsWith("v"))
-              .map(_.getPath)
-              .sortBy(p => -p.getName.stripPrefix("v").toLong)
-            versions.drop(math.max(retainVersions, 2))
-              .foreach(p => fs.delete(p, true))
           }
-        }
         postCommitHook(batchId)
       }
       .start()

@@ -135,7 +135,7 @@ class DeltaInteropSpec extends AnyFunSuite {
           table(4).withColumn("id", col("id") + 500), dir, Seq("part"))
       }
     try {
-      val v = DeltaInterop.writeDeltaResilient(
+      val v = DeltaInterop.writeDelta(
         table(8).withColumn("id", col("id") + 100), dir, Seq("part"))
       assert(v == 2L, s"expected rebase onto the interloper's v1, got $v")
     } finally DeltaInterop.preCommitHook = () => ()

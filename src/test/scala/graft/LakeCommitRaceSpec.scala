@@ -65,7 +65,7 @@ class LakeCommitRaceSpec extends AnyFunSuite {
     val delta = Files.createTempDirectory("graft-delta-writer-race").toString
     DeltaInterop.writeDelta(rows(9, 9), delta, Nil) // v0
     val dv = race(4)(t => (0 until 2).map(k =>
-      DeltaInterop.writeDeltaResilient(rows(t, k), delta, Nil))).flatten
+      DeltaInterop.writeDelta(rows(t, k), delta, Nil))).flatten
     assert(dv.sorted == (1L to 8L), s"versions $dv")
     assert(DeltaInterop.readDelta(spark, delta).count() == 45)
     // each version added exactly one writer's five rows
@@ -92,7 +92,7 @@ class LakeCommitRaceSpec extends AnyFunSuite {
     DeltaInterop.writeDelta(rows(9, 9), dir, Nil)
     DeltaInterop.enableUniform(spark, dir)
     val dv = race(4)(t => (0 until 3).map(k =>
-      DeltaInterop.writeDeltaResilient(rows(t, k), dir, Nil))).flatten
+      DeltaInterop.writeDelta(rows(t, k), dir, Nil))).flatten
     assert(dv.distinct.size == 12, s"versions $dv")
     val delta = DeltaInterop.readDelta(spark, dir)
     assert(delta.count() == 65)
