@@ -28,8 +28,6 @@ object Commit {
     def this(msg: String) = this(msg, false)
   }
 
-  private def exhausted(msg: String): LostRace = new LostRace(msg, true)
-
   /** One attempt of an optimistic commit: `n` counts from 0. */
   final class Attempt private[lake] (val n: Int) {
     private val files = new java.util.concurrent.ConcurrentLinkedQueue[Path]
@@ -52,7 +50,7 @@ object Commit {
     *   4. otherwise the next attempt runs.
     * The first three also delete `staged`: data files written once
     * before the loop, which only a winning attempt would reference. */
-  def optimistic[A](f: FileSystem, what: String, table: Any,
+  def optimistic[A](f: FileSystem, what: String, table: String,
                     staged: => Seq[Path] = Nil,
                     replayed: => Option[A] = None,
                     conflict: LostRace => Option[Throwable] = (_: LostRace) => None)(
@@ -73,8 +71,8 @@ object Commit {
               conflict(lost).foreach { e => dropStaged(); throw e }
               if (n == MaxCommitRetries) {
                 dropStaged()
-                throw exhausted(s"$what on $table lost ${n + 1} version races " +
-                  s"to concurrent commits (retry limit $MaxCommitRetries)")
+                throw new LostRace(s"$what on $table lost ${n + 1} version races " +
+                  s"to concurrent commits (retry limit $MaxCommitRetries)", exhausted = true)
               }
               run(n + 1)
           }

@@ -24,11 +24,12 @@ class LakeCommitKernelSpec extends AnyFunSuite {
 
   test("Commit.optimistic: lost attempts drop their files; replay, conflict and the limit end the loop") {
     val dir = Files.createTempDirectory("graft-commit-kernel").toFile
+    val table = dir.toString
     val staged = touch(dir, "staged")
 
     // two losses, then a win: each lost attempt's declared file goes
     var n = 0
-    val won = Commit.optimistic(local, "append", dir, staged = Seq(staged)) { at =>
+    val won = Commit.optimistic(local, "append", table, staged = Seq(staged)) { at =>
       assert(at.n == n)
       val mine = at.declare(touch(dir, s"manifest-${at.n}"))
       n += 1
@@ -38,7 +39,7 @@ class LakeCommitKernelSpec extends AnyFunSuite {
     assert(dir.list().toSet == Set("staged", "manifest-2"))
 
     // a duplicate writer's result wins after a loss; the staged file drops
-    val replayed = Commit.optimistic(local, "append", dir, staged = Seq(staged),
+    val replayed = Commit.optimistic(local, "append", table, staged = Seq(staged),
       replayed = Some("theirs")) { at =>
       at.declare(touch(dir, "manifest-r"))
       throw new LostRace("lost")
@@ -49,7 +50,7 @@ class LakeCommitKernelSpec extends AnyFunSuite {
     // an operation that must not rebase refuses with its own error
     val staged2 = touch(dir, "staged2")
     val refused = intercept[IllegalArgumentException] {
-      Commit.optimistic(local, "overwrite", dir, staged = Seq(staged2),
+      Commit.optimistic(local, "overwrite", table, staged = Seq(staged2),
         conflict = _ => Some(new IllegalArgumentException("refused"))) { at =>
         at.declare(touch(dir, "manifest-c"))
         throw new LostRace("lost")
@@ -63,14 +64,14 @@ class LakeCommitKernelSpec extends AnyFunSuite {
     val staged3 = touch(dir, "staged3")
     var attempts = 0
     val e = intercept[LostRace] {
-      Commit.optimistic(local, "append", dir, staged = Seq(staged3)) { at =>
+      Commit.optimistic(local, "append", table, staged = Seq(staged3)) { at =>
         attempts += 1
         at.declare(touch(dir, s"manifest-x${at.n}"))
         throw new LostRace("lost")
       }
     }
     assert(attempts == 1 + Commit.MaxCommitRetries)
-    assert(e.getMessage.contains("append") && e.getMessage.contains(dir.toString) &&
+    assert(e.getMessage.contains("append") && e.getMessage.contains(table) &&
       e.getMessage.contains(s"retry limit ${Commit.MaxCommitRetries}"), e.getMessage)
     assert(dir.list().toSet == Set("manifest-2"))
 
@@ -78,14 +79,14 @@ class LakeCommitKernelSpec extends AnyFunSuite {
     // other error passes through without touching declared files
     var outer = 0
     intercept[LostRace] {
-      Commit.optimistic(local, "outer", dir) { _ =>
+      Commit.optimistic(local, "outer", table) { _ =>
         outer += 1
-        Commit.optimistic(local, "inner", dir)(_ => throw new LostRace("lost"))
+        Commit.optimistic(local, "inner", table)(_ => throw new LostRace("lost"))
       }
     }
     assert(outer == 1)
     intercept[java.io.IOException] {
-      Commit.optimistic(local, "append", dir) { at =>
+      Commit.optimistic(local, "append", table) { at =>
         at.declare(touch(dir, "manifest-io"))
         throw new java.io.IOException("disk")
       }
