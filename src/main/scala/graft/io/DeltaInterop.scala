@@ -38,8 +38,10 @@ import org.apache.spark.sql.types.{DataType, StructField, StructType}
   *     never a corrupt log. [[writeDelta]] and [[appendOnce]] run
   *     their commit through the one optimistic loop
   *     ([[graft.io.lake.Commit.optimistic]]): an append rebases onto
-  *     the new head, at most 1 + `Commit.MaxCommitRetries` attempts;
-  *     an overwrite fails fast. Every other operation commits once.
+  *     the new head, at most 1 + `Commit.MaxCommitRetries` attempts,
+  *     unless a commit since its staging changed the table's metaData
+  *     (then it refuses); an overwrite fails fast. Every other
+  *     operation commits once.
   *
   * Scale shape: the log is metadata-sized (actions, not rows); data
   * files are written once by the normal distributed write and MOVED
@@ -2101,34 +2103,42 @@ object DeltaInterop {
     * `checkpointInterval`-th commit also writes a checkpoint (0
     * disables — delta-spark's `checkpointInterval` table property).
     * Optimistic concurrency is Delta's transaction contract: an APPEND
-    * never logically conflicts with a concurrent commit (its staged
-    * files are fresh names, its adds remove nothing), so on a version
-    * collision it REBASES — re-read the head, re-validate the (possibly
-    * evolved) schema, re-commit the same staged files at the new
-    * version; the data is written once, only the log attempt repeats.
-    * An OVERWRITE's remove-set is invalidated by any concurrent commit,
-    * so it fails fast with the lost race (delta-spark's
-    * ProtocolChangedException/ConcurrentWriteException split, collapsed
-    * to the append case we actually run at scale). */
+    * never logically conflicts with a concurrent data commit (its
+    * staged files are fresh names, its adds remove nothing), so on a
+    * version collision it REBASES — re-read the head, re-validate the
+    * schema, re-commit the same staged files at the new version; the
+    * data is written once, only the log attempt repeats. Staging read
+    * the table's metaData (identity high-water marks, CHECK
+    * constraints, column mapping, UniForm field ids), so a winner that
+    * changed it, or created the table, refuses the append instead
+    * (delta-spark's MetadataChangedException): rebasing would commit
+    * identity values the winner already used or rows no constraint
+    * checked. An OVERWRITE's remove-set is invalidated by any
+    * concurrent commit, so it fails fast with the lost race. */
   def writeDelta(df: DataFrame, dir: String, partCols: Seq[String],
                  overwrite: Boolean, checkpointInterval: Int): Long =
     commitStaged(df, dir, partCols, overwrite, checkpointInterval, txn = None)
 
   /** Stage `df` once, then commit it through [[Commit.optimistic]]: a
-    * lost append rebases; a lost overwrite rethrows; with a `txn`, a
+    * lost append rebases unless the winner changed the metaData the
+    * staging read; a lost overwrite rethrows; with a `txn`, a
     * duplicate writer that committed the same batch first wins and our
     * staged files drop. */
   private def commitStaged(df: DataFrame, dir: String, partCols: Seq[String],
                            overwrite: Boolean, checkpointInterval: Int,
                            txn: Option[(String, Long)]): Long = {
     val spark = df.sparkSession
-    val adds = stageTableData(df, dir, partCols)
+    val (read, adds) = stageTableData(df, dir, partCols)
     Commit.optimistic(fs(spark, dir), if (overwrite) "overwrite" else "append", dir,
       staged = adds.map(a => new Path(dir, a.path)),
       replayed = txn.flatMap { case (appId, tv) => committedTxn(spark, dir, appId, tv) },
-      conflict = lost => if (overwrite) Some(lost) else None) { _ =>
+      conflict = lost =>
+        if (overwrite) Some(lost)
+        else Option.when(headMeta(spark, dir) != read)(new IllegalStateException(
+          s"append to $dir raced a concurrent Delta commit that changed the metaData " +
+          "it was staged against (schema, identity, constraints or properties) — re-run it"))) { _ =>
       attemptCommit(spark, dir, partCols, df.schema, adds, overwrite,
-        checkpointInterval, txn)
+        checkpointInterval, txn, read)
     }
   }
 
@@ -2277,20 +2287,22 @@ object DeltaInterop {
     * partitionValues keys — the layout [[readFilesMapped]] resolves).
     * Schema evolution on mapped tables is refused (new fields would
     * need fresh column ids; narrower scope, loudly). CHECK constraints
-    * are enforced here — every write path (plain, resilient, streaming
-    * appendOnce) stages through this choke point. */
+    * are enforced here — every write path ([[writeDelta]] and the
+    * streaming [[appendOnce]]) stages through this choke point.
+    * Returns the staged adds with the metaData they were staged
+    * against ([[metaOf]]; None = no table yet). */
   private def stageTableData(df0: DataFrame, dir: String,
-                             partCols: Seq[String]): Seq[AddFile] = {
+                             partCols: Seq[String]): (Option[Meta], Seq[AddFile]) = {
     val spark = df0.sparkSession
     val stOpt =
       if (latestVersion(spark, dir) >= 0) Some(state(spark, dir)) else None
     // IDENTITY values generate here — the staging choke point every
-    // append path (plain, resilient, streaming appendOnce) flows
-    // through; constraints then see the generated values too
+    // append path flows through; constraints then see the generated
+    // values too
     val df = stOpt.map(st0 =>
       withColumnDefaults(withIdentityValues(df0, st0), st0)).getOrElse(df0)
     stOpt.foreach(enforceConstraints(df, _))
-    stOpt.filter(columnMappingMode(_) != "none") match {
+    stOpt.map(metaOf) -> (stOpt.filter(columnMappingMode(_) != "none") match {
       case Some(st) =>
         val extra = df.schema.fieldNames.filterNot(st.schema.fieldNames.contains)
         require(extra.isEmpty,
@@ -2306,8 +2318,18 @@ object DeltaInterop {
         val stamped = stOpt.filter(_ => isUni)
           .map(IcebergUniform.stampFieldIds(df, _)).getOrElse(df)
         stageData(stamped, dir, partCols, materializePartitions = isUni)
-    }
+    })
   }
+
+  /** The parts of a table state a staged append depends on: its
+    * metaData action (schema with identity and column-mapping field
+    * metadata, partition columns, properties with the constraints)
+    * and its protocol. */
+  private type Meta = (StructType, Seq[String], Map[String, String], Protocol)
+  private def metaOf(st: DeltaState): Meta =
+    (st.schema, st.partitionColumns, st.configuration, st.protocol)
+  private def headMeta(spark: SparkSession, dir: String): Option[Meta] =
+    if (latestVersion(spark, dir) >= 0) Some(metaOf(state(spark, dir))) else None
 
   /** Stage CHANGE-DATA rows (table columns + `_change_type`) under
     * `_change_data/`, partitioned like the table — the protocol's CDC
@@ -2337,15 +2359,21 @@ object DeltaInterop {
 
   /** One optimistic commit attempt for already-staged files: read the
     * head, validate, commit at head+1. Throws [[Commit.LostRace]] if
-    * another writer won the version — the staged data files remain
-    * valid for a rebase. */
+    * another writer won the version, or if a commit since the staging
+    * changed the metaData `read` that the staged files were built
+    * against; the staged data files remain valid for a rebase only in
+    * the first case. */
   private def attemptCommit(spark: SparkSession, dir: String,
                             partCols: Seq[String], schema: StructType,
                             adds: Seq[AddFile], overwrite: Boolean,
                             checkpointInterval: Int,
-                            txn: Option[(String, Long)] = None): Long = {
+                            txn: Option[(String, Long)],
+                            read: Option[Meta]): Long = {
     val prev = latestVersion(spark, dir)
     val prevState = if (prev >= 0) Some(state(spark, dir)) else None
+    if (prevState.map(metaOf) != read)
+      throw new Commit.LostRace(s"concurrent Delta commit at v=$prev under $dir " +
+        "changed the metaData the staged files were built against")
     prevState.foreach { st =>
       requireWritable(st, dir)
       if (overwrite) requireRemovable(st, dir, "overwrite")

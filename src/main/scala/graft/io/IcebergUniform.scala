@@ -200,7 +200,7 @@ object IcebergUniform {
     addSnapshot(n.path("snapshots").asInstanceOf[ArrayNode], seqNo, list,
       n.path("current-schema-id").asInt(0), "append", deltaVersion)
     n.put("current-snapshot-id", snapshotId)
-    publish(f, root, base, n)
+    IcebergWrite.publishOrLose(f, root, base, n)
   }
 
   /** The current snapshot's manifest records, carried forward by an
@@ -243,12 +243,6 @@ object IcebergUniform {
     sum.put("operation", op)
     sum.put("delta-version", deltaVersion.toString)
   }
-
-  /** [[IcebergWrite.publish]] `n` as version base+1, or the kernel's
-    * lost-race signal. */
-  private def publish(f: FileSystem, root: Path, base: Int, n: JsonNode): Unit =
-    if (!IcebergWrite.publish(f, root, base, n))
-      throw new Commit.LostRace(s"UniForm metadata v${base + 1} of $root was published concurrently")
 
   /** ADOPT a FOREIGN UniForm mirror: a table whose Delta config
     * declares uniform but whose `metadata/` was authored by another
@@ -348,9 +342,8 @@ object IcebergUniform {
     val arr = M.createArrayNode()
     kept.foreach(arr.add)
     n.set[JsonNode]("snapshots", arr)
-    if (!IcebergWrite.publish(f, root, prevV, n))
-      throw new IllegalStateException(
-        s"expiring snapshots of $dir raced a concurrent commit — re-run")
+    IcebergWrite.commitOnce(f, dir, "expireSnapshots") { _ =>
+      IcebergWrite.publishOrLose(f, root, prevV, n) }
     var reclaimed = 0
     f.listStatus(metaDir).foreach { s0 =>
       val name = s0.getPath.getName
@@ -477,7 +470,7 @@ object IcebergUniform {
         prevMeta.foreach(m => if (m.hasNonNull("current-snapshot-id"))
           n.put("current-snapshot-id", m.path("current-snapshot-id").asLong))
     }
-    publish(f, root, prevV, n)
+    IcebergWrite.publishOrLose(f, root, prevV, n)
   }
 
   /** Iceberg schema JSON (no schema-id) for the table's current

@@ -31,9 +31,11 @@ import org.apache.spark.sql.types._
   * it writes so a loss deletes them, and at most
   * 1 + `Commit.MaxCommitRetries` attempts run. Appends and row-level
   * deltas REBASE (the staged data stays valid; manifests and the
-  * metadata JSON re-derive from the new head); `overwrite` and the
-  * maintenance operations refuse — replacing state someone else just
-  * changed is a genuine conflict, delta-spark's own choice.
+  * metadata JSON re-derive from the new head; a row-level delta
+  * commits only on the head whose live files it re-checked);
+  * `overwrite`, the maintenance operations, ref moves and snapshot
+  * expiry refuse through `commitOnce` — replacing state someone else
+  * just changed is a genuine conflict, delta-spark's own choice.
   *
   * Scope: v2 appends/overwrites of flat schemas, partitioned writes
   * (identity and hidden transforms — `year/month/day/hour`,
@@ -58,8 +60,9 @@ object IcebergWrite {
   private type ObjNode = com.fasterxml.jackson.databind.node.ObjectNode
 
   /** Test hook: runs between staging and each commit attempt's
-    * publish, letting a spec inject a deterministic version race.
-    * No-op in production. */
+    * publish (at the start of [[commitMeta]] and
+    * [[commitMetadataOnly]]), letting a spec inject a deterministic
+    * version race. No-op in production. */
   private[graft] var onBeforeCommit: () => Unit = () => ()
 
   /** Test hook: force the grouped-aggregation stats job even when the
@@ -482,15 +485,7 @@ object IcebergWrite {
         (lastId + 1 to newLastId).foreach(fid =>
           props.put(s"graft.field-added-seq.$fid", seqNow.toString))
       }
-      val prevUpdated = m.path("last-updated-ms").asLong(System.currentTimeMillis())
-      n.put("last-updated-ms", System.currentTimeMillis())
-      // metadata-log: record the version this evolution supersedes
-      val ml = n.withArray[com.fasterxml.jackson.databind.node.ArrayNode](
-        "metadata-log").addObject()
-      ml.put("timestamp-ms", prevUpdated)
-      ml.put("metadata-file",
-        new Path(root, s"metadata/v$base.metadata.json").toString)
-      publishOrLose(f, root, base, n)
+      commitMetadataOnly(f, root, base, m, n)
       (base + 1).toLong
     }
   }
@@ -501,8 +496,10 @@ object IcebergWrite {
   private final case class Head(version: Int, meta: Option[JsonNode],
                                 snapshotId: Long, seqNo: Long)
 
-  private def head(at: Commit.Attempt, f: FileSystem, root: Path, v0: Int): Head = {
-    val v = if (at.n == 0) v0 else currentVersion(f, root)
+  private def head(at: Commit.Attempt, f: FileSystem, root: Path, v0: Int): Head =
+    headAt(f, root, if (at.n == 0) v0 else currentVersion(f, root))
+
+  private def headAt(f: FileSystem, root: Path, v: Int): Head = {
     val m = readMeta(f, root, v)
     Head(v, m, freshSnapshotId(f, root, v),
       m.map(_.path("last-sequence-number").asLong(0L)).getOrElse(0L) + 1L)
@@ -713,9 +710,11 @@ object IcebergWrite {
         .collect().map(r => canonPath(r.getString(0))).toSet
     }
 
-    Commit.optimistic(f, "delete", dir, staged = delFiles.map(_._1),
-      conflict = _ => referencesGone(spark, dir, referenced, "delete")) { at =>
-      val Head(base, _, snapshotId, seqNo) = head(at, f, root, v0)
+    var checked = v0 // the head referencesGone validated: every attempt commits on it
+    Commit.optimistic(f, "delete", dir, staged = delFiles.map(_._1), conflict = _ => {
+      checked = currentVersion(f, root); referencesGone(spark, dir, checked, referenced, "delete")
+    }) { at =>
+      val Head(base, _, snapshotId, seqNo) = headAt(f, root, checked)
       val entries = delFiles.map { case (p, size) =>
         IcebergFormat.entry(1, p.toString,
           counts(canonPath(p.toString)), size, snapshotId, seqNo)
@@ -735,12 +734,16 @@ object IcebergWrite {
     * they reference is still live in the new head. A concurrent
     * overwrite or compaction that replaced one would leave the delta
     * masking nothing while reporting rows deleted (a silently lost
-    * delete): fail loudly instead, like overwrite does. */
-  private def referencesGone(spark: SparkSession, dir: String,
+    * delete): fail loudly instead, like overwrite does. The check
+    * reads head `version`, and the caller's next attempt commits on
+    * exactly that version: a commit landing after the check makes the
+    * attempt lose again and the check re-run, so no unchecked head is
+    * ever committed on. */
+  private def referencesGone(spark: SparkSession, dir: String, version: Int,
                              referenced: => Set[String],
                              what: String): Option[Throwable] = {
     val live = IcebergInterop.liveDataPaths(spark, dir,
-      readSnapAt(fs(spark, dir), new Path(dir))).toSet
+      readMeta(fs(spark, dir), new Path(dir), version).map(headIdOf)).toSet
     val gone = referenced.filterNot(live)
     gone.headOption.map { g =>
       new IllegalStateException(
@@ -1100,10 +1103,12 @@ object IcebergWrite {
          .collect().map(r => canonPath(r.getString(0))).toSet) ++
       dvPerFile.map(p => canonPath(p._1))
 
+    var checked = v0 // the head referencesGone validated: every attempt commits on it
     Commit.optimistic(f, what, dir, staged = (delFiles ++ appFiles).map(_._1),
-      replayed = replayedTxn(spark, f, root, txn).map((_, 0L, 0L)),
-      conflict = _ => referencesGone(spark, dir, referenced, what)) { at =>
-      val Head(base, baseMetaA, snapshotId, seqNo) = head(at, f, root, v0)
+      replayed = replayedTxn(spark, f, root, txn).map((_, 0L, 0L)), conflict = _ => {
+        checked = currentVersion(f, root); referencesGone(spark, dir, checked, referenced, what)
+      }) { at =>
+      val Head(base, baseMetaA, snapshotId, seqNo) = headAt(f, root, checked)
       // v3 ROW LINEAGE: appended postimage/insert files get fresh
       // first_row_id ranges (materialized _row_id values win at read;
       // null slots — a merge's inserted rows — derive fresh ids)
@@ -1188,9 +1193,11 @@ object IcebergWrite {
     if (perFile.isEmpty) return (currentSnap(), 0L)
     val conf = spark.sparkContext.hadoopConfiguration
     val referenced = perFile.map(p => canonPath(p._1)).toSet
-    Commit.optimistic(f, "DV delete", dir,
-      conflict = _ => referencesGone(spark, dir, referenced, "DV delete")) { at =>
-      val Head(base, _, snapshotId, seqNo) = head(at, f, root, v0)
+    var checked = v0 // the head referencesGone validated: every attempt commits on it
+    Commit.optimistic(f, "DV delete", dir, conflict = _ => {
+      checked = currentVersion(f, root); referencesGone(spark, dir, checked, referenced, "DV delete")
+    }) { at =>
+      val Head(base, _, snapshotId, seqNo) = headAt(f, root, checked)
       // the puffin (our positions ∪ the head's live DVs) rebuilds on
       // every attempt — the superset-replacement rule must hold against
       // whatever a concurrent writer just committed, and a stale
@@ -1448,7 +1455,7 @@ object IcebergWrite {
       "snapshot-log").addObject()
     sl.put("timestamp-ms", System.currentTimeMillis())
     sl.put("snapshot-id", target)
-    commitMetadataOnly(f, root, v0, m0, n, "fastForward")
+    commitOnce(f, dir, "fastForward") { _ => commitMetadataOnly(f, root, v0, m0, n) }
     target
   }
 
@@ -1723,7 +1730,7 @@ object IcebergWrite {
     require(m0.path("refs").has(name), s"no ref $name at $dir")
     val n = m0.deepCopy[JsonNode]().asInstanceOf[ObjNode]
     n.path("refs").asInstanceOf[ObjNode].remove(name)
-    commitMetadataOnly(f, root, v0, m0, n, s"DROP REF $name")
+    commitOnce(f, dir, s"DROP REF $name") { _ => commitMetadataOnly(f, root, v0, m0, n) }
   }
 
   private def setRef(spark: SparkSession, dir: String, name: String,
@@ -1753,15 +1760,17 @@ object IcebergWrite {
       minSnapshotsToKeep.foreach(r.put("min-snapshots-to-keep", _))
       maxSnapshotAgeMs.foreach(r.put("max-snapshot-age-ms", _))
     }
-    commitMetadataOnly(f, root, v0, m0, n, s"SET REF $name")
+    commitOnce(f, dir, s"SET REF $name") { _ => commitMetadataOnly(f, root, v0, m0, n) }
   }
 
-  /** A metadata-only version bump (refs, future table-property edits):
-    * last-updated-ms + metadata-log maintained, committed by the same
-    * put-if-absent rename every commit uses; a lost race refuses. */
+  /** A metadata-only version bump (refs, statistics, schema
+    * evolution, snapshot expiry): fires [[onBeforeCommit]], maintains
+    * last-updated-ms + metadata-log, and commits by the same
+    * put-if-absent rename every commit uses; a lost race is the
+    * kernel's [[LostRace]], refused by the caller's [[commitOnce]]. */
   private def commitMetadataOnly(f: FileSystem, root: Path, base: Int,
-                                 prev: JsonNode, n: ObjNode,
-                                 what: String): Unit = {
+                                 prev: JsonNode, n: ObjNode): Unit = {
+    onBeforeCommit()
     val nowMs = System.currentTimeMillis()
     val prevUpdated = prev.path("last-updated-ms").asLong(nowMs)
     n.put("last-updated-ms", nowMs)
@@ -1769,14 +1778,13 @@ object IcebergWrite {
       "metadata-log").addObject()
     ml.put("timestamp-ms", prevUpdated)
     ml.put("metadata-file", new Path(root, s"metadata/v$base.metadata.json").toString)
-    if (!publish(f, root, base, n))
-      throw new LostRace(s"$what on $root raced a concurrent commit — re-run")
+    publishOrLose(f, root, base, n)
   }
 
   /** [[Commit.optimistic]] for an operation that must not rebase: its
     * input was read from the head it replaces, so a lost version
     * refuses once the attempt's files (and `staged`) are deleted. */
-  private def commitOnce[A](f: FileSystem, dir: String, what: String,
+  private[io] def commitOnce[A](f: FileSystem, dir: String, what: String,
                             staged: => Seq[Path] = Nil)(attempt: Commit.Attempt => A): A =
     Commit.optimistic(f, what, dir, staged, conflict = _ => Some(new IllegalStateException(
       s"$what on $dir raced a concurrent commit — re-run against the new head")))(attempt)
@@ -1827,7 +1835,7 @@ object IcebergWrite {
   }
 
   /** [[publish]], or the kernel's lost-race signal. */
-  private def publishOrLose(f: FileSystem, root: Path, base: Int, n: JsonNode): Unit =
+  private[io] def publishOrLose(f: FileSystem, root: Path, base: Int, n: JsonNode): Unit =
     if (!publish(f, root, base, n))
       throw new LostRace(s"version ${base + 1} of $root was committed concurrently")
 
@@ -2793,8 +2801,7 @@ object IcebergWrite {
     // a lost version race must not strand the just-written stats file:
     // nothing references it yet, and the orphan sweep is age-guarded
     commitOnce(f, dir, "analyzeTable", staged = Seq(statsP)) { _ =>
-      onBeforeCommit()
-      commitMetadataOnly(f, root, v0, m0, n, "analyzeTable")
+      commitMetadataOnly(f, root, v0, m0, n)
     }
     // the replaced entry's file only reclaims AFTER its replacement
     // committed (a lost race leaves everything intact)
@@ -2960,8 +2967,7 @@ object IcebergWrite {
     e.put("statistics-path", statsP.toString)
     e.put("file-size-in-bytes", statsLen)
     commitOnce(f, dir, "analyzePartitions", staged = Seq(statsP)) { _ =>
-      onBeforeCommit()
-      commitMetadataOnly(f, root, v0, m0, n, "analyzePartitions")
+      commitMetadataOnly(f, root, v0, m0, n)
     }
     stale.foreach(s0 => f.delete(
       new Path(resolveU(s0.path("statistics-path").asText)), false))
@@ -3163,12 +3169,10 @@ object IcebergWrite {
         n.set[JsonNode](fieldName, stArr)
       }
     }
-    val prevUpdated = m0.path("last-updated-ms").asLong(now)
-    n.put("last-updated-ms", now)
     // metadata-log: entries pointing at the v<N metadata JSONs this
     // expiry deletes (everything below v0) would dangle for any
     // spec-conformant client walking the log — prune them with the
-    // files; the undo step (v0) keeps its entry below.
+    // files; the undo step (v0) keeps its entry (commitMetadataOnly).
     val mlKept = M.createArrayNode()
     m0.path("metadata-log").elements().asScala.filter { e =>
       val nm = new Path(e.path("metadata-file").asText("")).getName
@@ -3176,13 +3180,7 @@ object IcebergWrite {
         .forall(_.group(1).toLong >= v0)
     }.foreach(mlKept.add)
     n.set[JsonNode]("metadata-log", mlKept)
-    val ml = n.withArray[com.fasterxml.jackson.databind.node.ArrayNode](
-      "metadata-log").addObject()
-    ml.put("timestamp-ms", prevUpdated)
-    ml.put("metadata-file", new Path(root, s"metadata/v$v0.metadata.json").toString)
-    if (!publish(f, root, v0, n))
-      throw new IllegalStateException(
-        s"expireSnapshots on $dir raced a concurrent commit — re-run")
+    commitOnce(f, dir, "expireSnapshots") { _ => commitMetadataOnly(f, root, v0, m0, n) }
     droppedStats.result().foreach { p => if (f.delete(p, false)) reclaimed += 1 }
 
     // reachability walk: (manifest-list + manifest + data/puffin

@@ -131,4 +131,54 @@ class IcebergFailFastSpec extends AnyFunSuite {
     IcebergWrite.appendPartitioned(tagged(0, 30), dir, "score")
     raced(dir)(IcebergWrite.analyzePartitions(spark, dir))
   }
+
+  test("fastForward loses a version race: refuses, leaves nothing") {
+    val dir = table("ff")
+    IcebergWrite.append(tagged(0, 10), dir)
+    IcebergWrite.onBranch("audit")(IcebergWrite.append(tagged(10, 12), dir))
+    raced(dir)(IcebergWrite.fastForward(spark, dir, "audit"))
+  }
+
+  test("createTag and dropRef lose a version race: refuse, leave nothing") {
+    val dir = table("refs")
+    IcebergWrite.append(tagged(0, 10), dir)
+    raced(dir)(IcebergWrite.createTag(spark, dir, "t1"))
+    IcebergWrite.createTag(spark, dir, "t1")
+    raced(dir)(IcebergWrite.dropRef(spark, dir, "t1"))
+  }
+
+  test("expireSnapshots loses a version race: refuses, deletes nothing") {
+    val dir = table("expire")
+    IcebergWrite.append(tagged(0, 10), dir)
+    IcebergWrite.append(tagged(10, 20), dir)
+    val before = files(dir)
+    raced(dir)(IcebergWrite.expireSnapshots(spark, dir, retainMillis = 0L))
+    assert(before.subsetOf(files(dir)), "a lost expiry must reclaim nothing")
+  }
+
+  test("a row-level delete commits only on the head it validated after a lost race") {
+    val dir = table("recheck")
+    IcebergWrite.append(tagged(0, 40).coalesce(1), dir)
+    // the first attempt loses to an append (the referenced file stays
+    // live: the re-check passes); the second, committing on exactly
+    // that checked head, loses to a compaction that replaces the file
+    var calls = 0
+    lazy val hook: () => Unit = () => {
+      calls += 1
+      IcebergWrite.onBeforeCommit = () => ()
+      if (calls == 1) IcebergWrite.append(tagged(100, 110).coalesce(1), dir)
+      if (calls == 2) IcebergWrite.compact(spark, dir, smallFileBytes = Long.MaxValue)
+      IcebergWrite.onBeforeCommit = hook
+    }
+    IcebergWrite.onBeforeCommit = hook
+    val e = try intercept[IllegalStateException](
+        IcebergWrite.deleteWhere(spark, dir, col("id") < 10))
+      finally IcebergWrite.onBeforeCommit = () => ()
+    assert(e.getMessage.contains("replaced"), e.getMessage)
+    assert(calls == 2, s"$calls commit attempts")
+    assert(IcebergInterop.readIceberg(spark, dir).count() == 50, "no delete applied")
+    val left = files(dir).map(new File(_).getName).filter(_.startsWith("delete-"))
+    assert(left.isEmpty, s"the refused delete left ${left.toSeq.sorted.mkString(", ")}")
+    assert(IcebergWrite.deleteWhere(spark, dir, col("id") < 10)._2 == 10)
+  }
 }

@@ -7,6 +7,8 @@ import graft.io.{DeltaInterop, IcebergInterop, IcebergWrite}
 import graft.io.lake.Commit
 import graft.io.lake.Commit.LostRace
 import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.spark.sql.Row
+import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The one optimistic-commit loop ([[Commit.optimistic]]) on its own,
@@ -139,5 +141,106 @@ class LakeCommitKernelSpec extends AnyFunSuite {
       s"lost attempts left ${metaLeft.toSeq.sorted}")
     assert(new File(ice, "data").list().toSet == dataBefore)
     assert(IcebergInterop.readIceberg(spark, ice).count() == 5)
+  }
+
+  /** An empty Delta table whose `row_id` is GENERATED AS IDENTITY. */
+  private def identityTable(): String = {
+    val dir = Files.createTempDirectory("graft-delta-identity-race").toString
+    val id = new MetadataBuilder()
+      .putLong("delta.identity.start", 1L).putLong("delta.identity.step", 1L).build()
+    val schema = StructType(Seq(StructField("row_id", LongType, nullable = true, id),
+      StructField("k", LongType), StructField("tag", StringType)))
+    DeltaInterop.writeDelta(
+      spark.createDataFrame(java.util.Collections.emptyList[Row](), schema), dir, Nil)
+    dir
+  }
+
+  /** Parquet files under `dir` outside the log: what the table's adds
+    * must account for once every staged loser is gone. */
+  private def dataFiles(dir: String): Set[String] = {
+    val root = new File(dir)
+    def walk(d: File): Seq[File] = Option(d.listFiles()).toSeq.flatten.flatMap { x =>
+      if (x.isDirectory) { if (x.getName == "_delta_log") Nil else walk(x) }
+      else if (x.getName.endsWith(".parquet")) Seq(x) else Nil
+    }
+    walk(root).map(x => root.toPath.relativize(x.toPath).toString).toSet
+  }
+
+  test("a writeDelta append whose winner changed the metaData it was staged against refuses") {
+    import spark.implicits._
+    def batch(from: Long) = (from until from + 5).map(k => (k, s"r$k")).toDF("k", "tag")
+    /** Run `append` while `winner` commits first, once, from the hook. */
+    def racedBy[A](winner: => Unit)(append: => A): A = {
+      DeltaInterop.preCommitHook = () => {
+        DeltaInterop.preCommitHook = () => ()
+        winner
+      }
+      try append finally DeltaInterop.preCommitHook = () => ()
+    }
+
+    // identity: both batches generate from the same high-water mark, so
+    // rebasing the loser would commit the winner's values again
+    val dir = identityTable()
+    val e = intercept[IllegalStateException](racedBy(
+      DeltaInterop.writeDelta(batch(100), dir, Nil))(DeltaInterop.writeDelta(batch(0), dir, Nil)))
+    assert(!e.isInstanceOf[LostRace])
+    assert(e.getMessage.contains("concurrent Delta commit") && e.getMessage.contains("metaData"),
+      e.getMessage)
+    assert(DeltaInterop.readDelta(spark, dir).select("k").as[Long].collect().sorted
+      .sameElements(100L until 105L), "only the winner's rows")
+    assert(dataFiles(dir) == DeltaInterop.state(spark, dir).files.map(_.path).toSet,
+      "the refused append's staged files must be gone")
+    DeltaInterop.writeDelta(batch(0), dir, Nil) // re-run: staged against the new head
+    val ids = DeltaInterop.readDelta(spark, dir).select("row_id").as[Long].collect()
+    assert(ids.length == 10 && ids.distinct.length == 10, ids.sorted.mkString(","))
+
+    // a CHECK constraint added concurrently: the loser's rows were never
+    // checked against it, and the re-run is
+    val plain = Files.createTempDirectory("graft-delta-constraint-race").toString
+    DeltaInterop.writeDelta(batch(0), plain, Nil)
+    intercept[IllegalStateException](racedBy(
+      DeltaInterop.addConstraint(spark, plain, "k_small", "k < 50"))(
+      DeltaInterop.writeDelta(batch(100), plain, Nil)))
+    intercept[IllegalArgumentException](DeltaInterop.writeDelta(batch(100), plain, Nil))
+    assert(DeltaInterop.readDelta(spark, plain).count() == 5)
+
+    // a winner that left the metaData alone: the append rebases
+    val v = racedBy(DeltaInterop.writeDelta(batch(10), plain, Nil))(
+      DeltaInterop.writeDelta(batch(20), plain, Nil))
+    assert(v == DeltaInterop.latestVersion(spark, plain))
+    assert(DeltaInterop.readDelta(spark, plain).count() == 15)
+  }
+
+  test("racing writeDelta appends on an identity table end with distinct identity values") {
+    import spark.implicits._
+    val dir = identityTable()
+    val threads = 4
+    val barrier = new java.util.concurrent.CyclicBarrier(threads)
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(threads)
+    val refused = new java.util.concurrent.atomic.AtomicInteger
+    try {
+      val done = (0 until threads).map(t => pool.submit(() => {
+        barrier.await(60, java.util.concurrent.TimeUnit.SECONDS)
+        (0 until 2).foreach { b =>
+          val rows = (0 until 5).map(i => (t * 100L + b * 10 + i, s"w$t")).toDF("k", "tag")
+          // a loser whose staging went stale is refused: re-run it
+          def land(tries: Int): Unit =
+            try DeltaInterop.writeDelta(rows, dir, Nil)
+            catch {
+              case e: IllegalStateException
+                  if tries > 1 && e.getMessage.contains("metaData") =>
+                refused.incrementAndGet(); land(tries - 1)
+            }
+          land(30)
+        }
+        t
+      }))
+      done.foreach(_.get(300, java.util.concurrent.TimeUnit.SECONDS))
+    } finally pool.shutdownNow()
+    val all = DeltaInterop.readDelta(spark, dir).select("row_id", "k").as[(Long, Long)].collect()
+    assert(all.length == threads * 10, s"${all.length} rows")
+    assert(all.map(_._1).distinct.length == all.length,
+      s"duplicate identity values after $refused refusals")
+    assert(dataFiles(dir) == DeltaInterop.state(spark, dir).files.map(_.path).toSet)
   }
 }
