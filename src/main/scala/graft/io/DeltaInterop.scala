@@ -2120,8 +2120,8 @@ object DeltaInterop {
     commitStaged(df, dir, partCols, overwrite, checkpointInterval, txn = None)
 
   /** Stage `df` once, then commit it through [[Commit.optimistic]]: a
-    * lost append rebases unless the winner changed the metaData the
-    * staging read; a lost overwrite rethrows; with a `txn`, a
+    * lost append rebases unless a commit since the staging changed the
+    * metaData it read; a lost overwrite rethrows; with a `txn`, a
     * duplicate writer that committed the same batch first wins and our
     * staged files drop. */
   private def commitStaged(df: DataFrame, dir: String, partCols: Seq[String],
@@ -2372,7 +2372,7 @@ object DeltaInterop {
     val prev = latestVersion(spark, dir)
     val prevState = if (prev >= 0) Some(state(spark, dir)) else None
     if (prevState.map(metaOf) != read)
-      throw new Commit.LostRace(s"concurrent Delta commit at v=$prev under $dir " +
+      throw new Commit.LostRace(s"concurrent Delta commits up to v=$prev under $dir " +
         "changed the metaData the staged files were built against")
     prevState.foreach { st =>
       requireWritable(st, dir)
